@@ -1,16 +1,13 @@
-from .hashing import md5_int31, md5_int60, md5_int64_signed, minhash_exprs
+from .hashing import md5_int31, md5_int60
 from .text import hashtags, tokens, word_shingles
-from .vectors import cosine_sim, dot_product, l2_norm
+from .vectors import dot_product, l2_norm
 
 __all__ = [
     "md5_int31",
     "md5_int60",
-    "md5_int64_signed",
-    "minhash_exprs",
     "hashtags",
     "tokens",
     "word_shingles",
-    "cosine_sim",
     "dot_product",
     "l2_norm",
 ]

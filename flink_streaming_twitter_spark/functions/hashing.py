@@ -28,24 +28,6 @@ def md5_int60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def md5_int64_signed(col: Column) -> Column:
-    """First 16 hex digits of md5 as the signed int64 holding those 64
-    bits (two's complement; may be negative).
-
-    ``conv(...16 hex digits..., 16, 10)`` returns the UNSIGNED decimal
-    string (up to 2^64-1); casting that to long throws for values
-    >= 2^63 under Spark 4's default ANSI mode (~half of all md5
-    outputs). Assemble the value arithmetically instead: low 60 bits
-    plus the sign-adjusted top nibble scaled by 2^60 — every
-    intermediate stays inside int64 (the extreme is -8 * 2^60 =
-    -2^63, exactly the int64 minimum)."""
-    h = F.md5(col)
-    low60 = F.conv(F.substring(h, 2, 15), 16, 10).cast("long")
-    top4 = F.conv(F.substring(h, 1, 1), 16, 10).cast("long")
-    signed_top = F.when(top4 >= 8, top4 - F.lit(16)).otherwise(top4)
-    return signed_top * F.lit(1 << 60) + low60
-
-
 def md5_int31(col: Column) -> Column:
     """md5-derived integer in [0, 2^31): safe multiplicand for mod-p
     universal hashing without int64 overflow."""
@@ -61,15 +43,6 @@ def _perm_params(num_perm: int, seed: str = "flink-streaming-twitter") -> list[t
         b = int(hashlib.md5(f"{seed}-b-{i}".encode()).hexdigest()[:8], 16) % MERSENNE_31
         params.append((a or 1, b))
     return params
-
-
-def minhash_exprs(hash_col: str, num_perm: int) -> list[Column]:
-    """Column expressions h_i = (a_i * x + b_i) mod (2^31 - 1) for each
-    permutation, to be min()-aggregated per document."""
-    return [
-        ((F.lit(a) * F.col(hash_col) + F.lit(b)) % F.lit(MERSENNE_31)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(_perm_params(num_perm))
-    ]
 
 
 def minhash_set_exprs(set_col: str, num_perm: int) -> list[Column]:

@@ -83,11 +83,3 @@ def word_shingle_hashes(text: Column, k: int = 3, bits: int = 31) -> Column:
         raise ValueError(f"bits must be 31 or 60, got {bits}")
     hash_fn = md5_int31 if bits == 31 else md5_int60
     return F.transform(word_shingles(text, k), hash_fn)
-
-
-def stopword_count(token_array: Column) -> Column:
-    return F.size(F.filter(token_array, lambda t: t.isin(*STOPWORDS)))
-
-
-def distinct_token_count(token_array: Column) -> Column:
-    return F.size(F.array_distinct(token_array))

@@ -33,34 +33,3 @@ def l2_norm(a: Column) -> Column:
         F.aggregate(_as_double(a), F.lit(0.0), lambda acc, x: acc + x * x)
     )
 
-
-def cosine_sim(a: Column, b: Column) -> Column:
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def make_cosine_pandas_udf():
-    """Arrow-batched alternative to the HOF ``cosine_sim`` — the
-    documented fallback when per-row expression interpretation becomes the
-    bottleneck (HOF lambdas are NOT codegen'd; at thousands of dims the
-    numpy batch path wins despite the Python hop). Returns a pandas_udf
-    (array<float>, array<float>) -> double computing the same
-    double-precision cosine; tests assert equality with the HOF path to
-    6 decimals. Built lazily so importing this module never requires
-    pandas/pyarrow."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    def cosine_pd(a, b):
-        am = np.stack(a.to_numpy()).astype("float64")
-        bm = np.stack(b.to_numpy()).astype("float64")
-        dots = (am * bm).sum(axis=1)
-        norms = np.linalg.norm(am, axis=1) * np.linalg.norm(bm, axis=1)
-        return pd.Series(dots / norms)
-
-    # set hints as live objects: the module's `from __future__ import
-    # annotations` would stringify inline hints, which pandas_udf's
-    # signature inference cannot resolve
-    cosine_pd.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
-    return pandas_udf(cosine_pd, "double")

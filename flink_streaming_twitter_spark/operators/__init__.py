@@ -1,5 +1,4 @@
 from .windows import (
-    sampling_filter,
     sliding_window_counts,
     tumbling_counts,
     running_total,
@@ -7,7 +6,6 @@ from .windows import (
 from .topk import per_window_top1, top_k
 
 __all__ = [
-    "sampling_filter",
     "sliding_window_counts",
     "tumbling_counts",
     "running_total",

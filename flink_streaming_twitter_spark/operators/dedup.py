@@ -154,7 +154,7 @@ def one_row_per_key(df: DataFrame, key_col: str, content_col: str) -> DataFrame:
     ``spark.sql.join.preferSortMergeJoin=false`` is the deploy conf,
     session.py). The md5 is computed in two consumers of the exchange
     (the aggregate arm and the join arm) instead of once before a sort
-    — the round-15 A/B (tools/ab_one_row_per_key.py) measured the
+    — the round-15 A/B (tools/ab_one_row_per_key.py @ b13460d) measured the
     trade on every call-site shape before shipping.
 
     Callers pass TWO-column frames (key, content) — the tie-break is
@@ -408,17 +408,6 @@ def doc_shingle_sets(
     )
 
 
-def doc_shingles(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
-    """Distinct (doc_id, sh) pairs — the exploded inverted-index form of
-    doc_shingle_sets (31-bit md5-derived hashes; joins shuffle 8-byte ints,
-    never shingle strings)."""
-    return doc_shingle_sets(docs, id_col, text_col, k).select(
-        id_col, F.explode("shs").alias("sh")
-    )
-
-
 def minhash_signatures(sets: DataFrame, num_perm: int, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, mh0..mh{n-1}, mhs ARRAY) — one row per doc, computed
     ROW-WISE from the packed shingle set (`array_min(transform(shs, ...))`
@@ -508,8 +497,8 @@ def lsh_candidate_pairs(
     # ledger — and AQE re-plans each subtree independently, so without
     # the cache the banding explode executes up to four times per query
     # (both Generate nodes and both occupancy aggregates appear in
-    # plans/r14/dedup_lsh_exact_before.txt; interleaved A/B in
-    # tools/ab_lsh_banded.py). One (id, band, sig) row per (doc, band)
+    # plans/r14/dedup_lsh_exact_before.txt @ a8b586f; interleaved A/B in
+    # tools/ab_lsh_banded.py @ 6000c78). One (id, band, sig) row per (doc, band)
     # is a few dozen bytes × bands per doc — trivial next to the text.
     banded = banded_signatures(signatures, num_perm, bands, id_col).persist()
     capped = cap_bucket_size(banded, ["band", "sig"], max_bucket)
@@ -558,7 +547,7 @@ def minhash_lsh_dedup(
     # explode still ran the explode (and the aggregate's copy of it) per
     # consumer — see lsh_candidate_pairs, whose before-plan shows the
     # duplicated Generate/aggregate arms, and tools/ab_lsh_banded.py
-    # for the interleaved A/B. The banded rows carry the mhs array
+    # @ 6000c78 for the interleaved A/B. The banded rows carry the mhs array
     # (bands × ~100 B per doc) — still trivial next to the text.
     sigs = minhash_signatures(
         doc_shingle_sets(docs, k=shingle_k, shingle_mode=shingle_mode), num_perm
@@ -711,7 +700,7 @@ def ngram_jaccard_pairs(
     # floor (r14 measured it twice, ±); at ×10 docs the explode arm
     # dominates and the persist wins every interleaved pass —
     # min-over-4 75.2 → 32.4 s (−57%), worst pass −38%
-    # (tools/ab_ngram_ex_persist.py, fingerprint-identical outputs).
+    # (tools/ab_ngram_ex_persist.py @ f9699ec, fingerprint-identical outputs).
     # ~|shs| rows/doc of (long, int, long) — small next to the text.
     ex = sets.select("doc_id", "sz", F.explode("shs").alias("sh")).persist()
     dfreq = ex.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
@@ -728,8 +717,8 @@ def ngram_jaccard_pairs(
     # explode and the per-doc sort, the expensive part of PPJoin candidate
     # generation) executes twice per query (round 14: both Window nodes
     # and both dfreq aggregates appear in the before-plan,
-    # plans/r14/dedup_ngram_jaccard_before.txt; interleaved A/B in
-    # tools/ab_ngram_prefix.py). ~prefix_len rows/doc of (id, hash, sz) is
+    # plans/r14/dedup_ngram_jaccard_before.txt @ a8b586f; interleaved A/B in
+    # tools/ab_ngram_prefix.py @ 6000c78). ~prefix_len rows/doc of (id, hash, sz) is
     # far smaller than the text, so the cache footprint is trivial.
     prefix = (
         ex.join(dfreq, "sh")

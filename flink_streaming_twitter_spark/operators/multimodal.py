@@ -1,11 +1,11 @@
 """Multimodal column plumbing: image/audio/video as opaque BINARY columns
 with typed metadata.
 
-The decode/resize kernels are import-gated on PIL: where Pillow exists
-they decode real images (dimensions, frame count, 8-bin luminance
+The decode kernel is import-gated on PIL: where Pillow exists
+it decodes real images (dimensions, frame count, 8-bin luminance
 histogram feature); in this container (no PIL/cv2/torchaudio) — or for
 payloads PIL cannot parse, like the synthetic text-bytes test corpus —
-they fall back to a deterministic fake keyed off the payload bytes, so
+it falls back to a deterministic fake keyed off the payload bytes, so
 the driver's rows-only gate entry is stable in BOTH worlds. The
 Spark-side plumbing is identical either way and fully tested: schemas,
 Arrow batch shape, mapInPandas signature, partition sizing.
@@ -164,61 +164,6 @@ def decode_media(df: DataFrame, force_stub: bool = False) -> DataFrame:
             )
 
     return df.mapInPandas(decode_batches, schema=DECODED_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("thumb", T.BinaryType()),
-    ]
-)
-
-
-def _resize_payload(payload: bytes, target_w: int, target_h: int) -> bytes:
-    """Resize kernel: real PIL grayscale resize when the bytes decode,
-    else a deterministic target_w×target_h-byte 'thumbnail' sampled from
-    the payload — size contract identical on both paths."""
-    if _PIL_IMAGE is not None:
-        import io
-
-        try:
-            im = _PIL_IMAGE.open(io.BytesIO(payload))
-            return im.convert("L").resize((target_w, target_h)).tobytes()
-        except Exception:
-            pass  # not a PIL-decodable payload — deterministic fallback
-    if not payload:  # zero-length bytes would IndexError below
-        return bytes(target_w * target_h)
-    n = len(payload)
-    return bytes(payload[(i * n) // (target_w * target_h)] for i in range(target_w * target_h))
-
-
-def resize_media(df: DataFrame, target_w: int = 8, target_h: int = 8) -> DataFrame:
-    """mapInPandas resize pass: MEDIA_SCHEMA rows → fixed-size thumbnails
-    (media_id, width, height, thumb BINARY). Arrow-batched like
-    decode_media; at 100 TB the batch memory bound is
-    maxPartitionBytes + (rows_per_batch × target_w × target_h)."""
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "width": target_w,
-                    "height": target_h,
-                    # NULL payload → NULL thumb, same crash-safety
-                    # contract as decode_media
-                    "thumb": [
-                        _resize_payload(bytes(p), target_w, target_h)
-                        if p is not None
-                        else None
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return df.mapInPandas(resize_batches, schema=RESIZED_SCHEMA)
 
 
 def frame_sample(df: DataFrame, every_n: int = 4) -> DataFrame:

@@ -21,8 +21,7 @@ equi-join Catalyst can hash/sort-merge:
 Each (interval, probe) pair meets in exactly one bucket — the probe's —
 so the decomposition emits no duplicates and needs no distinct. The
 shuffle is on bucket id: time-uniform data spreads evenly, and a hot
-bucket (flash-crowd second) can reuse operators/skew.py salting since
-the join is now a plain equi-join.
+bucket (flash-crowd second) can be key-salted like any other equi-join.
 
 Bucket-id arithmetic notes (why `(unix_micros/W).cast("long")` is safe):
 the cast truncates rather than floors, but truncation is monotone, so

@@ -180,8 +180,7 @@ def cap_per_key_salted(
 
     The per-row salt is deterministic (``pmod(hash(salt_from), n_salts)``,
     default: all columns) so retries and speculative tasks agree —
-    never ``rand()``. Same discipline as operators/skew.py's
-    ``salted_join``.
+    never ``rand()``.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")

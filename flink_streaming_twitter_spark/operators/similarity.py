@@ -46,9 +46,10 @@ embedding-dedup modality.
 
 Norms-once-per-row discipline (every tier): the candidate re-rank
 computes ``dot/(q_norm*v_norm)`` from norms carried per ROW — never
-``cosine_sim`` per pair, which would re-traverse both arrays for every
-candidate. The carried form multiplies the identical doubles in the
-same order, so results are bit-identical.
+a per-pair ``dot_product(a, b) / (l2_norm(a) * l2_norm(b))``, which
+would re-traverse both arrays for every candidate. The carried form
+multiplies the identical doubles in the same order, so results are
+bit-identical.
 """
 
 from __future__ import annotations
@@ -102,7 +103,7 @@ def brute_force_topk(
         F.col(vec_col).alias("q_vec"),
         l2_norm(F.col(vec_col)).alias("q_norm"),
     ).filter(finite_or_null(F.col("q_norm")) > 0)
-    # norms once per row (not per pair) — identical doubles to cosine_sim
+    # norms once per row (not per pair) — identical doubles to the per-pair cosine
     c = (
         corpus.select(id_col, vec_col)
         .withColumn("v_norm", l2_norm(F.col(vec_col)))
@@ -187,7 +188,7 @@ def ivf_assign(
     Two assignment-cost disciplines:
     - each side's L2 norm is computed once per ROW, not once per pair —
       the pair loop evaluates only the dot product (same doubles, same
-      division as ``cosine_sim``, so results are bit-identical);
+      division as the per-pair cosine, so results are bit-identical);
     - the n_nearest=1 case (the whole corpus) is a map-side ``max_by``
       argmax — one combined row per vector crosses the shuffle, instead
       of sorting all n×ncells pair rows through a ranking window. The
@@ -287,9 +288,9 @@ def ivf_topk(
     )
     # norms once per ROW (same discipline as brute_force_topk): the
     # probed-cell re-rank otherwise recomputes BOTH norms per candidate
-    # pair inside cosine_sim — two extra array traversals per pair.
+    # pair — two extra array traversals per pair.
     # dot/(q_norm*v_norm) multiplies the identical doubles in the same
-    # order cosine_sim does, so results are bit-identical.
+    # order the per-pair cosine does, so results are bit-identical.
     sims = (
         assigned.withColumn("v_norm", l2_norm(F.col(vec_col)))
         .join(F.broadcast(probes.withColumn("q_norm", l2_norm(F.col("q_vec")))), "cent_id")
@@ -364,8 +365,8 @@ def lsh_topk(
 
     # norms once per ROW (the brute_force_topk discipline): the
     # unscorable filter needs the norm anyway, so carry it through the join
-    # and make the per-pair re-rank a single dot product — cosine_sim
-    # would re-traverse both arrays per candidate pair. Same doubles,
+    # and make the per-pair re-rank a single dot product — a per-pair
+    # cosine would re-traverse both arrays per candidate pair. Same doubles,
     # same division order, bit-identical results.
     bucketed = (
         corpus.select(

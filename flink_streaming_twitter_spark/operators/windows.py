@@ -10,11 +10,9 @@ Reference semantics being reproduced:
   struct column carries start/end natively.
 - W2 (Main.java:98): a *sampling* window — size 1 s, slide 5 s, i.e. the
   window covers only the first fifth of each slide period and rows in the
-  4 s gaps are dropped. Rather than relying on window() accepting
-  slide>size, we express the identical semantics as a modular-arithmetic
-  filter + tumbling bucket of the slide period: ts belongs to the sampling
-  window starting at w = slide*floor(ts/slide) iff (ts - w) < size. This
-  is a narrow (shuffle-free) filter — strictly cheaper at scale.
+  4 s gaps are dropped. It is applied to the stage-1 window ends as a
+  modular-arithmetic filter (``plans/reference_queries.qa_trending_two_stage``
+  in batch, ``StreamingPipelines.trending_two_stage_append`` streaming).
 - W4+T1+A5 (Main.java:148-157): global window + processing-time trigger +
   running sum. Batch twin: cumulative count over time buckets; streaming
   twin: ungrouped agg in update mode (streaming/runner.py).
@@ -67,21 +65,6 @@ def sliding_window_counts(
     )
     out_cols = _win_cols() + ([F.col(key_col)] if key_col else []) + [F.col("cnt")]
     return df.groupBy(*keys).agg(agg).select(*out_cols)
-
-
-def sampling_filter(df: DataFrame, ts_col: str, size_s: int, slide_s: int) -> DataFrame:
-    """W2 semantics (size < slide): keep rows whose event time falls in the
-    first ``size_s`` seconds of each ``slide_s``-second period, and stamp
-    the sampling-window start (``sample_w_start`` BIGINT epoch seconds).
-
-    Equivalent to Flink's timeWindowAll(Time.seconds(1)) sliding every 5 s
-    (Main.java:98) without materializing per-row window copies.
-    """
-    epoch = F.col(ts_col).cast("double")
-    w_start = (F.floor(epoch / slide_s) * slide_s).cast("long")
-    return df.withColumn("sample_w_start", w_start).filter(
-        epoch - F.col("sample_w_start") < F.lit(size_s)
-    )
 
 
 def tumbling_counts(df: DataFrame, ts_col: str, size: str) -> DataFrame:

@@ -365,7 +365,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The view lineage IS executed twice (the max arm and the output arm;
     AQE re-plans them independently so ReuseExchange never fires —
-    plans/r14/tpch_q15_top_supplier_before.txt shows both Exchange
+    plans/r14/tpch_q15_top_supplier_before.txt @ a8b586f shows both Exchange
     arms). Round 14 measured persisting it: 1.69 → 2.12 s min-over-4
     interleaved A/B at sf0.1 — SLOWER, because the duplicated arm is
     only a date-pruned scan + hash aggregate while the cache pays a
@@ -404,7 +404,7 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
     The li⋈broadcast(part) prefilter pass runs TWICE (avg arm + main
     arm). Round 15 MEASURED the persist-the-prefilter alternative the
     r14 checklist had only argued by analogy to q11/q15
-    (tools/ab_q17_persist.py, interleaved 6-pass A/B at sf0.1,
+    (tools/ab_q17_persist.py @ b13460d, interleaved 6-pass A/B at sf0.1,
     fingerprint-identical outputs): base min 1.246 s vs persisted
     1.271 s, medians 1.6 vs 1.8 — the duplicated arm (pruned scan +
     broadcast join) stays cheaper than the cache's materialization

@@ -19,7 +19,7 @@ tier re-runs the duplicate-key resolution + text load). The shipped
 plan keeps the family's per-tier lineage (each tier is the verbatim
 shipped operator — oracle-comparable by construction); the measured
 shared-lineage contrast for THIS entry lives in
-tools/ab_shared_lineage.py (variant C/D) and its verdict in SCALE.md.
+tools/ab_shared_lineage.py @ c770c40 (variant C/D) and its verdict in SCALE.md.
 
 Module placement: its own module, not plans/dedup.py, for the same
 rotation-blast-radius reason the multi-probe constant lives in

@@ -166,7 +166,7 @@ SELECT DISTINCT user_id, event_type FROM events
 
 # Append-mode emission envelope: a (sampling) window fires only once the
 # watermark passes its end; a bounded replay's final watermark is
-# max(event time observed, ms precision) − the WATERMARK_S delay, so the
+# max(event time seen, ms precision) − the WATERMARK_S delay, so the
 # oracle keeps exactly the windows the drained stream finalizes. The
 # delay is imported from the streaming runner so retuning it can never
 # drift the oracle (the same single-source rule params.py states).

@@ -196,7 +196,7 @@ def _drain_events_stream(
     partition per micro-batch, so a bounded replay pays fixed cost per
     partition — measured 2× wall on the sf0.1 drains going from 32
     partitions to 8, and a vanilla 200-partition session is worse. The
-    round-14 sweep (tools/stream_partition_sweep.py, query-only seconds,
+    round-14 sweep (tools/stream_partition_sweep.py @ a8b586f, query-only seconds,
     min-over-3 at sf0.1) moved the default 8 → 4: qb_counts 2.17→1.91,
     dedup_keys 1.62→1.46, interval_pairs 4.80→3.63, session_counts
     2.03→1.64 (2 partitions is within noise of 4 everywhere — the curve

@@ -93,7 +93,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The L2 norm rides along so the per-pair verify is a single dot
     # product (norms-once-per-row — operators/similarity.py module
     # docstring; dot/(x.norm*y.norm) multiplies the identical doubles in
-    # cosine_sim's order, bit-identical results).
+    # the per-pair cosine's order, bit-identical results).
     from ..functions.vectors import dot_product, l2_norm
 
     # Unscorable-vector contract (operators/similarity.py module

@@ -30,7 +30,7 @@ _DISC_SQL = (
 def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: correlated MIN subquery — for each qualifying part,
     the EUROPE supplier offering the minimum unit price. partsupp is
-    absent, so 'supply cost' is the minimum observed unit sale price
+    absent, so 'supply cost' is the minimum seen unit sale price
     (l_extendedprice/l_quantity) per (part, supplier) from lineitem; the
     decorrelation (per-part window min + equality filter, Catalyst's own
     rewrite of the correlated form) and the snowflake dimension arm are
@@ -212,7 +212,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vals IS executed twice (the global-total arm and the HAVING-
     # filtered output arm; AQE re-plans them independently so
     # ReuseExchange never fires — both Exchange arms in
-    # plans/r14/tpch_q11_important_stock_before.txt). Round 14 measured
+    # plans/r14/tpch_q11_important_stock_before.txt @ a8b586f). Round 14 measured
     # persisting it: 1.85 → 2.48 s min-over-4 interleaved A/B at sf0.1 —
     # SLOWER, same verdict as tpch_q15: the duplicated arm is a pruned
     # scan + broadcast semi-join + hash aggregate, cheaper than the

@@ -1,10 +1,8 @@
-from .files import load_table, load_tables, stream_from_directory
+from .files import load_table
 from .kafka import kafka_tweet_stream, parse_tweets
 
 __all__ = [
     "load_table",
-    "load_tables",
-    "stream_from_directory",
     "kafka_tweet_stream",
     "parse_tweets",
 ]

@@ -1,9 +1,9 @@
-"""Batch + streaming file sources.
+"""Batch file source.
 
 The driver harness and tests read the synthetic parquet tables
 (TESTDATA.md); streaming tests replay the same rows through a file-watched
-directory (FIXTURES.md §3) — the test stand-in for the reference's Kafka
-source (Main.java:57-61).
+directory with ``spark.readStream`` (FIXTURES.md §3) — the test stand-in
+for the reference's Kafka source (Main.java:57-61).
 """
 
 from __future__ import annotations
@@ -12,7 +12,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # event-time columns needing normalization to session-UTC TimestampType:
 # events.ts is parquet TIMESTAMP(NANOS) (surfaces as int64 nanos under
@@ -52,49 +51,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(col_name, F.col(col_name).cast("timestamp"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str]) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def load_file(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    schema: T.StructType | str | None = None,
-    **options: str,
-) -> DataFrame:
-    """Format-agnostic batch loader: parquet (self-describing), csv
-    (``header=true`` default; pass an explicit schema — runtime inference
-    costs an extra full scan and is nondeterministic on dirty data), or
-    json (JSON-Lines; same schema advice). All three arrive through the
-    same DataSource scan path, so filters/pruning behave identically —
-    but at 100 TB keep hot tables in parquet: csv/json scans can't push
-    predicates or prune columns."""
-    reader = spark.read.format(fmt)
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load(path)
-
-
-def stream_from_directory(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    fmt: str = "parquet",
-    max_files_per_trigger: int | None = 1,
-) -> DataFrame:
-    """File-source replay for stream==batch equivalence tests.
-
-    ``maxFilesPerTrigger`` throttles the replay so multiple micro-batches
-    actually occur (otherwise one batch swallows everything and the
-    streaming semantics go untested).
-    """
-    reader = spark.readStream.format(fmt).schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(path)

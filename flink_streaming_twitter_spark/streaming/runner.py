@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.topk import per_window_top1
 
 WATERMARK_S = 300
 WATERMARK = f"{WATERMARK_S} seconds"
@@ -188,21 +187,6 @@ class StreamingPipelines:
             )
         )
 
-    def trending_foreach_batch(
-        self,
-        collect: Callable[[DataFrame, int], None],
-        size: str = "30 seconds",
-        slide: str = "5 seconds",
-    ) -> Callable[[DataFrame, int], None]:
-        """Q-A/Q-B top-1: argmax over each micro-batch's changed windows
-        (the reference emits top-1 per trigger firing the same way)."""
-
-        def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-            top = per_window_top1(batch_df, ["w_start", "w_end"], self.key_col)
-            collect(top, batch_id)
-
-        return on_batch
-
     def running_total(self) -> DataFrame:
         """Q-C (W4+T1+A5): ungrouped streaming agg — Spark's native global
         window; update mode emits the new running total each trigger."""
@@ -282,34 +266,6 @@ class StreamingPipelines:
                 F.col(f"top.{self.key_col}").alias(f"top_{self.key_col}"),
                 F.col("top.cnt").alias("top_cnt"),
             )
-        )
-
-    def enriched_counts(
-        self, dim: DataFrame, on: str, dim_attr: str, size: str = "30 seconds"
-    ) -> DataFrame:
-        """Stream-static join + windowed aggregation: each micro-batch
-        joins the (re-read, so updatable) static dimension — Spark's
-        broadcast-dimension enrichment for streams; no state beyond the
-        window aggregate."""
-        return (
-            self.stream.join(F.broadcast(dim), on)
-            .groupBy(F.window(F.col(self.ts_col), size).alias("window"), F.col(dim_attr))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(
-                F.col("window.start").cast("long").alias("w_start"), F.col(dim_attr), "cnt"
-            )
-        )
-
-    def observed(self, df: DataFrame, name: str = "engine_metrics") -> DataFrame:
-        """Attach per-batch observed metrics (row count + min/max event
-        time) — the Structured Streaming analog of the reference job
-        measuring its own throughput (Q-D / TweetPerSecondCountFlink,
-        Main.java:159-175); read from query.lastProgress.observedMetrics."""
-        return df.observe(
-            name,
-            F.count(F.lit(1)).alias("rows"),
-            F.min(self.ts_col).alias("min_ts"),
-            F.max(self.ts_col).alias("max_ts"),
         )
 
     def session_counts(self, gap: str = "30 seconds", key_col: str | None = None) -> DataFrame:

@@ -17,10 +17,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from flink_streaming_twitter_spark.operators.topk import per_window_top1
-from flink_streaming_twitter_spark.operators.windows import (
-    sampling_filter,
-    sliding_window_counts,
-)
+from flink_streaming_twitter_spark.operators.windows import sliding_window_counts
 
 SETTINGS = dict(
     max_examples=8,
@@ -77,22 +74,6 @@ def test_per_window_top1_deterministic_argmax(spark, rows):
         best = max(((n, k) for (gg, k), n in counts.items() if gg == g))
         expected.add((g, best[1], best[0]))
     assert got == expected
-
-
-@given(rows=rows_strategy)
-@settings(**SETTINGS)
-def test_sampling_filter_is_modular_membership(spark, rows):
-    size_s, slide_s = 3, 10
-    df = spark.createDataFrame(
-        [(float(ts), k) for ts, k in rows], ["sec", "key"]
-    ).select(F.timestamp_seconds("sec").alias("ts"), "key")
-    got = [
-        (int(r.ts.timestamp()), r.sample_w_start)
-        for r in sampling_filter(df, "ts", size_s, slide_s).collect()
-    ]
-    for ts, w in got:
-        assert w == (ts // slide_s) * slide_s and ts - w < size_s
-    assert len(got) == sum(1 for ts, _k in rows if ts % slide_s < size_s)
 
 
 @given(

@@ -7,7 +7,6 @@ from flink_streaming_twitter_spark.operators.multimodal import (
     decode_media,
     frame_sample,
     payload_metadata,
-    resize_media,
 )
 from flink_streaming_twitter_spark.operators.similarity import (
     brute_force_topk,
@@ -127,29 +126,6 @@ def test_lsh_bucket_mates_include_identical_vector(spark):
     assert 4 not in ids  # opposite vector flips every hyperplane sign
 
 
-def test_pandas_udf_cosine_matches_hof_cosine(spark, sf_dir):
-    """The Arrow-batched numpy cosine and the Catalyst HOF cosine must
-    agree to the rounding digit on real embeddings."""
-    from pyspark.sql import functions as F
-
-    from flink_streaming_twitter_spark.functions.vectors import (
-        cosine_sim,
-        make_cosine_pandas_udf,
-    )
-    from flink_streaming_twitter_spark.sources.files import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(50)
-    a = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("eb"))
-    pairs = a.crossJoin(b).filter(F.col("ia") < F.col("ib"))
-    cos_pd = make_cosine_pandas_udf()
-    out = pairs.select(
-        F.round(cosine_sim(F.col("ea"), F.col("eb")), 6).alias("hof"),
-        F.round(cos_pd(F.col("ea"), F.col("eb")), 6).alias("arrow"),
-    ).collect()
-    assert out and all(r.hof == r.arrow for r in out)
-
-
 def test_lsh_multiprobe_expands_candidates_deterministically(spark):
     emb = _emb(spark)
     q = emb.filter("vec_id = 0")
@@ -211,24 +187,13 @@ def test_decode_media_stub_is_deterministic_arrow_batched(spark):
         assert 1 <= a.width <= 64 and 1 <= a.height <= 64
 
 
-def test_resize_media_produces_fixed_size_thumbnails(spark):
-    out1 = {r.media_id: r for r in resize_media(_media(spark), 8, 8).collect()}
-    out2 = {r.media_id: r for r in resize_media(_media(spark), 8, 8).collect()}
-    assert out1.keys() == {1, 2, 3, 4}
-    for mid in out1:
-        assert (out1[mid].width, out1[mid].height) == (8, 8)
-        assert len(out1[mid].thumb) == 64
-        assert out1[mid].thumb == out2[mid].thumb  # deterministic
-
-
-def test_null_and_empty_payloads_survive_decode_and_resize(spark):
+def test_null_and_empty_payloads_survive_decode_and_frame_sample(spark):
     """Failed media downloads arrive as NULL (or zero-length) payloads;
     one bytes(None) TypeError in a mapInPandas worker fails the WHOLE
-    decode job, so the kernels must degrade per-row instead. Contract:
-    NULL payload → row kept with NULL decode fields / NULL thumb
-    (quarantine downstream); empty payload → deterministic all-zero
-    thumb, stub decode as usual; frame_sample drops NULL-n_frames rows
-    via the NULL-propagating sequence."""
+    decode job, so the kernel must degrade per-row instead. Contract:
+    NULL payload → row kept with NULL decode fields (quarantine
+    downstream); empty payload → stub decode as usual; frame_sample
+    drops NULL-n_frames rows via the NULL-propagating sequence."""
     rows = [
         (1, b"\xff\xd8\xff\xe0" + b"x" * 20, "image/jpeg"),
         (2, None, "image/png"),
@@ -241,11 +206,6 @@ def test_null_and_empty_payloads_survive_decode_and_resize(spark):
     assert dec[2].width is None and dec[2].feature is None and dec[2].byte_len is None
     assert dec[1].byte_len == 24 and len(dec[1].feature) == 8
     assert dec[3].byte_len == 0 and dec[3].n_frames == 1
-
-    thumbs = {r.media_id: r.thumb for r in resize_media(media, 8, 8).collect()}
-    assert thumbs[2] is None
-    assert thumbs[3] == bytes(64)  # empty payload → all-zero thumb
-    assert len(thumbs[1]) == 64
 
     sampled = {r.media_id for r in frame_sample(decode_media(media), every_n=4).collect()}
     assert sampled == {1, 3}  # the NULL-decode row has no frames to sample

@@ -1,48 +1,12 @@
-"""salted_join must be result-identical to the plain join while spreading
-each key over n_salts sub-partitions."""
+"""AQE's runtime skew-join split, the engine's first-line skew defense."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from flink_streaming_twitter_spark.operators.skew import salted_join
-
-
-def test_salted_join_matches_plain_join(spark):
-    # skewed big side: 900 of 1000 rows share key 1
-    big = spark.range(1000).select(
-        F.when(F.col("id") < 900, 1).otherwise(F.col("id")).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    small = spark.createDataFrame(
-        [(1, "hot"), (950, "cold"), (999, "cold2")], ["k", "label"]
-    )
-    plain = {(r.k, r.payload, r.label) for r in big.join(small, "k").collect()}
-    salted = {
-        (r.k, r.payload, r.label)
-        for r in salted_join(big, small, "k", n_salts=8).collect()
-    }
-    assert salted == plain and len(plain) == 902
-
-
-def test_salted_join_spreads_hot_key(spark):
-    big = spark.range(1000).select(F.lit(1).alias("k"), F.col("id").alias("payload"))
-    small = spark.createDataFrame([(1, "x")], ["k", "label"])
-    joined = salted_join(big, small, "k", n_salts=8)
-    # the deterministic salt must actually take several distinct values
-    n_salts_used = (
-        big.withColumn("_salt", F.pmod(F.hash(*[F.col(c) for c in big.columns]), F.lit(8)))
-        .select("_salt")
-        .distinct()
-        .count()
-    )
-    assert n_salts_used == 8
-    assert joined.count() == 1000
-
 
 def test_aqe_skew_join_splits_hot_partition_at_runtime(spark):
-    """AQE's skew-join split is the engine's FIRST-line skew defense
-    (operators/skew.py docstring; salting is the fallback) — but it was
+    """AQE's skew-join split is the engine's first-line skew defense — but it was
     configured and argued, never runtime-verified. Pin it: a sort-merge
     join whose left side is 90% one key must come out of adaptive
     execution with the join marked ``skew=true`` (the hot partition was

@@ -289,50 +289,6 @@ def test_stream_session_merges_across_micro_batches(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_stateful_sessionize_emits_closed_and_timed_out_sessions(spark):
-    import shutil
-    import tempfile
-
-    from flink_streaming_twitter_spark.streaming.stateful import stateful_sessionize
-
-    d = tempfile.mkdtemp(prefix="statereplay_")
-    try:
-        user_schema = T.StructType(
-            [T.StructField("ts", T.TimestampType()), T.StructField("user_id", T.StringType())]
-        )
-        # user a: two sessions (gap 3 s splits at +10); user z's late event
-        # drives the watermark far past a's sessions so timeouts fire
-        f1 = [(BASE + dt.timedelta(seconds=s), "a") for s in (0, 1, 2, 10, 11)]
-        f2 = [(BASE + dt.timedelta(seconds=1000), "z")]
-        spark.createDataFrame(f1, user_schema).coalesce(1).write.mode("overwrite").parquet(d)
-        spark.createDataFrame(f2, user_schema).coalesce(1).write.mode("append").parquet(d)
-
-        stream = (
-            spark.readStream.schema(user_schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(d)
-            .withWatermark("ts", "1 second")
-        )
-        q = start_query(
-            stateful_sessionize(stream, "ts", "user_id", gap_seconds=3),
-            name="ss_stream",
-            output_mode="append",
-            available_now=True,
-        )
-        q.awaitTermination(120)
-        base_epoch = int(BASE.replace(tzinfo=dt.timezone.utc).timestamp())
-        got = {
-            (r.user_id, r.session_start - base_epoch, r.session_last - base_epoch, r.n_events)
-            for r in spark.sql("SELECT * FROM ss_stream").collect()
-        }
-        # both of a's sessions must have emitted: the first closed by the
-        # in-stream gap, the second by event-time timeout
-        assert ("a", 0, 2, 3) in got
-        assert ("a", 10, 11, 2) in got
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
 def test_stream_interval_join_equals_batch(spark):
     """Watermarked stream-stream interval join (view→click within 5 s per
     user) must converge to the batch interval join once drained."""
@@ -403,48 +359,6 @@ def test_stream_interval_join_equals_batch(spark):
         assert got == expected
     finally:
         shutil.rmtree(d, ignore_errors=True)
-
-
-def test_stream_static_join_enrichment_equals_batch(spark, replay_dir):
-    dim = spark.createDataFrame(
-        [("a", "alpha_team"), ("b", "beta_team")], ["event_type", "team"]
-    )
-    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(replay_dir)
-    pipe = StreamingPipelines(stream, "ts", "event_type")
-    q = start_query(
-        pipe.enriched_counts(dim, "event_type", "team", "10 seconds"),
-        name="enrich_stream",
-        output_mode="complete",
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.w_start, r.team): r.cnt for r in spark.sql("SELECT * FROM enrich_stream").collect()
-    }
-    batch_pipe = StreamingPipelines(
-        spark.read.schema(SCHEMA).parquet(replay_dir), "ts", "event_type"
-    )
-    expected = {
-        (r.w_start, r.team): r.cnt
-        for r in batch_pipe.enriched_counts(dim, "event_type", "team", "10 seconds").collect()
-    }
-    assert got == expected and len(got) > 0
-
-
-def test_observed_metrics_report_batch_row_counts(spark, replay_dir):
-    stream = spark.readStream.schema(SCHEMA).parquet(replay_dir)  # one batch: all files
-    pipe = StreamingPipelines(stream, "ts", "event_type")
-    q = start_query(
-        pipe.observed(pipe.stream.select("ts", "event_type")),
-        name="obs_stream",
-        output_mode="append",
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    progresses = [p for p in q.recentProgress if p["observedMetrics"].get("engine_metrics")]
-    assert progresses, "no observed metrics reported"
-    total_rows = sum(p["observedMetrics"]["engine_metrics"]["rows"] for p in progresses)
-    assert total_rows == 7  # every replayed row was observed
 
 
 def test_streaming_file_sink_is_exactly_once(spark, replay_dir):
@@ -616,84 +530,6 @@ def test_influx_timestamp_conversion_is_exact_at_microsecond_resolution():
     # the test only means something while the naive conversion is
     # actually lossy on these inputs
     assert float_wrong >= 3
-
-
-def test_transform_with_state_dedup_keep_first(spark):
-    """State-API-v2 keep-first dedup: one output row per key across
-    micro-batches; within-batch dup count reported; second sighting of a
-    key in a later batch emits nothing."""
-    # transformWithState's Python runner speaks protobuf to the JVM; the
-    # package isn't installed in this container (and installs are
-    # disallowed), so this path can only run where protobuf exists
-    pytest.importorskip("google.protobuf")
-    from flink_streaming_twitter_spark.streaming.stateful import (
-        streaming_dedup_keep_first,
-    )
-
-    d = tempfile.mkdtemp(prefix="twsdedup_")
-    schema = T.StructType(
-        [T.StructField("ts", T.TimestampType()), T.StructField("k", T.StringType())]
-    )
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    try:
-        f1 = [(BASE + dt.timedelta(seconds=s), k) for s, k in [(1, "a"), (0, "a"), (5, "b")]]
-        f2 = [(BASE + dt.timedelta(seconds=s), k) for s, k in [(100, "a"), (7, "c")]]
-        spark.createDataFrame(f1, schema).coalesce(1).write.mode("overwrite").parquet(d)
-        spark.createDataFrame(f2, schema).coalesce(1).write.mode("append").parquet(d)
-
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        stream = (
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-        )
-        q = start_query(
-            streaming_dedup_keep_first(stream, "k", "ts"),
-            name="tws_dedup",
-            output_mode="append",
-            available_now=True,
-        )
-        q.awaitTermination(120)
-        base_epoch = int(BASE.replace(tzinfo=dt.timezone.utc).timestamp())
-        got = {
-            (r.dedup_key, r.first_ts - base_epoch, r.batch_dups)
-            for r in spark.sql("SELECT * FROM tws_dedup").collect()
-        }
-        # exactly one row per distinct key == the batch-distinct answer
-        assert got == {("a", 0, 1), ("b", 5, 0), ("c", 7, 0)}
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev_provider)
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_transform_with_state_dedup_plan_builds(spark):
-    """Plan construction and output schema don't need the protobuf
-    runtime — they must work everywhere the package imports."""
-    from flink_streaming_twitter_spark.streaming.stateful import (
-        DEDUP_OUT_SCHEMA,
-        streaming_dedup_keep_first,
-    )
-
-    schema = T.StructType(
-        [T.StructField("ts", T.TimestampType()), T.StructField("k", T.StringType())]
-    )
-    d = tempfile.mkdtemp(prefix="twsplan_")
-    try:
-        spark.createDataFrame(
-            [(BASE, "a")], schema
-        ).coalesce(1).write.mode("overwrite").parquet(d)
-        stream = spark.readStream.schema(schema).parquet(d)
-        out = streaming_dedup_keep_first(stream, "k", "ts", ttl_ms=3_600_000)
-        assert out.isStreaming
-        assert out.schema == DEDUP_OUT_SCHEMA
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_sampling_admission_stream_equals_batch(spark):
@@ -1396,114 +1232,9 @@ def test_interval_join_buffers_across_restart(spark, provider):
                 spark.conf.set(c, v)
 
 
-def test_keep_first_dedup_state_survives_restart(spark):
-    """Fourth state layout in the restart-recovery suite: CUSTOM value
-    state (state API v2, transformWithStateInPandas, RocksDB-only).
-    Keys first seen before the restart reappear after it and must stay
-    swallowed — only checkpoint-recovered value state can know them —
-    while a genuinely new post-restart key emits normally."""
-    # same container constraint as test_transform_with_state_dedup_keep_first:
-    # transformWithState's Python runner speaks protobuf to the JVM
-    pytest.importorskip("google.protobuf")
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from flink_streaming_twitter_spark.streaming.stateful import (
-        streaming_dedup_keep_first,
-    )
-
-    files = [
-        [(0, "k1"), (2, "k2"), (3, "k1")],
-        [(10, "k1"), (12, "k3")],
-        [(20, "k1"), (22, "k2"), (25, "k4")],  # k1/k2 recur post-restart
-    ]
-
-    def write_files(d, parts, start=0):
-        for i, part in enumerate(parts, start=start):
-            p = f"{d}/f{i:02d}.parquet"
-            t = pa.table(
-                {
-                    "ts": pa.array(
-                        [BASE + dt.timedelta(seconds=s) for s, _k in part],
-                        pa.timestamp("us"),
-                    ),
-                    "event_type": pa.array([k for _s, k in part]),
-                }
-            )
-            pq.write_table(t, p)
-            os.utime(p, (1_700_000_000 + i * 3600,) * 2)
-
-    def drain(src_dir, view, cp):
-        out: list = []
-
-        def collect(batch_df, _bid):
-            out.extend(
-                (r.dedup_key, r.first_ts, r.batch_dups) for r in batch_df.collect()
-            )
-
-        stream = (
-            spark.readStream.schema(SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        q = start_query(
-            streaming_dedup_keep_first(stream, "event_type"),
-            name=view,
-            output_mode="append",
-            available_now=True,
-            checkpoint_dir=cp,
-            foreach_batch=collect,
-            state_store="rocksdb",  # hard requirement of transformWithState
-        )
-        assert q.awaitTermination(300), f"{view}: drain timed out"
-        return out
-
-    conf_keys = (
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-    )
-    saved = {}
-    for c in conf_keys:
-        try:
-            saved[c] = spark.conf.get(c)
-        except Exception:
-            saved[c] = None
-    work = tempfile.mkdtemp(prefix="twsr_")
-    try:
-        ref_dir, rec_dir = f"{work}/ref", f"{work}/rec"
-        os.makedirs(ref_dir), os.makedirs(rec_dir)
-        write_files(ref_dir, files)
-        reference = drain(ref_dir, "tws_ref", f"{work}/cp_ref")
-
-        write_files(rec_dir, files[:2])
-        p1 = drain(rec_dir, "tws_p1", f"{work}/cp_rec")
-        write_files(rec_dir, [files[2]], start=2)
-        p2 = drain(rec_dir, "tws_p2", f"{work}/cp_rec")
-
-        assert sorted(p1 + p2) == sorted(reference)
-        assert {k for k, _t, _d in p1} == {"k1", "k2", "k3"}
-        # k1 and k2 recur in the post-restart file but stay swallowed —
-        # only recovered value state can suppress them; k4 is new
-        assert {k for k, _t, _d in p2} == {"k4"}
-        # each key emitted exactly once across the whole restarted run
-        assert len(p1 + p2) == 4
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-        for c, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(c)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(c, v)
-
-
 @pytest.mark.parametrize("provider", ["default", "rocksdb"])
 def test_dedup_within_watermark_state_survives_restart(spark, provider):
-    """Fifth and final state layout in the restart-recovery suite: the
+    """Fourth and final state layout in the restart-recovery suite: the
     built-in dropDuplicatesWithinWatermark key store. A key first
     emitted before the restart recurs after it, still inside the
     watermark horizon — the restarted query must swallow it out of

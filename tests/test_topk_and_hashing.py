@@ -11,7 +11,6 @@ from flink_streaming_twitter_spark.functions.hashing import (
     MERSENNE_31,
     md5_int31,
     md5_int60,
-    md5_int64_signed,
     minhash_params_sql,
 )
 from flink_streaming_twitter_spark.operators.topk import per_window_top1, top_k
@@ -40,24 +39,6 @@ def test_md5_int_matches_python_derivation(spark):
     expected60 = int(hashlib.md5(b"hello world").hexdigest()[:15], 16)
     assert r.h60 == expected60
     assert r.h31 == expected60 % (1 << 31)
-
-
-def test_md5_int64_signed_twos_complement(spark):
-    """Must yield the signed int64 of the top 16 md5 hex digits WITHOUT
-    overflowing under ANSI mode — including inputs whose top bit is set
-    (~half of md5 space), where the old conv()->long cast threw."""
-    inputs = [(f"probe-{i}",) for i in range(64)]
-    df = spark.createDataFrame(inputs, ["s"])
-    got = {
-        r.s: r.h for r in df.select("s", md5_int64_signed(F.col("s")).alias("h")).collect()
-    }
-    saw_negative = False
-    for (s,) in inputs:
-        u = int(hashlib.md5(s.encode()).hexdigest()[:16], 16)
-        expected = u - (1 << 64) if u >= (1 << 63) else u
-        assert got[s] == expected, s
-        saw_negative |= expected < 0
-    assert saw_negative  # the overflow-prone half was actually exercised
 
 
 def test_minhash_params_are_stable_and_bounded():

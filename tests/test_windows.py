@@ -1,6 +1,5 @@
 """Reference-exact window semantics on dense inline data: 30 s/5 s
-sliding (W1/W3), 1 s/5 s sampling (W2), 1 s tumbling (W5), running total
-(W4) — SURVEY.md §2.5."""
+sliding (W1/W3), 1 s tumbling (W5), running total (W4) — SURVEY.md §2.5."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ from pyspark.sql import functions as F
 from flink_streaming_twitter_spark.operators.topk import per_window_top1
 from flink_streaming_twitter_spark.operators.windows import (
     running_total,
-    sampling_filter,
     sliding_window_counts,
     tumbling_counts,
 )
@@ -42,17 +40,6 @@ def test_sliding_counts_aggregate_per_key(spark):
     out = sliding_window_counts(df, "ts", "hashtag", "30 seconds", "5 seconds")
     w0 = {r.hashtag: r.cnt for r in out.collect() if r.w_start == int(BASE.timestamp())}
     assert w0 == {"#a": 2, "#b": 1}
-
-
-def test_sampling_window_1s_per_5s_drops_gap_rows(spark):
-    # W2 (Main.java:98): only rows with ts in the first 1s of each 5s
-    # period survive; 4s gaps are never covered
-    rows = [(_t(s), "#x") for s in [0, 1, 2, 4, 5, 6, 9, 10]]
-    df = _stream(spark, rows)
-    kept = sampling_filter(df, "ts", 1, 5).select("ts", "sample_w_start").collect()
-    kept_secs = sorted(int(r.ts.timestamp() - BASE.timestamp()) for r in kept)
-    assert kept_secs == [0, 5, 10]
-    assert all(r.sample_w_start % 5 == 0 for r in kept)
 
 
 def test_tumbling_1s_counts(spark):

@@ -220,8 +220,10 @@ def _stream_qb_drain(spark) -> tuple[float, int]:
     termination, ADVICE r3): replay prep — round 4's sort/split replaces
     round 1-3's symlink — and conf bookkeeping are excluded, restoring
     the round-1/2 scope."""
+    from flink_streaming_twitter_spark.operators.windows import sliding_window_counts
     from flink_streaming_twitter_spark.plans import params as P
     from flink_streaming_twitter_spark.plans.reference_queries import _drain_events_stream
+    from flink_streaming_twitter_spark.streaming.runner import WATERMARK
 
     timing: dict[str, float] = {}
     progress: list = []
@@ -229,15 +231,16 @@ def _stream_qb_drain(spark) -> tuple[float, int]:
         spark,
         SF_DIR,
         "bench_stream_qb",
-        lambda pipe: pipe.windowed_counts(
-            f"{P.TREND_SIZE_S} seconds", f"{P.TREND_SLIDE_S} seconds"
+        lambda s: sliding_window_counts(
+            s.withWatermark("ts", WATERMARK),
+            "ts",
+            "event_type",
+            f"{P.TREND_SIZE_S} seconds",
+            f"{P.TREND_SLIDE_S} seconds",
         ),
         output_mode="update",
         timing=timing,
         progress=progress,
-        # SPARK_GRAFT_STREAM_FILES=1 probes the zero-copy single-batch
-        # replay for comparison; default mirrors the gate (multi-batch)
-        n_files=int(os.environ.get("SPARK_GRAFT_STREAM_FILES", "3")),
     )
     elapsed = timing["query_end"] - timing["query_start"]
     n_batches = sum(1 for p in progress if p["numInputRows"] > 0)

@@ -29,10 +29,9 @@ import argparse
 
 from flink_streaming_twitter_spark.session import build_session
 from flink_streaming_twitter_spark.sources.kafka import kafka_tweet_stream, parse_tweets
-from flink_streaming_twitter_spark.streaming.runner import StreamingPipelines, start_query
+from flink_streaming_twitter_spark.streaming.runner import WATERMARK, ensure_event_time, start_query
 from flink_streaming_twitter_spark.streaming.sinks import (
     influx_lines_foreach_batch,
-    influx_lines_foreach_partition,
     to_influx_points,
 )
 
@@ -57,18 +56,22 @@ def build_queries(
     from pyspark.sql import functions as F
 
     from flink_streaming_twitter_spark.functions.text import hashtags
+    from flink_streaming_twitter_spark.operators.windows import (
+        sliding_window_counts,
+        trending_two_stage,
+        tumbling_counts,
+    )
 
     tagged = tweets.select(
         F.explode(hashtags(F.col("text"))).alias("hashtag"), F.col("ts")
     )
-
-    pipes_tags = StreamingPipelines(tagged, ts_col="ts", key_col="hashtag")
-    pipes_tweets = StreamingPipelines(tweets, ts_col="ts", key_col="lang")
+    tags = ensure_event_time(tagged, "ts").withWatermark("ts", WATERMARK)
+    tweets = ensure_event_time(tweets, "ts").withWatermark("ts", WATERMARK)
 
     queries = []
 
     # Q-A TrendingHashTagFlink2 (Main.java:85-102): chained two-stage form
-    qa = pipes_tags.trending_two_stage_append("30 seconds", "5 seconds", 1, 5)
+    qa = trending_two_stage(tags, "ts", "hashtag", "30 seconds", "5 seconds", 1, 5)
     queries.append(
         start_query(
             qa.select(
@@ -88,7 +91,7 @@ def build_queries(
 
     # Q-B TrendingHashTagFlink1 (Main.java:104-146): stage-1 counts in
     # update mode; per-trigger top-1 inside foreachBatch
-    qb_counts = pipes_tags.windowed_counts("30 seconds", "5 seconds")
+    qb_counts = sliding_window_counts(tags, "ts", "hashtag", "30 seconds", "5 seconds")
     inner_sink = sink_factory(
         "TrendingHashTagFlink1", "w_end", {"hashtag": "top_hashtag"}, {"count": "top_cnt"}
     )
@@ -114,7 +117,7 @@ def build_queries(
 
     # Q-C TotalTweetCountFlink (Main.java:148-157): ungrouped running
     # count, stamped at trigger time like the reference's wall-clock stamp
-    qc = pipes_tweets.running_total().withColumn("ts", F.current_timestamp())
+    qc = tweets.agg(F.count(F.lit(1)).alias("total")).withColumn("ts", F.current_timestamp())
     queries.append(
         start_query(
             qc,
@@ -127,8 +130,10 @@ def build_queries(
     )
 
     # Q-D TweetPerSecondCountFlink (Main.java:159-175): 1 s tumbling counts
-    qd = pipes_tweets.counts_per_second("1 second").withColumn(
-        "w_start_ts", F.timestamp_seconds("w_start")
+    qd = (
+        tumbling_counts(tweets, "ts", "1 second")
+        .select("w_start", "cnt")
+        .withColumn("w_start_ts", F.timestamp_seconds("w_start"))
     )
     queries.append(
         start_query(
@@ -152,31 +157,18 @@ def main() -> None:
     ap.add_argument("--topic", default="tweeter-topic")  # Main.java:61
     ap.add_argument("--influx-url", required=True, help="InfluxDB /write URL")
     ap.add_argument("--checkpoint", default="/tmp/twitter-stream-checkpoints")
-    ap.add_argument(
-        "--sink-mode",
-        choices=("driver", "partition"),
-        default="driver",
-        help="driver: one POST per trigger from the driver (fine for the "
-        "reference's tiny top-1/count result streams); partition: one POST "
-        "per result partition from the executors — use when a result "
-        "stream is high-cardinality (e.g. per-hashtag series)",
-    )
     args = ap.parse_args()
 
     spark = build_session(app_name="twitter-streaming")  # AQE, UTC, shuffle sizing
     raw = kafka_tweet_stream(spark, args.brokers, args.topic)
-    tweets = parse_tweets(raw, watermark=False)  # watermark added per-pipeline
-
-    line_sink = (
-        influx_lines_foreach_batch
-        if args.sink_mode == "driver"
-        else influx_lines_foreach_partition
-    )
+    tweets = parse_tweets(raw)  # watermark added per-pipeline
 
     def sink_factory(measurement: str, ts_col: str, tags: dict, fields: dict):
+        # one POST per trigger: the four measurements are tiny
+        # top-1/count result streams
         def on_batch(batch_df, batch_id: int) -> None:
             pts = to_influx_points(batch_df, measurement, ts_col, tags, fields)
-            line_sink(url=args.influx_url)(pts, batch_id)
+            influx_lines_foreach_batch(url=args.influx_url)(pts, batch_id)
 
         return on_batch
 

@@ -11,9 +11,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.sessions import sessionize
 from ..operators.topk import per_window_top1, top_k
-from ..operators.windows import running_total, sliding_window_counts, tumbling_counts
+from ..operators.windows import (
+    running_total,
+    sliding_window_counts,
+    trending_two_stage,
+    tumbling_counts,
+)
 from ..sources.files import load_table
+from ..streaming.runner import WATERMARK, ensure_event_time, start_query, stream_interval_join
 from . import params as P
 
 
@@ -50,25 +57,24 @@ def qa_trending_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The sampling window is expressed as modular arithmetic on the stage-1
     window end — a narrow filter, no second shuffle of raw rows; only the
-    tiny stage-1 aggregate stream is re-aggregated.
+    tiny stage-1 aggregate stream is re-aggregated. The same
+    ``trending_two_stage`` query is stream_qa_trending's streaming form.
     """
-    ev = _events(spark, sf_dir)
-    stage1 = sliding_window_counts(
-        ev, "ts", "event_type", f"{P.TREND_SIZE_S} seconds", f"{P.TREND_SLIDE_S} seconds"
-    )
-    sampled = stage1.withColumn(
-        "sample_w_start",
-        F.col("w_end") - F.col("w_end") % F.lit(P.SAMPLE_SLIDE_S),
-    ).filter(F.col("w_end") % F.lit(P.SAMPLE_SLIDE_S) < F.lit(P.SAMPLE_SIZE_S))
-    return per_window_top1(sampled, ["sample_w_start"], "event_type").select(
-        "sample_w_start", "top_event_type", "top_cnt"
+    return trending_two_stage(
+        _events(spark, sf_dir),
+        "ts",
+        "event_type",
+        f"{P.TREND_SIZE_S} seconds",
+        f"{P.TREND_SLIDE_S} seconds",
+        P.SAMPLE_SIZE_S,
+        P.SAMPLE_SLIDE_S,
     )
 
 
 def qc_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q-C 'total tweet count' batch twin (Main.java:148-157): cumulative
-    event count sampled per bucket. The streaming form is an ungrouped agg
-    in update mode (streaming/runner.py)."""
+    """Q-C 'total tweet count' batch form (Main.java:148-157): cumulative
+    event count sampled per bucket. The streaming form is an ungrouped
+    count in update mode (examples/twitter_stream_app.build_queries)."""
     return running_total(_events(spark, sf_dir), "ts", f"{P.RUNNING_BUCKET_S} seconds")
 
 
@@ -146,16 +152,17 @@ LAST_DRAIN_TIMING: dict = {}
 whose caller did not pass its own ``timing`` dict — see
 _drain_events_stream."""
 
+_REPLAY_FILES = 3  # time-ordered files, one micro-batch each
+_STATE_PARTITIONS = 4  # a replay's shuffle partitions — see _drain_events_stream
+
 
 def _drain_events_stream(
     spark: SparkSession,
     sf_dir: str,
     view: str,
-    build: "Callable[[object], DataFrame]",
+    build: "Callable[[DataFrame], DataFrame]",
     output_mode: str,
     state_store: str | None = None,
-    state_partitions: int = 4,
-    n_files: int = 3,
     progress: list | None = None,
     timing: dict | None = None,
 ) -> DataFrame:
@@ -163,15 +170,17 @@ def _drain_events_stream(
     engine and return the drained memory sink as a batch DataFrame.
 
     Shared harness for every ``stream_*`` gate entry: split the parquet
-    into ``n_files`` time-ordered files in a temp dir, readStream them
-    ONE PER MICRO-BATCH (``maxFilesPerTrigger=1``), apply
-    ``build(StreamingPipelines)``, drain with availableNow into a memory
-    sink named ``view``. The sink view stays registered so the returned
-    DataFrame can be evaluated lazily; it is dropped and rebuilt on the
-    next invocation.
+    into _REPLAY_FILES time-ordered files in a temp dir, readStream them
+    ONE PER MICRO-BATCH (``maxFilesPerTrigger=1``), apply ``build`` to
+    the event-time-normalized stream (``ensure_event_time``, no
+    watermark: each entry sets its own, and Spark disallows redefining
+    one on an already-watermarked lineage), drain with availableNow into
+    a memory sink named ``view``. The sink view stays registered so the
+    returned DataFrame can be evaluated lazily; it is dropped and rebuilt
+    on the next invocation.
 
     Multi-batch replay (VERDICT r3 item 1): the rows are SORTED by event
-    time and sliced into ``n_files`` contiguous ranges, so every
+    time and sliced into _REPLAY_FILES contiguous ranges, so every
     micro-batch's earliest event sits at or after the previous batch's
     latest — the watermark (max seen − delay) can never drop a later
     batch's rows as late, and the drain exercises REAL cross-batch
@@ -180,8 +189,8 @@ def _drain_events_stream(
     passes window ends — not the single-batch degenerate case where all
     state lives and dies in one commit. The file source admits files in
     modification-time order (``latestFirst`` default false), so each
-    split file gets a strictly increasing mtime stamp. ``n_files=1``
-    falls back to a zero-copy symlink single-batch drain.
+    split file gets a strictly increasing mtime stamp. A table with fewer
+    rows than _REPLAY_FILES is split into fewer files.
 
     ``progress`` (optional) receives the query's recentProgress entries
     after the drain — tests assert ≥2 non-empty micro-batches and zero
@@ -190,7 +199,7 @@ def _drain_events_stream(
     the stream execution (start→termination), so the bench probe's
     seconds exclude the replay-prep and conf bookkeeping (ADVICE r3).
 
-    ``state_partitions`` sizes ``spark.sql.shuffle.partitions`` for THIS
+    _STATE_PARTITIONS sizes ``spark.sql.shuffle.partitions`` for THIS
     query only (captured at stream start, restored after the drain):
     each stateful operator commits one state-store instance per shuffle
     partition per micro-batch, so a bounded replay pays fixed cost per
@@ -209,7 +218,7 @@ def _drain_events_stream(
     import tempfile
     import time
 
-    from ..streaming.runner import StreamingPipelines, start_query
+    import pyarrow.parquet as pq
 
     if timing is None:
         # always expose the query-only stamps module-globally so callers
@@ -241,33 +250,24 @@ def _drain_events_stream(
         except Exception:
             prev_state[c] = None
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
         schema = spark.read.parquet(src).schema
-        if n_files > 1:
-            import pyarrow.parquet as pq
-
-            table = pq.read_table(src).sort_by([("ts", "ascending")])
-            n = table.num_rows
-            n_files = max(1, min(n_files, n))
-            for i in range(n_files):
-                lo, hi = i * n // n_files, (i + 1) * n // n_files
-                path = os.path.join(d, f"events_{i:03d}.parquet")
-                pq.write_table(table.slice(lo, hi - lo), path)
-                # strictly increasing mtimes pin the file source's batch
-                # order (same trick the eviction unit test relies on)
-                os.utime(path, (1_000_000_000 + i * 3600,) * 2)
-        else:
-            os.symlink(src, os.path.join(d, "events.parquet"))
-        reader = spark.readStream.schema(schema)
-        if n_files > 1:
-            reader = reader.option("maxFilesPerTrigger", "1")
-        stream = reader.parquet(d)
+        table = pq.read_table(src).sort_by([("ts", "ascending")])
+        n = table.num_rows
+        parts = max(1, min(_REPLAY_FILES, n))
+        for i in range(parts):
+            lo, hi = i * n // parts, (i + 1) * n // parts
+            path = os.path.join(d, f"events_{i:03d}.parquet")
+            pq.write_table(table.slice(lo, hi - lo), path)
+            # strictly increasing mtimes pin the file source's batch
+            # order (same trick the eviction unit test relies on)
+            os.utime(path, (1_000_000_000 + i * 3600,) * 2)
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
         if dict(stream.dtypes).get("ts") == "bigint":  # TIMESTAMP(NANOS) as long
             stream = stream.withColumn(
                 "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
             )
-        pipe = StreamingPipelines(stream, "ts", "event_type")
-        plan = build(pipe)
+        plan = build(ensure_event_time(stream, "ts"))
         try:
             timing["query_start"] = time.perf_counter()
             q = start_query(
@@ -311,7 +311,7 @@ def _drain_events_stream(
 def stream_qb_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q-B stage 1 executed by the ACTUAL Structured Streaming engine —
     not a batch twin: the events table is replayed through readStream →
-    windowed update-mode aggregation (streaming/runner.py) → memory
+    the batch entries' ``sliding_window_counts`` in update mode → memory
     sink, drained with availableNow, and the sink's final state is
     returned as a batch DataFrame. The paired oracle is the same
     sliding-window SQL the batch form uses, so the driver's hash compare
@@ -331,8 +331,12 @@ def stream_qb_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "stream_qb_counts_sink",
-        lambda pipe: pipe.windowed_counts(
-            f"{P.TREND_SIZE_S} seconds", f"{P.TREND_SLIDE_S} seconds"
+        lambda s: sliding_window_counts(
+            s.withWatermark("ts", WATERMARK),
+            "ts",
+            "event_type",
+            f"{P.TREND_SIZE_S} seconds",
+            f"{P.TREND_SLIDE_S} seconds",
         ),
         output_mode="update",
     )
@@ -356,11 +360,12 @@ where the batch split is hand-built so the eviction point is known."""
 
 def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup through the real engine:
-    ``dropDuplicatesWithinWatermark`` (streaming/runner.py:
-    dedup_within_watermark — the watermark-state-bounded streaming twin
-    of operators/dedup.exact_dedup) over the replayed events, keyed on
-    (user_id, event_type), append mode, with the dedup horizon sized to
-    the replay span (DEDUP_REPLAY_WATERMARK above).
+    ``dropDuplicatesWithinWatermark`` (the watermark-state-bounded
+    streaming form of operators/dedup.exact_dedup) over the replayed
+    events, keyed on (user_id, event_type), append mode, with the dedup
+    horizon sized to the replay span (DEDUP_REPLAY_WATERMARK above). The
+    dedup delay IS the horizon — a business knob independent of the
+    disorder bound the windowed aggregations use.
 
     Only the dedup key columns are emitted: which physical row survives
     per key is an engine-internal ordering choice, but the KEY SET — and
@@ -376,9 +381,9 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "stream_dedup_keys_sink",
-        lambda pipe: pipe.dedup_within_watermark(
-            ["user_id", "event_type"], watermark=DEDUP_REPLAY_WATERMARK
-        ).select("user_id", "event_type"),
+        lambda s: s.withWatermark("ts", DEDUP_REPLAY_WATERMARK)
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        .select("user_id", "event_type"),
         output_mode="append",
     )
     return sink.select("user_id", "event_type")
@@ -405,13 +410,8 @@ def stream_interval_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays bounded in BOTH directions via the watermarks + range
     condition (see stream_interval_join's docstring).
     """
-    def build(pipe) -> DataFrame:
-        from ..streaming.runner import stream_interval_join
-
-        # legs come from the PRE-watermark stream: stream_interval_join
-        # assigns each leg its own watermark, and Spark disallows
-        # redefining one on an already-watermarked lineage
-        s = pipe.raw
+    def build(s: DataFrame) -> DataFrame:
+        # stream_interval_join assigns each leg its own watermark
         errs = s.filter(F.col("event_type") == "error").select(
             F.col("event_id").alias("err_id"),
             "user_id",
@@ -434,7 +434,7 @@ def stream_interval_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_qa_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q-A as ONE natively chained two-aggregation streaming query
-    (streaming/runner.py::trending_two_stage_append, append mode) run by
+    (operators/windows.py::trending_two_stage, append mode) run by
     the real engine — and on the RocksDB state store provider, so the
     100 TB state path gets runtime coverage in the gate, not just a
     config option. The oracle is the batch Q-A SQL restricted to the
@@ -452,21 +452,22 @@ def stream_qa_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "stream_qa_trending_sink",
-        lambda pipe: pipe.trending_two_stage_append(
+        lambda s: trending_two_stage(
+            s.withWatermark("ts", WATERMARK),
+            "ts",
+            "event_type",
             f"{P.TREND_SIZE_S} seconds",
             f"{P.TREND_SLIDE_S} seconds",
             P.SAMPLE_SIZE_S,
             P.SAMPLE_SLIDE_S,
         ),
         output_mode="append",
-        state_store="rocksdb",
         # RocksDB pays per-INSTANCE commit overhead (one store per
         # shuffle partition per stateful operator per batch): sweep at
-        # sf0.1 measured 4→1.98 s, 8→2.22 s, 16→2.85 s (round 13; the
-        # round-14 sweep moved the harness default to 4 for the HDFS
-        # drains too, so this explicit value now just pins the measured
-        # choice). Same SIZE-THIS-UP caveat applies on a real cluster.
-        state_partitions=4,
+        # sf0.1 measured 4→1.98 s, 8→2.22 s, 16→2.85 s (round 13), the
+        # same _STATE_PARTITIONS the HDFS drains use. Same SIZE-THIS-UP
+        # caveat applies on a real cluster.
+        state_store="rocksdb",
     )
     return sink.select("sample_w_start", "top_event_type", "top_cnt")
 
@@ -482,8 +483,8 @@ one giant session per user."""
 
 def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native streaming session windows through the real engine
-    (streaming/runner.py::session_counts — the streaming twin of the
-    batch events_sessionize entry): per-(user, session) event counts,
+    (operators/sessions.py::sessionize — the same query as the batch
+    events_sessionize entry): per-(user, session) event counts,
     append mode. The last implemented-but-not-gate-verified streaming
     operator (VERDICT r3 item 5).
 
@@ -502,8 +503,8 @@ def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "stream_session_counts_sink",
-        lambda pipe: pipe.session_counts(
-            f"{STREAM_SESSION_GAP_S} seconds", key_col="user_id"
+        lambda s: sessionize(
+            s.withWatermark("ts", WATERMARK), "ts", "user_id", f"{STREAM_SESSION_GAP_S} seconds"
         ),
         output_mode="append",
     )

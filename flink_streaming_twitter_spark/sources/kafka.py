@@ -11,9 +11,9 @@ Reference behavior being reproduced (SURVEY.md §2.1/§2.2):
   watermark (Main.java:66-73).
 
 Spark-first mapping: Kafka batch/stream scan → ``from_json`` (PERMISSIVE:
-bad record → null fields) → null filter → ``timestamp_millis`` →
-``withWatermark``. The whole parse path is columnar and codegen-fused; no
-per-record Python runs.
+bad record → null fields) → null filter → ``timestamp_millis``; the
+pipelines add ``withWatermark``. The whole parse path is columnar and
+codegen-fused; no per-record Python runs.
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from ..schema import TWEET_JSON_SCHEMA
 
 DEFAULT_TOPIC = "tweeter-topic"
-WATERMARK_DELAY = "300 seconds"  # Main.java:66 Time.seconds(300)
 
 
 def kafka_options(
@@ -60,20 +59,19 @@ def kafka_tweet_stream(
     )
 
 
-def parse_tweets(raw: DataFrame, raw_col: str = "raw_json", watermark: bool = False) -> DataFrame:
+def parse_tweets(raw: DataFrame, raw_col: str = "raw_json") -> DataFrame:
     """JSON string column → (text, ts TIMESTAMP, lang), dropping unparseable
     records exactly like the reference drops null elements.
 
     PERMISSIVE ``from_json`` gives null fields on malformed input
     (Main.java:209-218 equivalent); records without a usable event time are
-    dropped because every downstream pipeline keys on event time.
+    dropped because every downstream pipeline keys on event time. No
+    watermark is set here: each pipeline sets its own
+    (streaming/runner.WATERMARK).
     """
     parsed = raw.select(F.from_json(F.col(raw_col), TWEET_JSON_SCHEMA).alias("t")).select(
         F.col("t.text").alias("text"),
         F.timestamp_millis(F.col("t.createdAt")).alias("ts"),
         F.col("t.lang").alias("lang"),
     )
-    parsed = parsed.filter(F.col("text").isNotNull() & F.col("ts").isNotNull())
-    if watermark:
-        parsed = parsed.withWatermark("ts", WATERMARK_DELAY)
-    return parsed
+    return parsed.filter(F.col("text").isNotNull() & F.col("ts").isNotNull())

@@ -1,8 +1,7 @@
-from .runner import StreamingPipelines, start_query
+from .runner import start_query
 from .sinks import influx_line, influx_lines_foreach_batch, to_influx_points
 
 __all__ = [
-    "StreamingPipelines",
     "start_query",
     "influx_line",
     "influx_lines_foreach_batch",

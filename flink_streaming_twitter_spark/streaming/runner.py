@@ -1,6 +1,9 @@
-"""Structured Streaming forms of the four reference pipelines.
-
-Semantics mapping (SURVEY.md §2.5 T1, §7 hard-parts):
+"""Structured Streaming wiring: event-time normalization, query start and
+the stream-stream interval join. Each reference pipeline is the batch
+operator (operators/windows.py, operators/sessions.py) run on
+``ensure_event_time(df, ts).withWatermark(ts, WATERMARK)`` — one query
+for batch and stream (SIGMOD 2018, PAPERS.md). Semantics mapping
+(SURVEY.md §2.5 T1, §7 hard-parts):
 
 - Flink's ContinuousProcessingTimeTrigger(5 s) with early firing ≈ Spark
   ``trigger(processingTime='5 seconds')`` + ``outputMode('update')``:
@@ -8,13 +11,14 @@ Semantics mapping (SURVEY.md §2.5 T1, §7 hard-parts):
   the same "dashboard refreshes every 5 s with speculative results"
   behavior; exact firing timestamps differ (documented deviation).
 - The 300 s watermark (Main.java:66-73) maps to
-  ``withWatermark(ts, '300 seconds')``; records later than that are
+  ``withWatermark(ts, WATERMARK)``; records later than that are
   dropped by both engines (no allowedLateness in the reference).
-- Q-A/Q-B's per-window argmax is a second stateful aggregation over a
+- Q-B's per-window argmax is a second stateful aggregation over a
   streaming aggregate; update-mode chaining of two aggs is not supported
   by Structured Streaming, so the top-1 step runs inside foreachBatch on
   the (tiny) changed-window set of each micro-batch — same observable
-  output cadence as the reference's trigger firings.
+  output cadence as the reference's trigger firings. Q-A chains both
+  aggregations natively in append mode.
 - Q-C's global window + running sum is exactly Spark's ungrouped
   streaming aggregation in update mode.
 
@@ -33,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 
-WATERMARK_S = 300
+WATERMARK_S = 300  # Main.java:66 Time.seconds(300)
 WATERMARK = f"{WATERMARK_S} seconds"
 TRIGGER = "5 seconds"
 
@@ -67,14 +71,13 @@ def start_query(
     *,
     name: str,
     output_mode: str = "update",
-    trigger_interval: str | None = TRIGGER,
-    sink_format: str = "memory",
     foreach_batch: Callable[[DataFrame, int], None] | None = None,
     checkpoint_dir: str | None = None,
     available_now: bool = False,
     state_store: str | None = None,
 ) -> StreamingQuery:
-    """writeStream wiring shared by every pipeline.
+    """writeStream wiring shared by every pipeline: the 5 s processing-time
+    trigger (Main.java:88) and, without ``foreach_batch``, the memory sink.
 
     ``available_now=True`` drains the source and stops — the mode the
     replay tests use for deterministic stream==batch assertions.
@@ -106,13 +109,13 @@ def start_query(
     w = df.writeStream.queryName(name).outputMode(output_mode)
     if available_now:
         w = w.trigger(availableNow=True)
-    elif trigger_interval is not None:
-        w = w.trigger(processingTime=trigger_interval)
+    else:
+        w = w.trigger(processingTime=TRIGGER)
     if checkpoint_dir is not None:
         w = w.option("checkpointLocation", checkpoint_dir)
     if foreach_batch is not None:
         return w.foreachBatch(foreach_batch).start()
-    return w.format(sink_format).start()
+    return w.format("memory").start()
 
 
 def stream_interval_join(
@@ -148,142 +151,3 @@ def stream_interval_join(
     keep = [l[k].alias(k) for k in key_cols]
     others = [c for c in joined.columns if c not in set(key_cols)]
     return joined.select(*keep, *[F.col(c) for c in others])
-
-
-class StreamingPipelines:
-    """The four reference pipelines over any tweet-shaped stream
-    (columns: text/key column + ts TIMESTAMP)."""
-
-    def __init__(
-        self,
-        stream: DataFrame,
-        ts_col: str = "ts",
-        key_col: str = "event_type",
-        watermark: str = WATERMARK,
-    ):
-        # raw: event-time-normalized but NOT yet watermarked — the input
-        # for operators that define their own watermarks (e.g. the two
-        # legs of stream_interval_join; Spark disallows redefining a
-        # watermark on an already-watermarked lineage)
-        self.raw = ensure_event_time(stream, ts_col)
-        self.stream = self.raw.withWatermark(ts_col, watermark)
-        self.ts_col = ts_col
-        self.key_col = key_col
-
-    def windowed_counts(self, size: str = "30 seconds", slide: str = "5 seconds") -> DataFrame:
-        """Q-B stage 1 (W3+A3's aggregation half): per-(window, key)
-        counts, update-mode-ready."""
-        return (
-            self.stream.groupBy(
-                F.window(F.col(self.ts_col), size, slide).alias("window"),
-                F.col(self.key_col),
-            )
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(
-                F.col("window.start").cast("long").alias("w_start"),
-                F.col("window.end").cast("long").alias("w_end"),
-                F.col(self.key_col),
-                F.col("cnt"),
-            )
-        )
-
-    def running_total(self) -> DataFrame:
-        """Q-C (W4+T1+A5): ungrouped streaming agg — Spark's native global
-        window; update mode emits the new running total each trigger."""
-        return self.stream.agg(F.count(F.lit(1)).alias("total"))
-
-    def counts_per_second(self, size: str = "1 second") -> DataFrame:
-        """Q-D (W5+A6): tumbling event-time counts."""
-        return (
-            self.stream.groupBy(F.window(F.col(self.ts_col), size).alias("window"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.col("window.start").cast("long").alias("w_start"), F.col("cnt"))
-        )
-
-    def dedup_within_watermark(
-        self, id_cols: list[str], watermark: str | None = None
-    ) -> DataFrame:
-        """Streaming exact dedup with state bounded by the watermark —
-        the streaming twin of operators/dedup.exact_dedup.
-
-        ``watermark`` overrides the pipeline's delay for this operator
-        only (re-assigned on the pre-watermark stream — Spark disallows
-        redefining one on an already-watermarked lineage): the delay IS
-        the dedup horizon, a business knob independent of the disorder
-        bound the windowed aggregations use. A key recurring after its
-        state was evicted legitimately re-emits
-        (tests/test_streaming.py::test_stream_dedup_reemits_after_watermark_eviction).
-        """
-        src = (
-            self.stream
-            if watermark is None
-            else self.raw.withWatermark(self.ts_col, watermark)
-        )
-        return src.dropDuplicatesWithinWatermark(id_cols)
-
-    def trending_two_stage_append(
-        self,
-        size: str = "30 seconds",
-        slide: str = "5 seconds",
-        sample_size_s: int = 1,
-        sample_slide_s: int = 5,
-    ) -> DataFrame:
-        """Q-A as ONE streaming query with natively chained stateful
-        aggregations (append mode, Spark ≥ 3.4) — no foreachBatch bridge:
-        stage-1 keyed sliding-window counts → stateless modular filter
-        implementing the reference's sampling window (W2, size < slide;
-        Spark 4's ``window()`` rejects slide > duration, so the gap
-        semantics live in a filter exactly as in the batch twin) →
-        stage-2 re-windows the survivors by their event time
-        (``window_time`` = window.end − 1 µs) into tumbling
-        ``sample_slide_s`` buckets and takes the argmax.
-
-        Because surviving stage-1 window-ends sit in the first
-        ``sample_size_s`` of each slide period, the 1 µs-early window_time
-        falls in the PREVIOUS tumbling bucket; the emitted
-        ``sample_w_start`` adds the slide back so it names the same
-        sampling window as the batch query. This shift is exact when every
-        surviving window-end is slide-aligned, i.e. requires
-        ``sample_size_s <= gcd(stage-1 slide, sample_slide_s)`` — the
-        reference's 1 s/5 s (and any size-1 sampling of slide-aligned
-        windows) satisfies it. Both stages evict state by the one
-        watermark; a sampling window emits once the watermark passes its
-        end.
-        """
-        s1 = self.stream.groupBy(
-            F.window(F.col(self.ts_col), size, slide).alias("window"), F.col(self.key_col)
-        ).agg(F.count(F.lit(1)).alias("cnt"))
-        sampled = s1.filter(
-            F.col("window.end").cast("long") % sample_slide_s < sample_size_s
-        )
-        return (
-            sampled.groupBy(
-                F.window(F.window_time("window"), f"{sample_slide_s} seconds").alias("sw")
-            )
-            .agg(F.max(F.struct(F.col("cnt"), F.col(self.key_col))).alias("top"))
-            .select(
-                (F.col("sw.start").cast("long") + sample_slide_s).alias("sample_w_start"),
-                F.col(f"top.{self.key_col}").alias(f"top_{self.key_col}"),
-                F.col("top.cnt").alias("top_cnt"),
-            )
-        )
-
-    def session_counts(self, gap: str = "30 seconds", key_col: str | None = None) -> DataFrame:
-        """Native session windows over the stream (the streaming twin of
-        operators/sessions.sessionize): per-(key, session) event counts.
-        Sessions finalize (append mode) once the watermark passes the
-        session end (last event + gap); state evicts with them.
-        ``key_col`` overrides the pipeline key (e.g. user sessions over a
-        stream whose default key is the event type)."""
-        key_col = key_col or self.key_col
-        return (
-            self.stream.groupBy(
-                F.session_window(F.col(self.ts_col), gap).alias("sw"), F.col(key_col)
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.min(F.col(self.ts_col).cast("long")).alias("session_start"),
-                F.max(F.col(self.ts_col).cast("long")).alias("session_last"),
-            )
-            .select(key_col, "session_start", "session_last", "n_events")
-        )

@@ -132,8 +132,8 @@ def influx_line(measurement: str, tags: dict, fields: dict, ts_ns: int) -> str:
     POST body, one invalid line would poison every line in the batch.
     The reference's client enforces the same invariant (influxdb-java's
     Point builder rejects an empty field map), so the SERIALIZER fails
-    loudly; the shipped WRITERS (influx_lines_foreach_batch /
-    _foreach_partition) pre-filter such points with a logged count
+    loudly; the shipped writer (influx_lines_foreach_batch)
+    pre-filters such points with a logged count
     instead, so one all-null aggregate row (e.g. an outer-join result)
     degrades to a dropped point, not a crash-looping streaming query
     (ADVICE r8)."""
@@ -217,41 +217,3 @@ def _post_lines(url: str, lines: list[str]) -> None:  # pragma: no cover
 
     req = urllib.request.Request(url, data="\n".join(lines).encode(), method="POST")
     urllib.request.urlopen(req, timeout=10)
-
-
-def influx_lines_foreach_partition(
-    url: str | None = None,
-    writer: Callable[[list[str]], None] | None = None,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function that ships line protocol PER PARTITION from
-    the executors (``foreachPartition``) instead of collecting to the
-    driver — the shape for HIGH-CARDINALITY result streams (e.g. a
-    per-hashtag series rather than the reference's top-1/count rows),
-    where a batch no longer safely materializes driver-side. Each
-    partition formats its own rows and makes its own POST, so sink
-    throughput scales with the cluster instead of the driver NIC; the
-    trade is one HTTP request per partition per trigger (size result
-    partitions accordingly — coalesce the result stream if partitions
-    are tiny).
-
-    ``writer`` (must be serializable — it runs ON THE EXECUTORS) receives
-    each non-empty partition's lines; defaults to an HTTP POST to ``url``.
-    Delivery stays at-least-once like the driver-side variant: a batch
-    retry may re-POST partitions that already succeeded. Fieldless
-    points are dropped with a per-partition logged count (executor
-    logs), same policy as the driver-side writer.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        def handle_partition(rows) -> None:
-            lines = _render_rows(rows, batch_id)
-            if not lines:
-                return
-            if writer is not None:
-                writer(lines)
-            elif url is not None:  # pragma: no cover - needs a live InfluxDB
-                _post_lines(url, lines)
-
-        batch_df.foreachPartition(handle_partition)
-
-    return write_batch

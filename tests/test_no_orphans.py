@@ -1,6 +1,5 @@
-"""Orphan guard: every public function and class in the package, and every
-public method of ``StreamingPipelines``, must be referenced by code outside
-``tests/``.
+"""Orphan guard: every public function and class in the package must be
+referenced by code outside ``tests/``.
 
 Pure ``ast`` over the repository's Python files — no Spark session. A
 reference is a ``Name``, an ``Attribute`` or an ``ImportFrom`` alias with
@@ -19,7 +18,6 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PACKAGE = "flink_streaming_twitter_spark"
-METHOD_CLASSES = {"StreamingPipelines"}
 
 EXEMPT = {
     "hash_sample": "reference oracle that tests/test_sampling.py checks weighted_mix against",
@@ -46,21 +44,13 @@ def _python_files() -> list[Path]:
 
 def _definitions(rel: str, tree: ast.Module) -> list[tuple[str, str, int, int]]:
     """(name, file, first line, last line) of each public top-level
-    function/class, plus public methods of METHOD_CLASSES."""
-    defs = []
-    for node in tree.body:
-        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            continue
-        if not node.name.startswith("_"):
-            defs.append((node.name, rel, node.lineno, node.end_lineno))
-        if isinstance(node, ast.ClassDef) and node.name in METHOD_CLASSES:
-            defs.extend(
-                (m.name, rel, m.lineno, m.end_lineno)
-                for m in node.body
-                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
-                and not m.name.startswith("_")
-            )
-    return defs
+    function/class."""
+    return [
+        (node.name, rel, node.lineno, node.end_lineno)
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and not node.name.startswith("_")
+    ]
 
 
 def _references(rel: str, tree: ast.Module) -> list[tuple[str, str, int]]:

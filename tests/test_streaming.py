@@ -16,8 +16,15 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_streaming_twitter_spark.operators.sessions import sessionize
+from flink_streaming_twitter_spark.operators.windows import (
+    sliding_window_counts,
+    trending_two_stage,
+    tumbling_counts,
+)
 from flink_streaming_twitter_spark.streaming.runner import (
-    StreamingPipelines,
+    WATERMARK,
+    ensure_event_time,
     start_query,
     stream_interval_join,
 )
@@ -31,6 +38,11 @@ SCHEMA = T.StructType(
 )
 
 BASE = dt.datetime(2024, 1, 1, 0, 0, 0)
+
+
+def _watermarked(stream, delay=WATERMARK):
+    """The input every pipeline operator runs on as a stream."""
+    return ensure_event_time(stream, "ts").withWatermark("ts", delay)
 
 
 @pytest.fixture()
@@ -49,9 +61,9 @@ def replay_dir(spark):
 
 def test_stream_windowed_counts_equal_batch(spark, replay_dir):
     stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(replay_dir)
-    pipe = StreamingPipelines(stream, "ts", "event_type")
+    wm = _watermarked(stream)
     q = start_query(
-        pipe.windowed_counts("10 seconds", "5 seconds"),
+        sliding_window_counts(wm, "ts", "event_type", "10 seconds", "5 seconds"),
         name="wc_stream",
         output_mode="complete",
         available_now=True,
@@ -89,9 +101,9 @@ def test_stream_windowed_counts_on_rocksdb_state_store(spark, replay_dir):
         stream = (
             spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(replay_dir)
         )
-        pipe = StreamingPipelines(stream, "ts", "event_type")
+        wm = _watermarked(stream)
         q = start_query(
-            pipe.windowed_counts("10 seconds", "5 seconds"),
+            sliding_window_counts(wm, "ts", "event_type", "10 seconds", "5 seconds"),
             name="wc_rocks",
             output_mode="complete",
             available_now=True,
@@ -137,9 +149,12 @@ def test_stream_windowed_counts_on_rocksdb_state_store(spark, replay_dir):
 
 def test_stream_running_total_converges(spark, replay_dir):
     stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(replay_dir)
-    pipe = StreamingPipelines(stream, "ts", "event_type")
+    wm = _watermarked(stream)
     q = start_query(
-        pipe.running_total(), name="rt_stream", output_mode="complete", available_now=True
+        wm.agg(F.count(F.lit(1)).alias("total")),
+        name="rt_stream",
+        output_mode="complete",
+        available_now=True,
     )
     q.awaitTermination(120)
     [row] = spark.sql("SELECT * FROM rt_stream").collect()
@@ -148,9 +163,9 @@ def test_stream_running_total_converges(spark, replay_dir):
 
 def test_stream_dedup_within_watermark(spark, replay_dir):
     stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(replay_dir)
-    pipe = StreamingPipelines(stream, "ts", "event_type")
+    wm = _watermarked(stream)
     q = start_query(
-        pipe.dedup_within_watermark(["event_type"]),
+        wm.dropDuplicatesWithinWatermark(["event_type"]),
         name="dd_stream",
         output_mode="append",
         available_now=True,
@@ -182,9 +197,9 @@ def test_stream_chained_two_stage_trending_equals_batch(spark, replay_dir):
         stream = (
             spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(d)
         )
-        pipe = StreamingPipelines(stream, "ts", "event_type")
+        wm = _watermarked(stream)
         q = start_query(
-            pipe.trending_two_stage_append("10 seconds", "5 seconds", 1, 5),
+            trending_two_stage(wm, "ts", "event_type", "10 seconds", "5 seconds", 1, 5),
             name="chain_stream",
             output_mode="append",
             available_now=True,
@@ -195,11 +210,13 @@ def test_stream_chained_two_stage_trending_equals_batch(spark, replay_dir):
             for r in spark.sql("SELECT * FROM chain_stream").collect()
         }
 
-        batch_pipe = StreamingPipelines(spark.read.schema(SCHEMA).parquet(d), "ts", "event_type")
+        batch = spark.read.schema(SCHEMA).parquet(d)
         base_epoch = int(BASE.replace(tzinfo=dt.timezone.utc).timestamp())
         expected = {
             (r.sample_w_start, r.top_event_type, r.top_cnt)
-            for r in batch_pipe.trending_two_stage_append("10 seconds", "5 seconds", 1, 5).collect()
+            for r in trending_two_stage(
+                batch, "ts", "event_type", "10 seconds", "5 seconds", 1, 5
+            ).collect()
             # only sampling windows the 1000 s flush event finalizes
             if r.sample_w_start < base_epoch + 900
         }
@@ -210,16 +227,14 @@ def test_stream_chained_two_stage_trending_equals_batch(spark, replay_dir):
 
 def test_stream_session_counts_equal_batch(spark, replay_dir):
     stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(replay_dir)
-    pipe = StreamingPipelines(stream, "ts", "event_type")
+    wm = _watermarked(stream)
     q = start_query(
-        pipe.session_counts("3 seconds"),
+        sessionize(wm, "ts", "event_type", "3 seconds"),
         name="sess_stream",
         output_mode="complete",
         available_now=True,
     )
     q.awaitTermination(120)
-
-    from flink_streaming_twitter_spark.operators.sessions import sessionize
 
     batch = spark.read.schema(SCHEMA).parquet(replay_dir)
     expected = {
@@ -268,9 +283,9 @@ def test_stream_session_merges_across_micro_batches(spark):
         stream = (
             spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(d)
         )
-        pipe = StreamingPipelines(stream, "ts", "event_type")
+        wm = _watermarked(stream)
         q = start_query(
-            pipe.session_counts("10 seconds"),
+            sessionize(wm, "ts", "event_type", "10 seconds"),
             name="sessmb_stream",
             output_mode="append",
             available_now=True,
@@ -380,9 +395,10 @@ def test_streaming_file_sink_is_exactly_once(spark, replay_dir):
             )
             # short watermark so the 11 s replay finalizes windows for
             # append mode (the production 300 s would finalize nothing)
-            pipe = StreamingPipelines(stream, "ts", "event_type", watermark="1 second")
+            wm = _watermarked(stream, "1 second")
             q = (
-                pipe.counts_per_second("5 seconds")
+                tumbling_counts(wm, "ts", "5 seconds")
+                .select("w_start", "cnt")
                 .writeStream.outputMode("append")
                 .trigger(availableNow=True)
                 .option("checkpointLocation", ckpt)
@@ -457,14 +473,11 @@ def test_writers_drop_fieldless_points_instead_of_failing_the_query(spark, caplo
     """ADVICE r8: influx_line raising inside foreachBatch fails the
     whole streaming query, and a restart replays the same batch — a
     crash LOOP from one all-null aggregate row (e.g. an outer-join
-    result). Both shipped writers must instead DROP such points with a
+    result). The shipped writer must instead DROP such points with a
     logged count and ship every renderable line of the same batch."""
     import logging as _logging
 
-    from flink_streaming_twitter_spark.streaming.sinks import (
-        influx_lines_foreach_batch,
-        influx_lines_foreach_partition,
-    )
+    from flink_streaming_twitter_spark.streaming.sinks import influx_lines_foreach_batch
 
     rows = [
         (BASE, "a", 5),
@@ -484,29 +497,6 @@ def test_writers_drop_fieldless_points_instead_of_failing_the_query(spark, caplo
     assert all("count=" in ln for ln in shipped)
     assert not any(",hashtag=b " in ln for ln in shipped)
     assert any("dropped 1 fieldless point" in r.message for r in caplog.records)
-
-    # executor-side variant: same policy. The writer runs in executor
-    # Python workers, so collect lines via files (as the partition-writer
-    # test above does); the drop-count warning lands in executor logs.
-    import glob
-    import os
-    import uuid
-
-    d = tempfile.mkdtemp(prefix="influx_fieldless_")
-    try:
-
-        def file_writer(lines):
-            with open(os.path.join(d, uuid.uuid4().hex), "w") as fh:
-                fh.write("\n".join(lines))
-
-        influx_lines_foreach_partition(writer=file_writer)(points.coalesce(1), 42)
-        shipped2: list[str] = []
-        for p in glob.glob(os.path.join(d, "*")):
-            with open(p) as fh:
-                shipped2.extend(fh.read().splitlines())
-        assert sorted(shipped2) == sorted(shipped)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_influx_timestamp_conversion_is_exact_at_microsecond_resolution():
@@ -645,8 +635,12 @@ def test_gate_drain_is_multi_batch_with_no_late_drops(spark, sf_dir):
         spark,
         sf_dir,
         "mb_probe_sink",
-        lambda pipe: pipe.windowed_counts(
-            f"{P.TREND_SIZE_S} seconds", f"{P.TREND_SLIDE_S} seconds"
+        lambda s: sliding_window_counts(
+            _watermarked(s),
+            "ts",
+            "event_type",
+            f"{P.TREND_SIZE_S} seconds",
+            f"{P.TREND_SLIDE_S} seconds",
         ),
         output_mode="update",
         progress=progress,
@@ -706,8 +700,8 @@ def test_gate_append_drain_emits_mid_stream(spark, sf_dir):
         spark,
         sf_dir,
         "midstream_probe_sink",
-        lambda pipe: pipe.session_counts(
-            f"{STREAM_SESSION_GAP_S} seconds", key_col="user_id"
+        lambda s: sessionize(
+            _watermarked(s), "ts", "user_id", f"{STREAM_SESSION_GAP_S} seconds"
         ),
         output_mode="append",
         progress=progress,
@@ -717,39 +711,6 @@ def test_gate_append_drain_emits_mid_stream(spark, sf_dir):
         (p["batchId"], p["sink"]["numOutputRows"]) for p in progress
     ]
     spark.catalog.dropTempView("midstream_probe_sink")
-
-
-def test_gate_drain_single_file_fallback_matches_multi_batch(spark, sf_dir):
-    """n_files=1 keeps the zero-copy symlink replay (used for raw
-    throughput probing); its drained result must equal the multi-batch
-    default's — stream==batch convergence is replay-granularity-
-    independent."""
-    from flink_streaming_twitter_spark.plans import params as P
-    from flink_streaming_twitter_spark.plans.reference_queries import (
-        _drain_events_stream,
-    )
-
-    def drain(view, n_files):
-        sink = _drain_events_stream(
-            spark,
-            sf_dir,
-            view,
-            lambda pipe: pipe.windowed_counts(
-                f"{P.TREND_SIZE_S} seconds", f"{P.TREND_SLIDE_S} seconds"
-            ),
-            output_mode="update",
-            n_files=n_files,
-        )
-        rows = {
-            (r.w_start, r.event_type, r.cnt)
-            for r in sink.groupBy("w_start", "w_end", "event_type")
-            .agg(F.max("cnt").alias("cnt"))
-            .collect()
-        }
-        spark.catalog.dropTempView(view)
-        return rows
-
-    assert drain("sf_single", 1) == drain("sf_multi", 3)
 
 
 def test_gate_dedup_drain_crosses_batches_without_reemission(spark, sf_dir):
@@ -776,7 +737,7 @@ def test_gate_dedup_drain_crosses_batches_without_reemission(spark, sf_dir):
         spark,
         sf_dir,
         "dedup_crossbatch_sink",
-        lambda pipe: pipe.raw.withColumn("day", F.to_date("ts"))
+        lambda s: s.withColumn("day", F.to_date("ts"))
         .withWatermark("ts", DEDUP_REPLAY_WATERMARK)
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "day"])
         .select("user_id", "event_type", "day"),
@@ -856,9 +817,9 @@ def test_stream_dedup_reemits_after_watermark_eviction(spark):
         stream = (
             spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(d)
         )
-        pipe = StreamingPipelines(stream, "ts", "event_type")
+        wm = _watermarked(stream)
         q = start_query(
-            pipe.dedup_within_watermark(["event_type"]),
+            wm.dropDuplicatesWithinWatermark(["event_type"]),
             name="ddevict_stream",
             output_mode="append",
             available_now=True,
@@ -937,8 +898,8 @@ def test_streaming_restart_recovers_state_exactly_once(spark, provider):
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
-        pipe = StreamingPipelines(stream, "ts", "event_type", watermark="40 seconds")
-        plan = pipe.windowed_counts(size="20 seconds", slide="20 seconds")
+        wm = _watermarked(stream, "40 seconds")
+        plan = sliding_window_counts(wm, "ts", "event_type", "20 seconds", "20 seconds")
         q = start_query(
             plan,
             name=view,
@@ -1052,9 +1013,9 @@ def test_session_window_merges_across_restart(spark, provider):
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
-        pipe = StreamingPipelines(stream, "ts", "event_type", watermark="20 seconds")
+        wm = _watermarked(stream, "20 seconds")
         q = start_query(
-            pipe.session_counts(gap="15 seconds"),
+            sessionize(wm, "ts", "event_type", "15 seconds"),
             name=view,
             output_mode="append",
             available_now=True,
@@ -1280,9 +1241,9 @@ def test_dedup_within_watermark_state_survives_restart(spark, provider):
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
-        pipe = StreamingPipelines(stream, "ts", "event_type", watermark="60 seconds")
+        wm = _watermarked(stream, "60 seconds")
         q = start_query(
-            pipe.dedup_within_watermark(["event_type"]),
+            wm.dropDuplicatesWithinWatermark(["event_type"]),
             name=view,
             output_mode="append",
             available_now=True,
@@ -1384,9 +1345,9 @@ def test_chained_two_stage_trending_recovers_across_restart(spark, provider):
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
-        pipe = StreamingPipelines(stream, "ts", "event_type", watermark="20 seconds")
+        wm = _watermarked(stream, "20 seconds")
         q = start_query(
-            pipe.trending_two_stage_append("10 seconds", "5 seconds", 1, 5),
+            trending_two_stage(wm, "ts", "event_type", "10 seconds", "5 seconds", 1, 5),
             name=view,
             output_mode="append",
             available_now=True,
@@ -1488,9 +1449,9 @@ def test_running_total_continues_from_recovered_sum_after_restart(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
-        pipe = StreamingPipelines(stream, "ts", "event_type")
+        wm = _watermarked(stream)
         q = start_query(
-            pipe.running_total(),
+            wm.agg(F.count(F.lit(1)).alias("total")),
             name=view,
             output_mode="update",
             available_now=True,
@@ -1572,9 +1533,9 @@ def test_midbatch_failure_foreachbatch_redelivers_uncommitted_batch(spark, provi
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
-        pipe = StreamingPipelines(stream, "ts", "event_type", watermark="40 seconds")
+        wm = _watermarked(stream, "40 seconds")
         q = start_query(
-            pipe.windowed_counts(size="20 seconds", slide="20 seconds"),
+            sliding_window_counts(wm, "ts", "event_type", "20 seconds", "20 seconds"),
             name=view,
             output_mode="append",
             available_now=True,
@@ -1684,9 +1645,9 @@ def test_midbatch_failure_file_sink_stays_exactly_once(spark, provider):
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
-        pipe = StreamingPipelines(stream, "ts", "event_type", watermark="40 seconds")
+        wm = _watermarked(stream, "40 seconds")
         return (
-            pipe.windowed_counts(size="20 seconds", slide="20 seconds")
+            sliding_window_counts(wm, "ts", "event_type", "20 seconds", "20 seconds")
             .writeStream.queryName(view)
             .outputMode("append")
             .trigger(availableNow=True)
@@ -1878,11 +1839,11 @@ def test_watermark_drop_count_matches_predicted_late_rows(spark, provider):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        pipe = StreamingPipelines(
-            stream, "ts", "event_type", watermark=f"{DELAY} seconds"
-        )
+        wm = _watermarked(stream, f"{DELAY} seconds")
         q = start_query(
-            pipe.windowed_counts(size=f"{SIZE} seconds", slide=f"{SIZE} seconds"),
+            sliding_window_counts(
+                wm, "ts", "event_type", f"{SIZE} seconds", f"{SIZE} seconds"
+            ),
             name=f"latedrop_{provider}",
             output_mode="append",
             available_now=True,
@@ -1920,59 +1881,6 @@ def test_watermark_drop_count_matches_predicted_late_rows(spark, provider):
                     pass
             else:
                 spark.conf.set(c, v)
-
-
-def test_influx_partitioned_writer_ships_every_line_from_executors(spark):
-    """The foreachPartition sink variant: no driver-side collect — each
-    partition formats and ships its own lines (the shape for
-    high-cardinality result streams). The injected writer runs ON THE
-    EXECUTOR python workers, so it records through the filesystem, not a
-    driver closure; the union of all per-partition shipments must be
-    exactly the batch's line-protocol rendering, and no partition may
-    ship twice."""
-    import glob
-    import os
-    import uuid
-
-    from flink_streaming_twitter_spark.streaming.sinks import (
-        influx_lines_foreach_partition,
-    )
-
-    d = tempfile.mkdtemp(prefix="influx_part_")
-    try:
-        rows = [
-            (BASE + dt.timedelta(seconds=i), f"tag{i}", i * 10) for i in range(7)
-        ]
-        df = spark.createDataFrame(rows, ["window_end", "hashtag", "cnt"])
-        points = to_influx_points(
-            df, "TrendingHashTagFlink1", "window_end",
-            {"hashtag": "hashtag"}, {"count": "cnt"},
-        ).repartition(3)
-
-        def writer(lines):
-            with open(os.path.join(d, uuid.uuid4().hex), "w") as fh:
-                fh.write("\n".join(lines))
-
-        influx_lines_foreach_partition(writer=writer)(points, 0)
-
-        shipped = []
-        for p in glob.glob(os.path.join(d, "*")):
-            with open(p) as fh:
-                shipped.extend(fh.read().splitlines())
-        expected = {
-            influx_line(
-                "TrendingHashTagFlink1",
-                {"hashtag": f"tag{i}"},
-                {"count": i * 10},  # typed: renders as count=<n>i
-                int((BASE + dt.timedelta(seconds=i)).replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000_000),
-            )
-            for i in range(7)
-        }
-        assert set(shipped) == expected
-        assert len(shipped) == 7  # nothing shipped twice
-        assert 1 < len(glob.glob(os.path.join(d, "*"))) <= 3  # per-partition POSTs
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_processing_time_trigger_fits_5s_envelope(spark):
@@ -2014,15 +1922,14 @@ def test_processing_time_trigger_fits_5s_envelope(spark):
             stream = stream.withColumn(
                 "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
             )
-        pipe = StreamingPipelines(stream, "ts", "event_type")
-        plan = pipe.windowed_counts(
-            f"{P.TREND_SIZE_S} seconds", f"{P.TREND_SLIDE_S} seconds"
+        wm = _watermarked(stream)
+        plan = sliding_window_counts(
+            wm, "ts", "event_type", f"{P.TREND_SIZE_S} seconds", f"{P.TREND_SLIDE_S} seconds"
         )
         q = start_query(
             plan,
             name="cadence_probe",
             output_mode="update",
-            trigger_interval="5 seconds",
         )
         try:
             deadline = time.monotonic() + 120
@@ -2130,9 +2037,11 @@ def test_far_future_event_poisons_watermark_and_evicts_stream_tail(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        pipe = StreamingPipelines(stream, "ts", "event_type", watermark=f"{DELAY} seconds")
+        wm = _watermarked(stream, f"{DELAY} seconds")
         q = start_query(
-            pipe.windowed_counts(size=f"{SIZE} seconds", slide=f"{SIZE} seconds"),
+            sliding_window_counts(
+                wm, "ts", "event_type", f"{SIZE} seconds", f"{SIZE} seconds"
+            ),
             name="poisonwm",
             output_mode="append",
             available_now=True,
@@ -2232,7 +2141,7 @@ def test_sane_event_time_before_watermark_prevents_poison_eviction(spark):
             .parquet(src)
         )
         guarded = stream.withColumn("ts", sane_event_time(F.col("ts"), LO, HI))
-        pipe = StreamingPipelines(guarded, "ts", "event_type", watermark=f"{DELAY} seconds")
+        wm = _watermarked(guarded, f"{DELAY} seconds")
         # update mode (the gate's stream_qb_counts mode): emits every
         # state change immediately, so the assertion isolates the
         # late-filter question (dropped vs landed) from append-mode's
@@ -2240,7 +2149,9 @@ def test_sane_event_time_before_watermark_prevents_poison_eviction(spark):
         # window — the unguarded twin above needed append because its
         # point WAS finalization under the poisoned eviction watermark
         q = start_query(
-            pipe.windowed_counts(size=f"{SIZE} seconds", slide=f"{SIZE} seconds"),
+            sliding_window_counts(
+                wm, "ts", "event_type", f"{SIZE} seconds", f"{SIZE} seconds"
+            ),
             name="sanewm",
             output_mode="update",
             available_now=True,

@@ -19,12 +19,14 @@ oracle-verified gate operator):
                     (salted two-phase form via --hot-domains when one
                     source dominates);
 5. split          — deterministic md5-bucket train/val/test assignment;
-6. profile        — per-(split, source) doc/token/char counts, written
-                    as parquet next to the curated corpus, alongside the
-                    LSH cap-loss ledger from stage 3 (metrics/
-                    dedup_cap_loss: every hot bucket the scale cap
-                    dropped, with occupancy — empty when the cap never
-                    binds).
+6. profile        — per-(split, source) doc/token/char counts,
+                    aggregated from the persisted stage-5 output (the
+                    corpus write fills the cache, so stages 2-5 run
+                    once), written as parquet next to the curated
+                    corpus, alongside the LSH cap-loss ledger from
+                    stage 3 (metrics/dedup_cap_loss: every hot bucket
+                    the scale cap dropped, with occupancy — empty when
+                    the cap never binds).
 
 Usage (paths default to the synthetic test tables):
 
@@ -81,7 +83,8 @@ def run(
     can drive it without the app tearing down the shared test JVM).
     Writes ``out``/corpus, ``out``/profile, and the stage-3 cap-loss
     ledger at ``out``/metrics/dedup_cap_loss; returns the profile
-    DataFrame."""
+    DataFrame. The split output stays persisted (the returned profile
+    reads it); ``spark.catalog.clearCache()`` releases it."""
     docs = load_table(spark, src, "documents")
 
     # 1. normalize (narrow, fused into the scan), then featurize BEFORE
@@ -158,8 +161,12 @@ def run(
         admitted, ["source"], [F.col("n_chars").desc(), F.col("doc_id").asc()], cap_k
     )
 
-    # 5. split + 6. profile
-    final = hash_split(capped, "doc_id", [("train", 0.8), ("val", 0.1), ("test", 0.1)])
+    # 5. split + 6. profile. final is persisted: the corpus write
+    # materializes it once, and the profile aggregates the cached rows
+    # instead of re-running the whole dedup/components/admission lineage
+    final = hash_split(
+        capped, "doc_id", [("train", 0.8), ("val", 0.1), ("test", 0.1)]
+    ).persist()
     final.write.mode("overwrite").parquet(f"{out}/corpus")
     profile = final.groupBy("split", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -35,8 +35,18 @@ def tokens(text: Column, lowercase: bool = True) -> Column:
     return F.regexp_extract_all(t, F.lit(TOKEN_PATTERN), 0)
 
 
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """k-word shingles (space-joined) from the token array.
+def word_shingles(toks: Column, k: int = 3) -> Column:
+    """k-word shingles (space-joined) from a token-array column
+    (``tokens(text)``, projected by the caller as its own column).
+
+    The input is the token ARRAY, not the text: the shingle at position
+    i is ``slice(toks, i, k)`` inside a ``transform`` lambda, and a
+    lambda that captured ``tokens(text)`` would re-run the regex over the
+    whole document once per shingle — quadratic in document length
+    (Catalyst does not hoist a lambda-captured expression). Callers
+    therefore project ``tokens(text)`` in a Project of its own and pass
+    that column here, the way the char tier projects its normalized
+    text (operators.dedup.doc_shingle_sets does both).
 
     Built from ``transform`` + ``slice`` over the token array — pure
     Catalyst expressions, no UDF. Documents with 1..k-1 words produce a
@@ -51,14 +61,12 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     "no tokenizable content" is now no shingle evidence on both sides,
     the same principle as NULL text).
     """
-    toks = tokens(text)
     n = F.size(toks)
     # positions 1 .. max(1, n-k+1); slice(toks, i, k) is the shingle at i.
     # The zero-token case is the ONLY one that can emit '' (tokens are
     # \w+ runs, so any real shingle is non-empty) — array_remove drops
     # it in one pass over the tiny shingle array, without a when()
-    # branch that would reference the (non-codegen'd, expensive)
-    # tokenizer expression a third time.
+    # branch that would reference the token array a third time.
     return F.array_remove(
         F.transform(
             F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1))),
@@ -68,11 +76,12 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     )
 
 
-def word_shingle_hashes(text: Column, k: int = 3, bits: int = 31) -> Column:
-    """md5-derived hash per k-word shingle, as one row-wise array — the
-    shuffle-free building block for dedup sketches (the hashes match
-    functions.hashing.md5_int31 / md5_int60 so DuckDB oracles reproduce
-    them). ``bits=31`` is the default because MinHash's mod-p universal
+def word_shingle_hashes(toks: Column, k: int = 3, bits: int = 31) -> Column:
+    """md5-derived hash per k-word shingle of a token-array column (see
+    :func:`word_shingles` for why the input is the array), as one
+    row-wise array — the shuffle-free building block for dedup sketches
+    (the hashes match functions.hashing.md5_int31 / md5_int60 so DuckDB
+    oracles reproduce them). ``bits=31`` is the default because MinHash's mod-p universal
     hashing needs multiplicands below 2^31 (no int64 overflow) and the
     oracles pin it; ``bits=60`` is for the EXACT-Jaccard path at real
     corpus scale, where distinct-shingle counts cross the 2^31 birthday
@@ -82,4 +91,4 @@ def word_shingle_hashes(text: Column, k: int = 3, bits: int = 31) -> Column:
     if bits not in (31, 60):
         raise ValueError(f"bits must be 31 or 60, got {bits}")
     hash_fn = md5_int31 if bits == 31 else md5_int60
-    return F.transform(word_shingles(text, k), hash_fn)
+    return F.transform(word_shingles(toks, k), hash_fn)

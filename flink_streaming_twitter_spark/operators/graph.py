@@ -9,8 +9,9 @@ with a recursive CTE.
 
 Iterative algorithms are driver-coordinated loops over DataFrame ops in
 Spark (no native fixpoint operator): each round is one join + aggregate,
-and convergence is checked with a count. Two scale disciplines encoded
-here:
+and convergence is read from an ``Observation`` on the round's own
+checkpoint job, so no separate count job runs. Two scale disciplines
+encoded here:
 - ``localCheckpoint`` each round truncates the lineage — without it the
   plan doubles per iteration and the job eventually dies in the
   optimizer, the classic iterative-Spark failure;
@@ -31,7 +32,7 @@ round advantage.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -54,8 +55,8 @@ def connected_components(
     # BEFORE the checkpoint would execute that whole pipeline twice (one
     # union arm each) inside the checkpoint job — round 14 measured the
     # evidence pipelines of the dedup_clusters* entries running 2x for
-    # exactly that reason. Checkpointing also keeps every iteration AND
-    # every convergence count from re-executing the pipeline.
+    # exactly that reason. Checkpointing also keeps every iteration from
+    # re-executing the pipeline.
     e1 = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).localCheckpoint()
     sym = e1.union(e1.select(F.col("d").alias("s"), F.col("s").alias("d")))
     # iterate ONLY the edge-endpoint subgraph: isolated vertices are
@@ -81,27 +82,27 @@ def connected_components(
             .groupBy("s")
             .agg(F.min("comp").alias("nbr_comp"))
         )
-        # the improvement flag rides along in the propagation select, so
-        # convergence is a filter-count over the checkpointed rows — no
-        # extra new-vs-old join per round. The checkpoint is LAZY and the
-        # convergence count materializes it: one Spark job per round
-        # instead of two (eager-checkpoint job + count job), halving the
-        # driver round-trips of the whole closure (round 14).
-        stepped = (
+        # convergence rides the round's own job: the observed count of
+        # improved labels is collected by the eager checkpoint that
+        # materializes the round, so no filter-count job re-reads it.
+        # Under AQE the checkpoint is several jobs anyway (one per
+        # shuffle stage), and a separate count added two more per round.
+        # eager=True is required: a lazy checkpoint defers the job past
+        # the convergence test, which would then read 0 and stop the
+        # loop after round 1 with unconverged labels.
+        improved = Observation()
+        labels = (
             labels.join(nbr_min, labels.id == nbr_min.s, "left")
+            .observe(improved, F.count_if(F.col("nbr_comp") < F.col("comp")).alias("n"))
             .select(
                 "id",
                 F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))).alias(
-                    "new_comp"
-                ),
-                (F.coalesce(F.col("nbr_comp") < F.col("comp"), F.lit(False))).alias(
-                    "improved"
+                    "comp"
                 ),
             )
-            .localCheckpoint(eager=False)
+            .localCheckpoint(eager=True)
         )
-        labels = stepped.select("id", F.col("new_comp").alias("comp"))
-        if stepped.filter("improved").count() == 0:
+        if improved.get["n"] == 0:
             return with_singletons(labels)
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 

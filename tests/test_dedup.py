@@ -838,6 +838,68 @@ def test_one_row_per_key_generic_frame_falls_back_to_min_by(spark):
     assert got[2] == (None, None)
 
 
+def test_one_row_per_key_keeps_one_row_for_null_key(spark):
+    """A NULL key is a group like any other: one_row_per_key keeps
+    exactly one row for it, the min-md5 content, as DuckDB's
+    ``arg_min(text, md5(text)) ... GROUP BY doc_id`` does (a plain
+    equi-join back to the winner dropped the whole group)."""
+    import duckdb
+    import pandas as pd
+
+    from flink_streaming_twitter_spark.operators.dedup import _spread, one_row_per_key
+
+    rows = [
+        (None, "null key first body"),
+        (None, "null key second body"),
+        (None, "null key first body"),
+        (None, None),
+        (1, "alpha body"),
+        (1, "beta body"),
+        (2, None),
+    ]
+    df = _spread(spark.createDataFrame(rows, "doc_id LONG, text STRING"), "doc_id")
+    got = sorted(map(tuple, one_row_per_key(df, "doc_id", "text").collect()), key=repr)
+    con = duckdb.connect()
+    frame = pd.DataFrame(rows, columns=["doc_id", "text"]).astype({"doc_id": "Int64"})
+    con.register("documents", frame)
+    want = con.execute(
+        "SELECT doc_id, arg_min(text, md5(text)) FROM documents GROUP BY doc_id"
+    ).fetchall()
+    assert got == sorted(map(tuple, want), key=repr)
+    assert sum(r[0] is None for r in got) == 1
+
+
+def test_one_row_per_key_full_md5_collision_keeps_one_row(spark, monkeypatch):
+    """Under a full 128-bit md5 collision two different contents tie on
+    the digest; one_row_per_key must still emit exactly one row per key
+    (the per-key minimum content), not one per colliding content. The
+    collision is forced by replacing the digest with a constant for the
+    duration of the test."""
+    from pyspark.sql import functions as F
+
+    from flink_streaming_twitter_spark.operators import dedup
+
+    real_md5 = F.md5
+    monkeypatch.setattr(
+        dedup.F, "md5", lambda c: F.when(real_md5(c).isNotNull(), F.lit("0" * 32))
+    )
+    rows = [
+        (1, "zulu body"),
+        (1, "alpha body"),
+        (1, "zulu body"),
+        (2, "only body"),
+        (3, None),
+        (3, "mike body"),
+        (None, "yankee body"),
+        (None, "bravo body"),
+    ]
+    df = dedup._spread(spark.createDataFrame(rows, "doc_id LONG, text STRING"), "doc_id")
+    got = sorted(map(tuple, dedup.one_row_per_key(df, "doc_id", "text").collect()), key=repr)
+    assert got == sorted(
+        [(1, "alpha body"), (2, "only body"), (3, "mike body"), (None, "bravo body")], key=repr
+    )
+
+
 def test_char_shingle_hashes_distinct_grams_equivalence(spark):
     """Round 15: hashing the DISTINCT k-grams (then array_distinct at
     the caller) is bit-identical — order included — to the round-11

@@ -97,6 +97,34 @@ def test_salted_quota_cap_plans_two_phases(plans):
     parts = re.findall(r"hashpartitioning\(([^)]*)\)", p)
     assert any("__salt" in frag and "source" in frag for frag in parts), parts
 
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The balanced-parenthesis argument text of every
+    ``lambdafunction(...)`` in a formatted plan (nested ones included)."""
+    bodies, start = [], plan.find("lambdafunction(")
+    while start != -1:
+        i, depth = start + len("lambdafunction("), 1
+        while depth and i < len(plan):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        bodies.append(plan[start:i])
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
+def test_no_regex_inside_higher_order_lambdas(plans):
+    """A regex captured by a higher-order-function lambda re-runs once
+    per array element: word shingles built from ``tokens(text)`` inside
+    ``transform`` tokenized the whole document once per shingle. The
+    token array must be projected once, outside the lambda."""
+    offenders = sorted(
+        name
+        for name, p in plans.items()
+        if any("regexp_extract_all" in body for body in _lambda_bodies(p))
+    )
+    assert not offenders, offenders
+
+
 def test_aqe_converts_smj_to_broadcast_at_runtime(spark):
     """The third AQE feature the session enables (runtime join re-plan)
     — pinned end-to-end with the two-threshold design Spark ships for

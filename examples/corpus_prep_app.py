@@ -83,8 +83,10 @@ def run(
     can drive it without the app tearing down the shared test JVM).
     Writes ``out``/corpus, ``out``/profile, and the stage-3 cap-loss
     ledger at ``out``/metrics/dedup_cap_loss; returns the profile
-    DataFrame. The split output stays persisted (the returned profile
-    reads it); ``spark.catalog.clearCache()`` releases it."""
+    DataFrame. The exact-dedup survivors and the split output stay
+    persisted (the returned profile reads the latter);
+    ``spark.catalog.clearCache()`` releases both, together with the
+    blocks the dedup operators persist."""
     docs = load_table(spark, src, "documents")
 
     # 1. normalize (narrow, fused into the scan), then featurize BEFORE
@@ -98,8 +100,11 @@ def run(
         F.length("norm_text").alias("n_chars"),
     )
 
-    # 2. exact dedup: keep-first per digest
-    exact_kept = cap_per_key(feat, ["digest"], [F.col("doc_id").asc()], 1)
+    # 2. exact dedup: keep-first per digest. Persisted: the LSH input,
+    # the components' node table and near_kept all read it, and
+    # unpersisted the corpus write rebuilt it (scan, normalize, window
+    # limit) once for each of the last two
+    exact_kept = cap_per_key(feat, ["digest"], [F.col("doc_id").asc()], 1).persist()
 
     # 3. near dedup on the exact survivors: LSH pairs → components →
     # keep the cluster minimum. accounting=True also returns the

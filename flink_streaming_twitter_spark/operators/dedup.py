@@ -29,7 +29,10 @@ reproduce results bit-for-bit.
 
 Caching contract: the candidate-generation paths ``persist()`` their
 shared self-join inputs (shingle sets, banded signatures, the PPJoin
-prefix, SimHash fingerprints) and deliberately do NOT unpersist them —
+prefix, SimHash fingerprints) — ``ngram_jaccard_pairs`` also the
+exploded ``(doc_id, sz, sh)`` frame, about one row per shingle, that its
+document-frequency and prefix subtrees share — and deliberately do NOT
+unpersist them —
 the returned DataFrames are lazy and still reference the cached plans.
 A caller that invokes these operators repeatedly in one long-lived
 session must drop the accumulated blocks between invocations

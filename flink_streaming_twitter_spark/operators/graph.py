@@ -10,8 +10,13 @@ with a recursive CTE.
 Iterative algorithms are driver-coordinated loops over DataFrame ops in
 Spark (no native fixpoint operator): each round is one join + aggregate,
 and convergence is read from an ``Observation`` on the round's own
-checkpoint job, so no separate count job runs. Two scale disciplines
-encoded here:
+checkpoint job, so no separate count job runs. Labels start at each
+node's neighbourhood minimum (one aggregate over the edge list, no
+join), which is exactly what the first join round of a start at the
+node's own id computes; ``stats["rounds"]`` counts the join rounds after
+that start, the last of which only confirms the fixpoint (a clique
+converges in 1 round, a star whose minimum is a leaf in 2). Two scale
+disciplines encoded here:
 - ``localCheckpoint`` each round truncates the lineage — without it the
   plan doubles per iteration and the job eventually dies in the
   optimizer, the classic iterative-Spark failure;
@@ -24,7 +29,7 @@ encoded here:
   are long (e.g. transitive near-dup chains across crawl snapshots).
 
 ``dedup_clusters`` keeps plain propagation: near-dup components are
-shallow stars/cliques where it converges in 2-3 rounds, fewer total
+shallow stars/cliques where it converges in 1-2 rounds, fewer total
 stages than star's two jobs per round. The star variant is the escape
 hatch the docstring used to only name; the deep-chain test pins the
 round advantage.
@@ -47,7 +52,8 @@ def connected_components(
     """(id, comp) for every node, comp = min node id reachable (undirected).
 
     ``nodes`` optionally supplies isolated vertices (no edges), each its
-    own singleton component. Raises if max_iter rounds don't converge.
+    own singleton component. Raises if max_iter rounds don't converge;
+    ``stats["rounds"]`` reports the join rounds used.
     """
     # materialize the DIRECTED edge list ONCE, then symmetrize from the
     # checkpointed blocks: the upstream lineage is typically the expensive
@@ -63,10 +69,21 @@ def connected_components(
     # singleton components by definition and joining them through every
     # round is wasted work (most documents are isolated in a near-dup
     # graph); they are appended after convergence
-    active = sym.select(F.col("s").alias("id")).distinct()
-    # lazy: materialized by the blocks of whichever round-1 job reads it
+    # each endpoint starts at the minimum of itself and its neighbours:
+    # the result of a first join round from comp = id, from one
+    # aggregate. A NULL id keeps a NULL label, as that round leaves it.
+    # Lazy: materialized by the blocks of whichever round-1 job reads it
     # first (labels is tiny — one row per edge endpoint)
-    labels = active.select("id", F.col("id").alias("comp")).localCheckpoint(eager=False)
+    labels = (
+        sym.groupBy("s")
+        .agg(F.min("d").alias("m"))
+        .select(
+            F.col("s").alias("id"),
+            F.when(F.col("s").isNotNull(), F.least("s", "m")).alias("comp"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    active = labels.select("id")
 
     def with_singletons(converged: DataFrame) -> DataFrame:
         if nodes is None:

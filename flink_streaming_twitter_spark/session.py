@@ -12,7 +12,18 @@ Spark parallelize and encode the scale knobs here so every entry point
 - broadcast threshold left at default 10 MB — dimension tables (region,
   nation, customer at test SF) broadcast automatically; plans additionally
   mark known-small sides with an explicit ``broadcast()`` hint so the plan
-  survives stale/absent stats at 100 TB.
+  survives stale/absent stats at 100 TB;
+- PySpark's per-call DataFrame debugging off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every ``functions.*``/DataFrame call is wrapped in ``_with_origin``
+  (``pyspark/errors/utils.py``), which reads the active session and a
+  conf, sets and clears the JVM's ``PySparkCurrentOrigin`` over py4j and
+  captures the Python stack — about half of the py4j round trips a
+  ``corpus_prep_app.run`` makes while building its plans. The trade-off:
+  errors raised in the JVM (analysis errors, ANSI runtime errors) no
+  longer carry the Python call site of the expression that caused them.
+  PySpark caches the setting per process on the first wrapped call, so
+  a process that built a session without it keeps capturing.
 """
 
 from __future__ import annotations
@@ -57,6 +68,7 @@ def build_session(
         # timestamp — read as int64 nanos, converted in sources/files.py
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

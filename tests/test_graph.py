@@ -74,3 +74,21 @@ def test_star_needs_far_fewer_rounds_on_deep_chain(spark):
     assert plain_stats["rounds"] >= 16  # one hop per round
     assert star_stats["rounds"] <= 6  # logarithmic contraction
     assert star_stats["rounds"] < plain_stats["rounds"]
+
+
+def test_neighbour_minimum_start_saves_a_join_round(spark):
+    """Labels start at each node's neighbourhood minimum, so a clique is
+    labelled before the first join round (which only confirms it) and a
+    star whose minimum is a leaf needs one round to carry that minimum
+    from the centre to the other leaves, plus the confirming round."""
+    triangle = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], ["src", "dst"])
+    stats: dict = {}
+    out = {r.id: r.comp for r in connected_components(triangle, stats=stats).collect()}
+    assert out == {1: 1, 2: 1, 3: 1}
+    assert stats["rounds"] == 1
+
+    star = spark.createDataFrame([(5, 1), (5, 6), (5, 7), (5, 8)], ["src", "dst"])
+    stats = {}
+    out = {r.id: r.comp for r in connected_components(star, stats=stats).collect()}
+    assert out == {1: 1, 5: 1, 6: 1, 7: 1, 8: 1}
+    assert stats["rounds"] == 2

@@ -1,9 +1,9 @@
 """Deduplication operators for training-data pipelines.
 
 Four tiers, all pure DataFrame compositions (the single exception: the
-char-shingle mode's OPTIONAL Unicode NFC step reuses textops' Arrow-
-batched pandas_udf — Spark has no built-in NFC — and even that belongs
-at ingest; every hash/shingle/join is JVM-side Column code):
+char-shingle mode's Unicode NFC step reuses textops' Arrow-batched
+pandas_udf — Spark has no built-in NFC — on its non-ASCII rows only;
+every hash/shingle/join is JVM-side Column code):
 
 - exact: hash-groupBy on normalized text — one shuffle of (hash, id).
 - MinHash + LSH banding: near-dup candidate generation whose cost is the
@@ -27,6 +27,13 @@ at ingest; every hash/shingle/join is JVM-side Column code):
 Every hash is md5-derived (functions/hashing.py) so the DuckDB oracle can
 reproduce results bit-for-bit.
 
+Each shared step has one definition: the band-bucket self-join of the
+MinHash-LSH and SimHash tiers (_bucket_self_join), the bucket-occupancy
+aggregate behind both the cap and its loss ledger (oversized_buckets),
+the exact-Jaccard verifier of the two exact tiers (_verified_jaccard),
+and the text cleanup chain of the char tier (textops.clean_text, the
+corpus normalize pass's own chain).
+
 Caching contract: the candidate-generation paths ``persist()`` their
 shared self-join inputs (shingle sets, banded signatures, the PPJoin
 prefix, SimHash fingerprints) — ``ngram_jaccard_pairs`` also the
@@ -42,6 +49,9 @@ do) or accept growing storage-memory pressure.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -51,18 +61,17 @@ from ..functions.text import tokens, word_shingle_hashes
 SIMHASH_BITS = 60
 SIMHASH_BAND_BITS = 15
 
-# Default cap on MinHash-LSH band-bucket occupancy (cap_bucket_size).
+# Default cap on MinHash-LSH band-bucket occupancy (_bucket_self_join).
 # Measured occupancy on the gate corpora is tiny — max 4 docs/bucket at
 # sf0.1, 3 at sf0.01 (19k/1.9k buckets; see SCALE.md) — so 1024 is ~250×
 # headroom above any genuine near-dup bucket while bounding the worst
 # boilerplate bucket's contribution to ~520k candidate pairs instead of
 # quadratic blowup. Docs dropped this way are site chrome / license
 # boilerplate and belong to the exact-dedup track (they are near-identical
-# by construction). SimHash deliberately does NOT get this default: its
-# 15-bit band keys make heavy occupancy structural (sf0.1 max 1582), and
-# its per-candidate verify is a single xor+bit_count, not a set
-# intersection — capping there silently loses true Hamming<=3 pairs, so
-# it stays opt-in via the max_bucket parameter.
+# by construction). SimHash is uncapped: its 15-bit band keys make heavy
+# occupancy structural (sf0.1 max 1582), and its per-candidate verify is
+# a single xor+bit_count, not a set intersection — capping there would
+# silently lose true Hamming<=3 pairs.
 DEFAULT_LSH_MAX_BUCKET = 1024
 
 
@@ -228,14 +237,11 @@ def one_row_per_key(df: DataFrame, key_col: str, content_col: str) -> DataFrame:
 CHAR_EVIDENCE_PATTERN = r"[^\s\x00-\x1f\x7f]"
 
 
-def char_normalized_text(text: F.Column, nfc: bool = True) -> F.Column:
-    """The canonical corpus cleanup chain as one Column — IDENTICAL
-    steps and order to operators/textops.normalize_text (NFC → lower →
-    collapse ``\\s+`` to one space → strip C0/DEL controls → trim), so
-    char shingles are computed over exactly the text the corpus-prep
-    pipeline persists. ``nfc=False`` drops the Arrow-batched Python NFC
-    stage for pre-normalized input — the deploy shape: run NFC once at
-    ingest (q_text_normalize_nfc), feed the persisted norm_text here.
+def char_normalized_text(text: F.Column) -> F.Column:
+    """The char tier's text: Unicode NFC, then the corpus cleanup chain
+    (operators/textops.clean_text — the chain normalize_text applies),
+    so char shingles are computed over exactly the text the corpus-prep
+    pipeline persists with ``nfc=True``.
 
     ASCII mask (round 15, guide §4 "pass only the columns the function
     needs" taken down to the BYTES the function needs): NFC is the
@@ -252,21 +258,11 @@ def char_normalized_text(text: F.Column, nfc: bool = True) -> F.Column:
     corpus's ASCII share), the only component of the stage that grows
     with data volume. Bit-exact by the identity (pinned by
     test_char_nfc_ascii_mask_is_exact)."""
-    from .textops import nfc_udf
+    from .textops import clean_text, nfc_udf
 
-    if nfc:
-        is_ascii = F.octet_length(text) == F.length(text)
-        normalized = nfc_udf()(F.when(is_ascii, F.lit(None)).otherwise(text))
-        base = F.when(is_ascii, text).otherwise(normalized)
-    else:
-        base = text
-    return F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(base), "\\s+", " "),
-            "[\\x00-\\x1f\\x7f]",
-            "",
-        )
-    )
+    is_ascii = F.octet_length(text) == F.length(text)
+    normalized = nfc_udf()(F.when(is_ascii, F.lit(None)).otherwise(text))
+    return clean_text(F.when(is_ascii, text).otherwise(normalized))
 
 
 def char_shingle_hashes(norm_text: F.Column, k: int = 5, bits: int = 31) -> F.Column:
@@ -308,10 +304,10 @@ def char_shingle_hashes(norm_text: F.Column, k: int = 5, bits: int = 31) -> F.Co
     return F.transform(grams, hash_fn)
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """One surviving row per distinct normalized text: (kept_doc_id = min
-    id, dup_cnt). Shuffle carries only (128-bit key, id) pairs; partial
-    min/count collapse duplicates map-side.
+def exact_dedup(docs: DataFrame) -> DataFrame:
+    """One surviving row per distinct normalized ``text``: (kept_doc_id =
+    min doc_id, dup_cnt). Shuffle carries only (128-bit key, id) pairs;
+    partial min/count collapse duplicates map-side.
 
     NULL text takes no part in dedup — the family convention (the shingle
     tiers filter it, SimHash drops it via explode). Without the filter,
@@ -323,21 +319,18 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     operator and oracle agree by construction on NULL-bearing corpora,
     not just on the NULL-free gate data."""
     return (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(normalized_text_key(F.col(text_col)).alias("text_key"), F.col(id_col))
+        docs.filter(F.col("text").isNotNull())
+        .select(normalized_text_key(F.col("text")).alias("text_key"), F.col("doc_id"))
         .groupBy("text_key")
-        .agg(F.min(id_col).alias("kept_doc_id"), F.count(F.lit(1)).alias("dup_cnt"))
+        .agg(F.min("doc_id").alias("kept_doc_id"), F.count(F.lit(1)).alias("dup_cnt"))
     )
 
 
 def doc_shingle_sets(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     hash_bits: int = 31,
     shingle_mode: str = "word",
-    nfc: bool = True,
 ) -> DataFrame:
     """(doc_id, shs ARRAY<LONG>, sz) — each document's DISTINCT shingle-hash
     set as a packed array, computed entirely ROW-WISE
@@ -392,8 +385,7 @@ def doc_shingle_sets(
     (⟺ cleaned text non-empty — see its comment for why not
     ``length > 0`` on the cleaned column); whitespace-only,
     control-only, and empty texts take part in no tier, same contract
-    as word mode. ``nfc=False`` skips the Python NFC stage for
-    pre-normalized input (the ingest-once deploy shape)."""
+    as word mode."""
     # duplicate-key contract (round 11): shingle EVIDENCE belongs to the
     # document KEY, not the ingested row — at-least-once re-delivery of
     # the same doc_id must be a no-op (it used to emit duplicate pairs
@@ -402,22 +394,19 @@ def doc_shingle_sets(
     # oracles' DISTINCT used to chimera-merge conflicting texts'
     # shingles instead). groupBy(id) rides the _spread hash partitioning
     # — no additional exchange.
-    resolved = one_row_per_key(
-        _spread(docs.select(id_col, text_col), id_col), id_col, text_col
-    )
+    resolved = one_row_per_key(_spread(docs.select("doc_id", "text"), "doc_id"), "doc_id", "text")
+    text = F.col("text")
     if shingle_mode == "word":
-        keep = F.col(text_col).isNotNull() & F.lower(F.col(text_col)).rlike(r"\w")
+        keep = text.isNotNull() & F.lower(text).rlike(r"\w")
         # materialize the token array as its own projected column: the
         # shingle lambda reads it once per shingle, and a lambda that
         # captured tokens(text) would re-run the regex over the whole
         # document each time (the sequence bound reads it too, so
         # CollapseProject keeps this Project separate)
-        base = resolved.filter(keep).select(
-            F.col(id_col), tokens(F.col(text_col)).alias("_tk")
-        )
+        base = resolved.filter(keep).select(F.col("doc_id"), tokens(text).alias("_tk"))
         shs = F.array_distinct(word_shingle_hashes(F.col("_tk"), k, bits=hash_bits))
     elif shingle_mode == "char":
-        keep = F.col(text_col).isNotNull() & F.col(text_col).rlike(CHAR_EVIDENCE_PATTERN)
+        keep = text.isNotNull() & text.rlike(CHAR_EVIDENCE_PATTERN)
         # materialize the normalized text as its own projected column:
         # Spark cannot evaluate a Python UDF inside a higher-order-
         # function lambda (UNSUPPORTED_FEATURE.LAMBDA_FUNCTION_WITH_
@@ -425,25 +414,22 @@ def doc_shingle_sets(
         # ONCE per row instead of once per reference in the shingle
         # expression (the sequence bound and the lambda both read it)
         base = resolved.filter(keep).select(
-            F.col(id_col), char_normalized_text(F.col(text_col), nfc=nfc).alias("_nt")
+            F.col("doc_id"), char_normalized_text(text).alias("_nt")
         )
         shs = F.array_distinct(char_shingle_hashes(F.col("_nt"), k, bits=hash_bits))
     else:
         raise ValueError(f"shingle_mode must be 'word' or 'char', got {shingle_mode!r}")
-    return (
-        base.select(F.col(id_col), shs.alias("shs"))
-        .withColumn("sz", F.size("shs"))
-    )
+    return base.select(F.col("doc_id"), shs.alias("shs")).withColumn("sz", F.size("shs"))
 
 
-def minhash_signatures(sets: DataFrame, num_perm: int, id_col: str = "doc_id") -> DataFrame:
+def minhash_signatures(sets: DataFrame, num_perm: int) -> DataFrame:
     """(doc_id, mh0..mh{n-1}, mhs ARRAY) — one row per doc, computed
     ROW-WISE from the packed shingle set (`array_min(transform(shs, ...))`
     per permutation): no explode, no aggregation shuffle. num_perm × |shs|
     integer ops per document is trivial next to moving the exploded
     (doc, shingle) pairs through an exchange."""
     sig = sets.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[h.alias(f"mh{i}") for i, h in enumerate(minhash_set_exprs("shs", num_perm))],
     )
     return sig.withColumn("mhs", F.array(*[F.col(f"mh{i}") for i in range(num_perm)]))
@@ -453,10 +439,9 @@ def banded_signatures(
     signatures: DataFrame,
     num_perm: int,
     bands: int,
-    id_col: str = "doc_id",
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, [carry...], band, sig) — one row per (doc, band), where sig is
+    """(doc_id, [carry...], band, sig) — one row per (doc, band), where sig is
     the concatenated row hashes of that band. One narrow explode pass;
     shared by the candidate join and by tests that need to reason about
     bucket occupancy without re-deriving the band layout."""
@@ -471,35 +456,62 @@ def banded_signatures(
         ]
     )
     return signatures.select(
-        F.col(id_col), *[F.col(c) for c in carry], F.explode(band_structs).alias("bs")
-    ).select(id_col, *carry, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
+        F.col("doc_id"), *[F.col(c) for c in carry], F.explode(band_structs).alias("bs")
+    ).select("doc_id", *carry, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
 
 
-def _dropped_bucket_metrics(
+def _bucket_self_join(
     banded: DataFrame, bucket_cols: list[str], max_bucket: int | None
-) -> DataFrame:
-    """The accounting twin of cap_bucket_size over the SAME pre-cap banded
-    input: one row per bucket key the cap drops, with its occupancy.
-    ``max_bucket=None`` (cap disabled) yields a statically-empty frame of
-    the same schema (Catalyst prunes the literal-false filter to an empty
-    relation — no scan is scheduled)."""
-    if max_bucket is None:
-        return (
-            banded.groupBy(*bucket_cols)
-            .agg(F.count(F.lit(1)).alias("occupancy"))
-            .filter(F.lit(False))
-        )
-    return oversized_buckets(banded, bucket_cols, max_bucket)
+) -> tuple[DataFrame, DataFrame]:
+    """The band-bucket self-join every banded tier shares: cap the banded
+    frame, join it to itself on ``bucket_cols`` with ``a.doc_id <
+    b.doc_id`` (sides aliased ``a`` and ``b``), and return the joined
+    frame with the dropped-bucket ledger (oversized_buckets over the same
+    pre-cap input). Each caller projects, verifies and distincts the
+    joined rows itself, and decides itself whether to persist ``banded``.
+
+    The cap is the boilerplate escape hatch: bucket keys with more than
+    ``max_bucket`` members are dropped before the quadratic join. A
+    bucket of b docs contributes b(b−1)/2 candidate pairs, so one
+    boilerplate bucket (site chrome, license headers) dominates the whole
+    join at scale; capped buckets are overwhelmingly such boilerplate and
+    belong in a separate exact-dedup track. ``None`` disables. Since
+    round 7 the MinHash-LSH paths default to DEFAULT_LSH_MAX_BUCKET —
+    the oracle-checked queries run WITH the cap, which is measured inert
+    on every gate corpus (plans/dedup.py module docstring), so DuckDB
+    still reproduces them exactly."""
+    dropped = oversized_buckets(banded, bucket_cols, max_bucket)
+    capped = banded
+    if max_bucket is not None:
+        # Anti-join against the OVERSIZED key set, not semi-join against
+        # the small-bucket set: oversized buckets are few by definition
+        # (zero on every measured corpus, ~1 per boilerplate family
+        # otherwise), so the broadcast build side is near-empty regardless
+        # of corpus size, where a semi-join's build side is the full
+        # bucket-key set (grows with the corpus and eventually stops
+        # broadcasting). At sf0.1 the forms are equal within noise —
+        # quiet-machine min-over-2: anti 1.03 s, semi 1.12 s, uncapped
+        # 1.19 s (SCALE.md "cap filter cost", r8); the earlier 1.7 s-class
+        # readings were cold-JIT first passes. The anti-join is chosen for
+        # the structural build-side bound, and the occupancy aggregate
+        # (one row per bucket, the same frame as the ledger) is the cap's
+        # only real cost.
+        capped = banded.join(F.broadcast(dropped.drop("occupancy")), bucket_cols, "left_anti")
+    a, b = capped.alias("a"), capped.alias("b")
+    on = reduce(
+        and_,
+        [F.col(f"a.{c}") == F.col(f"b.{c}") for c in bucket_cols]
+        + [F.col("a.doc_id") < F.col("b.doc_id")],
+    )
+    return a.join(b, on), dropped
 
 
 def lsh_candidate_pairs(
     signatures: DataFrame,
     num_perm: int,
     bands: int,
-    id_col: str = "doc_id",
     max_bucket: int | None = DEFAULT_LSH_MAX_BUCKET,
-    accounting: bool = False,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Band the signature, bucket-join per band → distinct (doc_a, doc_b).
 
     Banding uses explode over an array of (band, concatenated row hashes)
@@ -509,41 +521,23 @@ def lsh_candidate_pairs(
     shuffle, and buckets larger than ``max_bucket`` (default
     DEFAULT_LSH_MAX_BUCKET — measured ~250× above genuine near-dup
     occupancy) are dropped before the quadratic join; route their members
-    through the exact-dedup track instead. ``None`` disables.
-
-    ``accounting=True`` returns ``(pairs, dropped_buckets)`` where the
-    second frame is one row per dropped (band, sig) key with its
-    occupancy (pair loss of a bucket of n is ≤ n(n−1)/2) — the loss
-    ledger a deploy pipeline should sink to its metrics table, built
-    from the same banded lineage with no extra plan code at the caller
-    (ADVICE r8: the separate opt-in ``oversized_buckets`` call meant a
-    binding cap could silently lose pairs when nobody wired it up).
+    through the exact-dedup track instead. ``None`` disables. The loss
+    ledger of the cap comes with minhash_lsh_dedup(accounting=True).
     """
-    # persist the BANDED table, not (only) the upstream signatures: four
-    # lineages read it — the occupancy aggregate inside cap_bucket_size,
-    # the two self-join sides, and (under accounting) the dropped-bucket
-    # ledger — and AQE re-plans each subtree independently, so without
-    # the cache the banding explode executes up to four times per query
-    # (both Generate nodes and both occupancy aggregates appear in
-    # plans/r14/dedup_lsh_exact_before.txt @ a8b586f; interleaved A/B in
-    # tools/ab_lsh_banded.py @ 6000c78). One (id, band, sig) row per (doc, band)
-    # is a few dozen bytes × bands per doc — trivial next to the text.
-    banded = banded_signatures(signatures, num_perm, bands, id_col).persist()
-    capped = cap_bucket_size(banded, ["band", "sig"], max_bucket)
-    a, b = capped.alias("a"), capped.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
-        .distinct()
-    )
-    if accounting:
-        return pairs, _dropped_bucket_metrics(banded, ["band", "sig"], max_bucket)
-    return pairs
+    # persist the BANDED table, not (only) the upstream signatures: three
+    # lineages read it — the occupancy aggregate behind the cap and the
+    # two self-join sides — and AQE re-plans each subtree
+    # independently, so without the cache the banding explode executes
+    # once per reader (both Generate nodes and both occupancy aggregates
+    # appear in plans/r14/dedup_lsh_exact_before.txt @ a8b586f;
+    # interleaved A/B in tools/ab_lsh_banded.py @ 6000c78). One (id, band,
+    # sig) row per (doc, band) is a few dozen bytes × bands per doc —
+    # trivial next to the text.
+    banded = banded_signatures(signatures, num_perm, bands).persist()
+    joined, _ = _bucket_self_join(banded, ["band", "sig"], max_bucket)
+    return joined.select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    ).distinct()
 
 
 def minhash_lsh_dedup(
@@ -559,9 +553,14 @@ def minhash_lsh_dedup(
     """Candidate near-dup pairs with estimated Jaccard (fraction of equal
     minhashes) ≥ threshold: (doc_a, doc_b, est_jaccard).
 
-    ``accounting=True`` additionally returns the dropped-bucket ledger —
-    see lsh_candidate_pairs; deploy callers get cap-loss visibility
-    without a second manual ``oversized_buckets`` call.
+    ``accounting=True`` returns ``(pairs, dropped_buckets)`` where the
+    second frame is one row per (band, sig) key the cap dropped, with its
+    occupancy (pair loss of a bucket of n is ≤ n(n−1)/2; empty, same
+    schema, when ``max_bucket`` is None) — the loss ledger a deploy
+    pipeline sinks to its metrics table, built from the same banded
+    lineage with no extra plan code at the caller (ADVICE r8: a separate
+    opt-in ``oversized_buckets`` call meant a binding cap could silently
+    lose pairs when nobody wired it up).
     ``shingle_mode="char"``: the multilingual evidence base (character
     k-grams over normalized text — doc_shingle_sets); banding, capping,
     and the estimated-Jaccard filter are identical."""
@@ -570,7 +569,7 @@ def minhash_lsh_dedup(
     # must be materialized once (unpersisted, the tokenize+hash pipeline
     # measured 3.5x on the banded join). Round 14 moves the cache from
     # the signature table to the BANDED table one step downstream: the
-    # occupancy aggregate inside cap_bucket_size and both self-join
+    # occupancy aggregate behind the cap and both self-join
     # sides all read the banded rows, so caching before the banding
     # explode still ran the explode (and the aggregate's copy of it) per
     # consumer — see lsh_candidate_pairs, whose before-plan shows the
@@ -583,19 +582,12 @@ def minhash_lsh_dedup(
     # Carry the packed signature array through the band self-join so the
     # estimated Jaccard needs NO extra signature joins.
     banded = banded_signatures(sigs, num_perm, bands, carry=("mhs",)).persist()
-    capped = cap_bucket_size(banded, ["band", "sig"], max_bucket)
-    a, b = capped.alias("a"), capped.alias("b")
+    joined, dropped = _bucket_self_join(banded, ["band", "sig"], max_bucket)
     n_eq = F.size(
         F.filter(F.zip_with(F.col("a.mhs"), F.col("b.mhs"), lambda x, y: x == y), lambda v: v)
     )
     pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
+        joined.select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
             (n_eq / F.lit(float(num_perm))).alias("est_jaccard"),
@@ -603,9 +595,23 @@ def minhash_lsh_dedup(
         .distinct()
         .filter(F.col("est_jaccard") >= est_threshold)
     )
-    if accounting:
-        return pairs, _dropped_bucket_metrics(banded, ["band", "sig"], max_bucket)
-    return pairs
+    return (pairs, dropped) if accounting else pairs
+
+
+def _verified_jaccard(cands: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard of candidate pairs (doc_a, doc_b) over the packed
+    shingle sets of doc_shingle_sets — one array_intersect per pair:
+    (doc_a, doc_b, jaccard), jaccard ≥ threshold."""
+    seta = sets.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a"), F.col("sz").alias("sz_a"))
+    setb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b"), F.col("sz").alias("sz_b"))
+    inter = F.size(F.array_intersect(F.col("shs_a"), F.col("shs_b")))
+    jac = inter / (F.col("sz_a") + F.col("sz_b") - inter)
+    return (
+        cands.join(seta, "doc_a")
+        .join(setb, "doc_b")
+        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def lsh_verified_jaccard(
@@ -614,10 +620,8 @@ def lsh_verified_jaccard(
     bands: int = 4,
     threshold: float = 0.5,
     shingle_k: int = 3,
-    max_bucket: int | None = DEFAULT_LSH_MAX_BUCKET,
-    accounting: bool = False,
     shingle_mode: str = "word",
-) -> DataFrame | tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """The two-tier 100 TB near-dup pipeline: MinHash-LSH candidate
     generation (cost ∝ band-bucket occupancy) followed by EXACT Jaccard
     verification over packed shingle sets (one array_intersect per
@@ -628,16 +632,12 @@ def lsh_verified_jaccard(
     The recall bound has TWO terms since the default bucket cap
     (round 7): a true pair is missed if it collides in no band —
     P(miss) = (1−J^rows)^bands, <3% at J=0.7 with 4×4 — OR if its every
-    band collision lands in a bucket larger than ``max_bucket`` (such
-    pairs are dropped silently; on genuine data this term is zero —
-    the cap is ~250× above measured occupancy — and it targets only
-    boilerplate families, which belong to the exact-dedup track). For
-    deploy loss accounting, pass ``accounting=True``: the return becomes
-    ``(pairs, dropped_buckets)`` with the dropped (band, sig) keys and
-    occupancies from the same banded lineage — sink that frame to the
-    pipeline's metrics table so a binding cap can never lose pairs
-    silently (``oversized_buckets`` remains for ad-hoc audits of other
-    banded inputs). The measured 10× stress showed
+    band collision lands in a bucket larger than DEFAULT_LSH_MAX_BUCKET
+    (such pairs are dropped silently; on genuine data this term is zero
+    — the cap is ~250× above measured occupancy — and it targets only
+    boilerplate families, which belong to the exact-dedup track; the
+    loss ledger of the same cap comes with
+    minhash_lsh_dedup(accounting=True)). The measured 10× stress showed
     the exact join's candidates grow ~quadratically on correlated corpora
     while LSH buckets stay linear, and the round-5 ×100 stress confirmed
     it at a second decade: 29.9 s vs the sized exact join's 334.7 s on
@@ -649,23 +649,8 @@ def lsh_verified_jaccard(
     deploy twin.)
     """
     sets = doc_shingle_sets(docs, k=shingle_k, shingle_mode=shingle_mode).persist()
-    sigs = minhash_signatures(sets, num_perm)
-    cands, dropped = lsh_candidate_pairs(
-        sigs, num_perm, bands, max_bucket=max_bucket, accounting=True
-    )
-    seta = sets.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a"), F.col("sz").alias("sz_a"))
-    setb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b"), F.col("sz").alias("sz_b"))
-    inter = F.size(F.array_intersect(F.col("shs_a"), F.col("shs_b")))
-    jac = inter / (F.col("sz_a") + F.col("sz_b") - inter)
-    verified = (
-        cands.join(seta, "doc_a")
-        .join(setb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    if accounting:
-        return verified, dropped
-    return verified
+    cands = lsh_candidate_pairs(minhash_signatures(sets, num_perm), num_perm, bands)
+    return _verified_jaccard(cands, sets, threshold)
 
 
 def ngram_jaccard_pairs(
@@ -690,7 +675,8 @@ def ngram_jaccard_pairs(
     frequency. A **length filter** (min(sz) ≥ t·max(sz), necessary for
     J ≥ t) prunes candidates at join time before the distinct.
 
-    Verification joins each candidate pair to the two packed shingle-set
+    Verification (_verified_jaccard, shared with lsh_verified_jaccard)
+    joins each candidate pair to the two packed shingle-set
     arrays and computes the exact intersection ROW-WISE with
     `array_intersect` — replacing the exploded verify join (candidates ×
     avg set size rows through a shuffle + re-aggregation) with one ~200 B
@@ -769,21 +755,10 @@ def ngram_jaccard_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    seta = sets.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a"), F.col("sz").alias("sz_a"))
-    setb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b"), F.col("sz").alias("sz_b"))
-    inter = F.size(F.array_intersect(F.col("shs_a"), F.col("shs_b")))
-    jac = inter / (F.col("sz_a") + F.col("sz_b") - inter)
-    return (
-        cands.join(seta, "doc_a")
-        .join(setb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _verified_jaccard(cands, sets, threshold)
 
 
-def simhash_fingerprints(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     """60-bit SimHash per doc from distinct-token bit votes: (doc_id,
     simhash BIGINT). One explode + one hash aggregate with 60 conditional
     sums — wide but shallow, fully codegen'd, no UDF. Repartitioned by id
@@ -802,14 +777,14 @@ def simhash_fingerprints(
     twice where DuckDB counted it once, a divergence waiting for the
     first vote-sum near zero."""
     tok = (
-        one_row_per_key(_spread(docs.select(id_col, text_col), id_col), id_col, text_col)
+        one_row_per_key(_spread(docs.select("doc_id", "text"), "doc_id"), "doc_id", "text")
         .select(
-            F.col(id_col),
-            F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
+            F.col("doc_id"),
+            F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok"),
         )
-        .select(id_col, md5_int60(F.col("tok")).alias("h"))
+        .select("doc_id", md5_int60(F.col("tok")).alias("h"))
     )
-    votes = tok.groupBy(id_col).agg(
+    votes = tok.groupBy("doc_id").agg(
         *[
             F.sum(
                 F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -821,77 +796,32 @@ def simhash_fingerprints(
         F.when(F.col(f"v{j}") > 0, F.lit(1 << j).cast("long")).otherwise(F.lit(0).cast("long"))
         for j in range(SIMHASH_BITS)
     )
-    return votes.select(F.col(id_col), fp.alias("simhash"))
-
-
-def cap_bucket_size(
-    banded: DataFrame, bucket_cols: list[str], max_bucket: int | None
-) -> DataFrame:
-    """Boilerplate escape hatch for banded self-joins: drop bucket keys
-    containing more than ``max_bucket`` members before the quadratic
-    join. A bucket of b docs contributes b(b−1)/2 candidate pairs, so one
-    boilerplate bucket (site chrome, license headers) dominates the whole
-    join at scale; capped buckets are overwhelmingly such boilerplate and
-    belong in a separate exact-dedup track. ``None`` disables. Since
-    round 7 the MinHash-LSH paths default to DEFAULT_LSH_MAX_BUCKET —
-    the oracle-checked queries run WITH the cap, which is measured inert
-    on every gate corpus (plans/dedup.py module docstring), so DuckDB
-    still reproduces them exactly.
-    """
-    if max_bucket is None:
-        return banded
-    # Anti-join against the OVERSIZED key set, not semi-join against the
-    # small-bucket set: oversized buckets are few by definition (zero on
-    # every measured corpus, ~1 per boilerplate family otherwise), so the
-    # broadcast build side is near-empty regardless of corpus size,
-    # where a semi-join's build side is the full bucket-key set (grows
-    # with the corpus and eventually stops broadcasting). At sf0.1 the
-    # forms are equal within noise — quiet-machine min-over-2: anti
-    # 1.03 s, semi 1.12 s, uncapped 1.19 s (SCALE.md "cap filter cost",
-    # r8); the earlier 1.7 s-class readings were cold-JIT first passes.
-    # The anti-join is chosen for the structural build-side bound, and
-    # the occupancy aggregate (one row per bucket) is the cap's only
-    # real cost.
-    over = (
-        banded.groupBy(*bucket_cols)
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .filter(F.col("_bn") > max_bucket)
-        .drop("_bn")
-    )
-    return banded.join(F.broadcast(over), bucket_cols, "left_anti")
+    return votes.select(F.col("doc_id"), fp.alias("simhash"))
 
 
 def oversized_buckets(
-    banded: DataFrame, bucket_cols: list[str], max_bucket: int
+    banded: DataFrame, bucket_cols: list[str], max_bucket: int | None
 ) -> DataFrame:
-    """Drop-accounting companion to cap_bucket_size: the bucket keys a cap
-    of ``max_bucket`` would remove, with their occupancy (the pair loss of
-    a bucket of n is at most n(n-1)/2). Run this against the same banded
-    input to log exactly what the cap dropped — at deploy scale, sink this
-    to the pipeline's metrics table alongside the dedup output."""
-    return (
-        banded.groupBy(*bucket_cols)
-        .agg(F.count(F.lit(1)).alias("occupancy"))
-        .filter(F.col("occupancy") > max_bucket)
-    )
+    """The bucket-occupancy aggregate: the bucket keys a cap of
+    ``max_bucket`` removes, with their occupancy (the pair loss of a
+    bucket of n is at most n(n-1)/2). The bucket cap of _bucket_self_join
+    anti-joins against it, and minhash_lsh_dedup(accounting=True) returns
+    the same frame as the cap's loss ledger — at deploy scale, sink it to
+    the pipeline's metrics table alongside the dedup output.
+    ``max_bucket=None`` (cap disabled) yields a statically-empty frame of
+    the same schema (Catalyst prunes the literal-false filter to an empty
+    relation — no scan is scheduled)."""
+    occupancy = banded.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("occupancy"))
+    if max_bucket is None:
+        return occupancy.filter(F.lit(False))
+    return occupancy.filter(F.col("occupancy") > max_bucket)
 
 
-def simhash_near_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    max_bucket: int | None = None,
-    accounting: bool = False,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """(doc_a, doc_b, hamming) for pairs within Hamming distance
     max_hamming, via 4×15-bit band blocking (pigeonhole-complete for
-    max_hamming ≤ 3) + exact xor/bit_count verification. ``max_bucket``
-    (opt-in) drops oversized band buckets — see cap_bucket_size;
-    ``accounting=True`` returns ``(pairs, dropped_buckets)`` with the
-    dropped (band, key) occupancies, the same loss ledger the
-    MinHash-LSH paths carry — doubly important here because capping
-    SimHash bands silently loses TRUE Hamming≤3 pairs (the docstring
-    caveat above), so an opted-in cap should always ship with its
-    ledger.
+    max_hamming ≤ 3) + exact xor/bit_count verification. The band
+    buckets are uncapped (see DEFAULT_LSH_MAX_BUCKET for why).
 
     OUTPUT MANAGEMENT AT SCALE: the raw pair stream is output-bound by
     design — near-dup CLUSTERS of size c emit c(c−1)/2 pairs, so pair
@@ -924,17 +854,10 @@ def simhash_near_pairs(
     banded = fps.select("doc_id", "simhash", F.explode(band_structs).alias("bs")).select(
         "doc_id", "simhash", F.col("bs.band").alias("band"), F.col("bs.key").alias("key")
     )
-    capped = cap_bucket_size(banded, ["band", "key"], max_bucket)
-    a, b = capped.alias("a"), capped.alias("b")
+    joined, _ = _bucket_self_join(banded, ["band", "key"], None)
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
+    return (
+        joined.select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
             ham.alias("hamming"),
@@ -942,6 +865,3 @@ def simhash_near_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-    if accounting:
-        return pairs, _dropped_bucket_metrics(banded, ["band", "key"], max_bucket)
-    return pairs

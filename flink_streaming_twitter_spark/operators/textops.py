@@ -162,6 +162,27 @@ def nfc_udf():
     return _nfc
 
 
+def clean_text(text: F.Column) -> F.Column:
+    """The canonical cleanup chain as one Column:
+
+    1. lowercase,
+    2. collapse any whitespace run (spaces, tabs, newlines) to one space,
+    3. strip remaining C0/DEL control characters,
+    4. trim.
+
+    Whitespace collapses *before* the control strip so ``a\\nb``
+    becomes ``a b``, not ``ab``. normalize_text runs it over the corpus,
+    and the char-shingle tier (operators/dedup.char_normalized_text) over
+    its NFC output, so char shingles see exactly the persisted text."""
+    return F.trim(
+        F.regexp_replace(
+            F.regexp_replace(F.lower(text), "\\s+", " "),
+            "[\\x00-\\x1f\\x7f]",
+            "",
+        )
+    )
+
+
 def normalize_text(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -171,15 +192,9 @@ def normalize_text(
 ) -> DataFrame:
     """Canonical text cleanup pass — the transform every corpus runs
     before dedup/tokenization so that cosmetic variants (case, runs of
-    whitespace, stray control bytes) hash identically downstream:
-
-    1. lowercase,
-    2. collapse any whitespace run (spaces, tabs, newlines) to one space,
-    3. strip remaining C0/DEL control characters,
-    4. trim.
-
-    Whitespace collapses *before* the control strip so ``a\\nb``
-    becomes ``a b``, not ``ab``.
+    whitespace, stray control bytes) hash identically downstream. The
+    steps are the shared chain :func:`clean_text` (lowercase, collapse
+    whitespace, strip C0/DEL controls, trim).
 
     Emits the normalized text plus audit columns (``changed``,
     ``chars_removed``) so a pipeline can report how much cleanup the
@@ -192,14 +207,7 @@ def normalize_text(
     Off by default: it inserts a vectorized Python stage, which belongs
     in a run-once ingest pass, not in every query over the corpus (the
     default path stays 100% JVM-side)."""
-    base = nfc_udf()(F.col(text_col)) if nfc else F.col(text_col)
-    cleaned = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(base), "\\s+", " "),
-            "[\\x00-\\x1f\\x7f]",
-            "",
-        )
-    )
+    cleaned = clean_text(nfc_udf()(F.col(text_col)) if nfc else F.col(text_col))
     return docs.select(
         F.col(id_col),
         cleaned.alias("norm_text"),

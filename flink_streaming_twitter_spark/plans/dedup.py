@@ -71,7 +71,7 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the cap genuinely drops buckets on the gate corpora (occupancy-3
     buckets exist at sf0.001/sf0.01 — plans/params.py). The oracle
     reproduces the occupancy filter in SQL, so the driver hash certifies
-    cap_bucket_size's filtering semantics end-to-end — the deploy-default
+    the bucket cap's filtering semantics end-to-end — the deploy-default
     entries only certify the cap when it is inert (module docstring)."""
     return D.minhash_lsh_dedup(
         load_table(spark, sf_dir, "documents"),
@@ -350,7 +350,7 @@ def _minhash_sig_sql(num_perm: int) -> str:
 
 
 def _minhash_lsh_sql(cap: int | None = None, shingles: str | None = None) -> str:
-    """``cap``: reproduce cap_bucket_size in SQL — drop (band, sig)
+    """``cap``: reproduce the bucket cap in SQL — drop (band, sig)
     buckets with more than ``cap`` members before the band self-join
     (the dedup_minhash_lsh_capped oracle). None = uncapped (the
     deploy-default entries, where the cap is measured inert).

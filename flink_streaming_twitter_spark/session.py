@@ -23,7 +23,15 @@ Spark parallelize and encode the scale knobs here so every entry point
   errors raised in the JVM (analysis errors, ANSI runtime errors) no
   longer carry the Python call site of the expression that caused them.
   PySpark caches the setting per process on the first wrapped call, so
-  a process that built a session without it keeps capturing.
+  the conf only takes effect if it is set before that call: a process
+  that made a wrapped call before the conf was set keeps capturing.
+  ``get_or_create`` sets it on an externally provided session too, which
+  helps when the caller has made no wrapped call yet (as when
+  ``__spark_entry__.entry`` receives a fresh session). It is a static
+  SQL conf, which ``spark.conf.set`` refuses
+  (CANNOT_MODIFY_STATIC_CONFIG), so it is written to the session's
+  SQLConf directly; a session created later with ``newSession()``
+  starts from the static value again.
 """
 
 from __future__ import annotations
@@ -77,11 +85,17 @@ def build_session(
 
 def get_or_create(spark: SparkSession | None = None) -> SparkSession:
     """Reuse an externally provided session (the driver passes one) but make
-    sure the confs the engine's correctness depends on are applied."""
+    sure the confs the engine's correctness depends on are applied, and
+    per-call DataFrame debugging is off (module docstring: effective only
+    if no wrapped call ran in this process before)."""
     if spark is None:
         return build_session()
     # Session timezone must be UTC for window-epoch arithmetic to match the
     # oracle; these are runtime-settable confs.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    # a static conf: spark.conf.set refuses it (module docstring)
+    spark._jsparkSession.sessionState().conf().setConfString(
+        "spark.python.sql.dataFrameDebugging.enabled", "false"
+    )
     return spark

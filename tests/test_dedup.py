@@ -232,22 +232,6 @@ def test_ngram_jaccard_finds_near_dup_and_scores_exactly(spark):
     assert (0, 4) not in pairs
 
 
-def test_bucket_cap_drops_boilerplate_buckets(spark):
-    """max_bucket removes pairs that only meet in oversized buckets:
-    identical docs 0/1/2 share every band bucket (bucket size 3), so a
-    cap of 2 must eliminate their pairs entirely."""
-    pairs_uncapped = {
-        (r.doc_a, r.doc_b) for r in simhash_near_pairs(_docs(spark)).collect()
-    }
-    pairs_capped = {
-        (r.doc_a, r.doc_b)
-        for r in simhash_near_pairs(_docs(spark), max_bucket=2).collect()
-    }
-    assert (0, 1) in pairs_uncapped
-    assert pairs_capped <= pairs_uncapped
-    assert (0, 1) not in pairs_capped
-
-
 def test_lsh_verified_jaccard_scores_exactly_on_candidates(spark):
     """Two-tier pipeline: every emitted pair carries the TRUE Jaccard
     (identical to the exact all-pairs join for pairs LSH surfaces)."""
@@ -407,8 +391,8 @@ def test_lsh_default_cap_loses_only_oversized_bucket_pairs(spark):
 def test_accounting_surface_reports_exactly_the_dropped_buckets(spark):
     """ADVICE r8 / VERDICT r9 item 4: deploy callers get cap-loss
     accounting WITHOUT a second manual oversized_buckets call —
-    ``accounting=True`` on minhash_lsh_dedup / lsh_verified_jaccard
-    returns (pairs, dropped_buckets), where the ledger holds exactly the
+    ``accounting=True`` on minhash_lsh_dedup returns (pairs,
+    dropped_buckets), where the ledger holds exactly the
     capped (band, sig) keys with their occupancy. Pins: (a) the pairs
     frame is unchanged vs accounting=False; (b) a binding cap reports
     precisely the hot buckets (one per band, occupancy = boilerplate
@@ -421,38 +405,23 @@ def test_accounting_surface_reports_exactly_the_dropped_buckets(spark):
     boiler = [(100 + i, "copyright acme corp all rights reserved terms apply") for i in range(12)]
     docs = spark.createDataFrame(DOCS + boiler, ["doc_id", "text"])
 
-    for fn in (minhash_lsh_dedup, lsh_verified_jaccard):
-        pairs_df, dropped_df = fn(docs, max_bucket=cap, accounting=True)
-        assert dropped_df.columns == ["band", "sig", "occupancy"]
-        dropped = dropped_df.collect()
-        assert len(dropped) == P.MINHASH_BANDS, fn.__name__  # one hot bucket/band
-        assert {r.occupancy for r in dropped} == {12}, fn.__name__
-        got_pairs = {(r.doc_a, r.doc_b) for r in pairs_df.collect()}
-        plain = {(r.doc_a, r.doc_b) for r in fn(docs, max_bucket=cap).collect()}
-        assert got_pairs == plain, fn.__name__  # accounting never alters pairs
-        assert all(a < 100 for a, _ in got_pairs), fn.__name__  # boilerplate capped
+    fn = minhash_lsh_dedup
+    pairs_df, dropped_df = fn(docs, max_bucket=cap, accounting=True)
+    assert dropped_df.columns == ["band", "sig", "occupancy"]
+    dropped = dropped_df.collect()
+    assert len(dropped) == P.MINHASH_BANDS, fn.__name__  # one hot bucket/band
+    assert {r.occupancy for r in dropped} == {12}, fn.__name__
+    got_pairs = {(r.doc_a, r.doc_b) for r in pairs_df.collect()}
+    plain = {(r.doc_a, r.doc_b) for r in fn(docs, max_bucket=cap).collect()}
+    assert got_pairs == plain, fn.__name__  # accounting never alters pairs
+    assert all(a < 100 for a, _ in got_pairs), fn.__name__  # boilerplate capped
 
-        # inert-cap and disabled-cap ledgers are empty but well-formed
-        _, none_dropped = fn(docs, max_bucket=None, accounting=True)
-        assert none_dropped.columns == ["band", "sig", "occupancy"]
-        assert none_dropped.count() == 0, fn.__name__
-        _, default_dropped = fn(docs, max_bucket=DEFAULT_LSH_MAX_BUCKET, accounting=True)
-        assert default_dropped.count() == 0, fn.__name__
-
-    # SimHash symmetry: its cap is opt-in (capping bands can lose TRUE
-    # Hamming<=3 pairs), so an opted-in cap must ship with the ledger.
-    # Docs 0/1/2 share identical fingerprints -> 4 band buckets at
-    # occupancy >= 3; cap=2 drops them all and reports each one.
-    sh_pairs, sh_dropped = simhash_near_pairs(docs, max_bucket=2, accounting=True)
-    assert sh_dropped.columns == ["band", "key", "occupancy"]
-    dropped_rows = sh_dropped.collect()
-    assert len(dropped_rows) >= 4 and all(r.occupancy >= 3 for r in dropped_rows)
-    got_sh = {(r.doc_a, r.doc_b) for r in sh_pairs.collect()}
-    plain_sh = {(r.doc_a, r.doc_b) for r in simhash_near_pairs(docs, max_bucket=2).collect()}
-    assert got_sh == plain_sh
-    assert (0, 1) not in got_sh  # the identical trio is capped away
-    _, sh_none = simhash_near_pairs(docs, accounting=True)  # cap disabled
-    assert sh_none.count() == 0
+    # inert-cap and disabled-cap ledgers are empty but well-formed
+    _, none_dropped = fn(docs, max_bucket=None, accounting=True)
+    assert none_dropped.columns == ["band", "sig", "occupancy"]
+    assert none_dropped.count() == 0, fn.__name__
+    _, default_dropped = fn(docs, max_bucket=DEFAULT_LSH_MAX_BUCKET, accounting=True)
+    assert default_dropped.count() == 0, fn.__name__
 
 
 @pytest.mark.parametrize(
@@ -597,12 +566,7 @@ def test_char_mode_nfc_unifies_combining_and_precomposed_accents(spark):
     """Byte-distinct, NFC-identical texts ("cafe" + COMBINING ACUTE vs
     precomposed "café") are invisible to the exact tier but must carry
     IDENTICAL char-shingle sets — est_jaccard 1.0 — because
-    char_normalized_text canonicalizes (NFC) before slicing. With
-    nfc=False the same pair's shingle sets differ (the knob exists so
-    ingest-normalized corpora can skip the Python NFC stage; feeding it
-    RAW text forfeits the unification, which this pins)."""
-    from flink_streaming_twitter_spark.operators.dedup import doc_shingle_sets
-
+    char_normalized_text canonicalizes (NFC) before slicing."""
     combining = "café résumé"
     precomposed = "café résumé"
     docs = spark.createDataFrame(
@@ -610,12 +574,6 @@ def test_char_mode_nfc_unifies_combining_and_precomposed_accents(spark):
     )
     pairs = minhash_lsh_dedup(docs, shingle_k=5, shingle_mode="char").collect()
     assert [(r.doc_a, r.doc_b, r.est_jaccard) for r in pairs] == [(0, 1, 1.0)]
-
-    raw_sets = {
-        r.doc_id: set(r.shs)
-        for r in doc_shingle_sets(docs, k=5, shingle_mode="char", nfc=False).collect()
-    }
-    assert raw_sets[0] != raw_sets[1]
 
 
 def test_char_mode_short_text_yields_single_whole_string_shingle(spark):
@@ -656,12 +614,11 @@ def test_word_prefilter_runs_on_lowered_text_kelvin_sign(spark):
 
 
 def test_char_normalized_text_equals_corpus_normalize_pass(spark):
-    """char_normalized_text is the corpus normalize pass INLINED as a
-    Column (operators/textops.normalize_text returns a whole projected
-    DataFrame, which the shingle expression can't compose with) — the
-    two implementations must stay byte-identical, or char shingles
-    would silently diverge from the text the corpus-prep pipeline
-    persists. Pinned across the edge classes both claim to handle."""
+    """char_normalized_text (the ASCII-masked NFC, then the shared
+    textops.clean_text chain) must equal the corpus normalize pass with
+    nfc=True, or char shingles would silently diverge from the text the
+    corpus-prep pipeline persists. Pinned across the edge classes both
+    claim to handle."""
     from pyspark.sql import functions as F
 
     from flink_streaming_twitter_spark.operators.dedup import char_normalized_text
@@ -680,24 +637,13 @@ def test_char_normalized_text_equals_corpus_normalize_pass(spark):
     inlined = {
         r.doc_id: r.nt
         for r in docs.select(
-            "doc_id", char_normalized_text(F.col("text"), nfc=True).alias("nt")
+            "doc_id", char_normalized_text(F.col("text")).alias("nt")
         ).collect()
     }
     pipeline = {
         r.doc_id: r.norm_text for r in normalize_text(docs, nfc=True).collect()
     }
     assert inlined == pipeline
-    # and the nfc=False twins agree too (the ingest-normalized fast path)
-    inlined_raw = {
-        r.doc_id: r.nt
-        for r in docs.select(
-            "doc_id", char_normalized_text(F.col("text"), nfc=False).alias("nt")
-        ).collect()
-    }
-    pipeline_raw = {
-        r.doc_id: r.norm_text for r in normalize_text(docs, nfc=False).collect()
-    }
-    assert inlined_raw == pipeline_raw
 
 
 @pytest.mark.parametrize(

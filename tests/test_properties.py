@@ -710,7 +710,7 @@ def test_bucket_cap_characterization_matches_python_model(spark, texts, cap):
     """Randomized form of the cap pin: for ANY corpus and ANY cap, the
     capped candidate set equals exactly the pairs that share at least
     one band bucket of occupancy <= cap — computed here from the banded
-    table itself, independently of cap_bucket_size's join logic.
+    table itself, independently of the cap's join logic.
     Repeated texts make oversized buckets (identical docs share every
     band), so small caps genuinely bind on most generated cases."""
     import itertools

@@ -13,3 +13,21 @@ def test_per_call_dataframe_debugging_is_off(spark, monkeypatch):
     # check reads the active session's conf, not an earlier answer
     monkeypatch.setattr(err_utils, "_enable_debugging_cache", None)
     assert err_utils.is_debugging_enabled() is False
+
+
+def test_get_or_create_turns_debugging_off_on_a_provided_session(spark, monkeypatch):
+    """entry() may receive a session with the conf at its default;
+    get_or_create must switch the per-call debugging off there too, or
+    plan building pays about twice the py4j round trips."""
+    from flink_streaming_twitter_spark.session import get_or_create
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    # a static conf: spark.conf.set refuses it, so write the SQLConf
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    sql_conf.setConfString(key, "true")
+    try:
+        assert get_or_create(spark).conf.get(key) == "false"
+    finally:
+        sql_conf.setConfString(key, "false")
+    monkeypatch.setattr(err_utils, "_enable_debugging_cache", None)
+    assert err_utils.is_debugging_enabled() is False

@@ -216,16 +216,18 @@ def _stream_qb_drain(spark) -> tuple[float, int]:
     mechanics — which as of round 4 means a MULTI-BATCH drain (3
     time-sliced files, maxFilesPerTrigger=1), so the seconds include
     cross-batch state commits, and the batch count is recorded alongside.
-    The timed window is the harness's timing hook (query start →
-    termination, ADVICE r3): replay prep — round 4's sort/split replaces
-    round 1-3's symlink — and conf bookkeeping are excluded, restoring
-    the round-1/2 scope."""
+    The timed window is the harness's LAST_DRAIN_TIMING stamps (query
+    start → termination, ADVICE r3): replay prep — round 4's sort/split
+    replaces round 1-3's symlink — and conf bookkeeping are excluded,
+    restoring the round-1/2 scope."""
     from flink_streaming_twitter_spark.operators.windows import sliding_window_counts
     from flink_streaming_twitter_spark.plans import params as P
-    from flink_streaming_twitter_spark.plans.reference_queries import _drain_events_stream
+    from flink_streaming_twitter_spark.plans.reference_queries import (
+        LAST_DRAIN_TIMING,
+        _drain_events_stream,
+    )
     from flink_streaming_twitter_spark.streaming.runner import WATERMARK
 
-    timing: dict[str, float] = {}
     progress: list = []
     _drain_events_stream(
         spark,
@@ -239,10 +241,9 @@ def _stream_qb_drain(spark) -> tuple[float, int]:
             f"{P.TREND_SLIDE_S} seconds",
         ),
         output_mode="update",
-        timing=timing,
         progress=progress,
     )
-    elapsed = timing["query_end"] - timing["query_start"]
+    elapsed = LAST_DRAIN_TIMING["query_end"] - LAST_DRAIN_TIMING["query_start"]
     n_batches = sum(1 for p in progress if p["numInputRows"] > 0)
     spark.catalog.dropTempView("bench_stream_qb")
     return elapsed, n_batches

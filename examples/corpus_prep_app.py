@@ -7,7 +7,8 @@ oracle-verified gate operator):
 
 1. normalize      — canonical text cleanup (optionally Unicode NFC via
                     the Arrow-batched variant: --nfc);
-2. exact dedup    — keep-first per normalized-text digest;
+2. exact dedup    — keep-first per normalized-text digest (documents
+                    with NULL text are dropped first);
 3. near dedup     — MinHash-LSH pairs → connected components → keep the
                     min doc_id per cluster (--deep-graphs switches the
                     closure to the large-star/small-star form for
@@ -61,7 +62,7 @@ from flink_streaming_twitter_spark.operators.sampling import (
     hash_split,
     weighted_mix,
 )
-from flink_streaming_twitter_spark.operators.textops import normalize_text
+from flink_streaming_twitter_spark.operators.textops import corpus_exact_dedup
 from flink_streaming_twitter_spark.plans import params as P
 from flink_streaming_twitter_spark.session import build_session
 from flink_streaming_twitter_spark.sources.files import load_table
@@ -89,22 +90,13 @@ def run(
     blocks the dedup operators persist."""
     docs = load_table(spark, src, "documents")
 
-    # 1. normalize (narrow, fused into the scan), then featurize BEFORE
-    # any shuffle and drop the body — wide stages move digests, not text
-    norm = normalize_text(docs, extra_cols=("source",), nfc=nfc)
-    feat = norm.select(
-        "doc_id",
-        "source",
-        F.md5("norm_text").alias("digest"),
-        F.size(F.regexp_extract_all("norm_text", F.lit(r"\w+"), 0)).alias("n_tokens"),
-        F.length("norm_text").alias("n_chars"),
-    )
-
-    # 2. exact dedup: keep-first per digest. Persisted: the LSH input,
-    # the components' node table and near_kept all read it, and
-    # unpersisted the corpus write rebuilt it (scan, normalize, window
-    # limit) once for each of the last two
-    exact_kept = cap_per_key(feat, ["digest"], [F.col("doc_id").asc()], 1).persist()
+    # 1. normalize + 2. exact dedup: drop NULL text, normalize,
+    # featurize BEFORE any shuffle (wide stages move digests, not text),
+    # keep-first per digest. Persisted: the LSH input, the components'
+    # node table and near_kept all read it, and unpersisted the corpus
+    # write rebuilt it (scan, normalize, window limit) once for each of
+    # the last two
+    exact_kept = corpus_exact_dedup(docs, nfc=nfc).persist()
 
     # 3. near dedup on the exact survivors: LSH pairs → components →
     # keep the cluster minimum. accounting=True also returns the

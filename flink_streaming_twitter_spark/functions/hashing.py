@@ -34,13 +34,16 @@ def md5_int31(col: Column) -> Column:
     return md5_int60(col) % F.lit(1 << 31)
 
 
-def _perm_params(num_perm: int, seed: str = "flink-streaming-twitter") -> list[tuple[int, int]]:
+_PERM_SEED = "flink-streaming-twitter"
+
+
+def _perm_params(num_perm: int) -> list[tuple[int, int]]:
     """Deterministic (a_i, b_i) pairs for the i-th min-hash permutation,
     derived from md5 so the DuckDB oracle can hard-code identical values."""
     params = []
     for i in range(num_perm):
-        a = int(hashlib.md5(f"{seed}-a-{i}".encode()).hexdigest()[:8], 16) % MERSENNE_31
-        b = int(hashlib.md5(f"{seed}-b-{i}".encode()).hexdigest()[:8], 16) % MERSENNE_31
+        a = int(hashlib.md5(f"{_PERM_SEED}-a-{i}".encode()).hexdigest()[:8], 16) % MERSENNE_31
+        b = int(hashlib.md5(f"{_PERM_SEED}-b-{i}".encode()).hexdigest()[:8], 16) % MERSENNE_31
         params.append((a or 1, b))
     return params
 

@@ -57,10 +57,9 @@ EVENT_TIME_LO = "1970-01-01 00:00:00"
 EVENT_TIME_HI = "2100-01-01 00:00:00"
 
 
-def sane_measurement(
-    col: Column, bound: float = MEASUREMENT_MAGNITUDE_BOUND
-) -> Column:
-    """``col`` if finite AND |col| < bound, else NULL (NULL stays NULL).
+def sane_measurement(col: Column) -> Column:
+    """``col`` if finite AND |col| < MEASUREMENT_MAGNITUDE_BOUND, else
+    NULL (NULL stays NULL).
 
     Strict subset of finite_or_null (functions/numeric.py): everything
     that helper nullifies is also insane here (|±inf| >= any finite
@@ -69,7 +68,7 @@ def sane_measurement(
     ``CASE WHEN isfinite(x) AND abs(x) < bound THEN x END``.
     """
     return F.when(
-        F.isnan(col) | (F.abs(col) >= F.lit(bound)), F.lit(None)
+        F.isnan(col) | (F.abs(col) >= F.lit(MEASUREMENT_MAGNITUDE_BOUND)), F.lit(None)
     ).otherwise(col)
 
 

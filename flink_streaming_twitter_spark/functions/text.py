@@ -29,10 +29,9 @@ def hashtags(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(HASHTAG_PATTERN), 0)
 
 
-def tokens(text: Column, lowercase: bool = True) -> Column:
-    """Array of word tokens."""
-    t = F.lower(text) if lowercase else text
-    return F.regexp_extract_all(t, F.lit(TOKEN_PATTERN), 0)
+def tokens(text: Column) -> Column:
+    """Array of word tokens of the lowercased text."""
+    return F.regexp_extract_all(F.lower(text), F.lit(TOKEN_PATTERN), 0)
 
 
 def word_shingles(toks: Column, k: int = 3) -> Column:

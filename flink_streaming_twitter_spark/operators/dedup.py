@@ -691,11 +691,11 @@ def ngram_jaccard_pairs(
     (md5_int31) so the DuckDB oracle reproduces them. That width is a
     TEST-SCALE choice: past ~2^15.5 distinct shingles the 2^31 space
     enters the birthday regime (measured at the ×100 stress corpus:
-    ~3e5 distinct shingles → 22 colliding hash values,
-    tools/scale_suite.py recall_denominator_x100), and a spurious shared hash inflates a
-    pair's Jaccard. Pass ``hash_bits=60`` at real corpus scale
-    (md5_int60 — already SimHash's width; the join shape is unchanged,
-    and tests pin that a 31-bit-colliding pair disappears at 60 bits).
+    ~3e5 distinct shingles → 22 colliding hash values, SCALE.md
+    round 6), and a spurious shared hash inflates a pair's Jaccard.
+    Pass ``hash_bits=60`` at real corpus scale (md5_int60 — already
+    SimHash's width; the join shape is unchanged, and tests pin that a
+    31-bit-colliding pair disappears at 60 bits).
     MinHash cannot take this knob — its mod-p universal hashing needs
     multiplicands below 2^31 — which is fine: LSH banding tolerates
     collisions by design; exactness is what cannot.

@@ -44,12 +44,11 @@ from pyspark.sql import functions as F
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
-    src: str = "src",
-    dst: str = "dst",
     max_iter: int = 25,
     stats: dict | None = None,
 ) -> DataFrame:
-    """(id, comp) for every node, comp = min node id reachable (undirected).
+    """(id, comp) for every node of the ``src``/``dst`` edge list, comp =
+    min node id reachable (undirected).
 
     ``nodes`` optionally supplies isolated vertices (no edges), each its
     own singleton component. Raises if max_iter rounds don't converge;
@@ -63,7 +62,7 @@ def connected_components(
     # evidence pipelines of the dedup_clusters* entries running 2x for
     # exactly that reason. Checkpointing also keeps every iteration from
     # re-executing the pipeline.
-    e1 = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).localCheckpoint()
+    e1 = edges.select(F.col("src").alias("s"), F.col("dst").alias("d")).localCheckpoint()
     sym = e1.union(e1.select(F.col("d").alias("s"), F.col("s").alias("d")))
     # iterate ONLY the edge-endpoint subgraph: isolated vertices are
     # singleton components by definition and joining them through every
@@ -127,8 +126,6 @@ def connected_components(
 def connected_components_star(
     edges: DataFrame,
     nodes: DataFrame | None = None,
-    src: str = "src",
-    dst: str = "dst",
     max_iter: int = 20,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -163,7 +160,7 @@ def connected_components_star(
     # them checkpointed its own copy of the upstream evidence pipeline
     # (touched's two union arms + E = three executions of e.g. the
     # MinHash-LSH candidate chain feeding dedup_clusters_star).
-    raw = edges.select(F.col(src).alias("x"), F.col(dst).alias("y")).localCheckpoint(
+    raw = edges.select(F.col("src").alias("x"), F.col("dst").alias("y")).localCheckpoint(
         eager=False
     )
     touched = (

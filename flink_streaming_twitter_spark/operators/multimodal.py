@@ -63,10 +63,10 @@ _PIL_IMAGE = _try_import_pil()
 REAL_DECODERS_AVAILABLE = _PIL_IMAGE is not None
 
 
-def payload_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Expression-only metadata: byte length, sha256, magic-byte format
-    sniff. Runs without touching Python."""
-    p = F.col(payload_col)
+def payload_metadata(df: DataFrame) -> DataFrame:
+    """Expression-only metadata of the ``payload`` column: byte length,
+    sha256, magic-byte format sniff. Runs without touching Python."""
+    p = F.col("payload")
     magic = F.hex(F.substring(p, 1, 4))
     fmt = (
         F.when(magic.startswith("FFD8"), "jpeg")

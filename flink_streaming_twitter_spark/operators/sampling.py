@@ -75,13 +75,13 @@ def hash_split(
     key: str,
     splits: Sequence[tuple[str, float]],
     n_buckets: int = 10_000,
-    split_col: str = "split",
 ) -> DataFrame:
-    """Assign each row a stable split label (e.g. train/val/test) from
-    cumulative bucket ranges. ``splits`` is an ordered list of
-    ``(label, weight)`` with weights summing to 1.0; the bucket space is
-    carved into contiguous ranges in that order, so a given key's label
-    never changes when *other* splits are re-weighted upstream of it.
+    """Assign each row a stable split label (e.g. train/val/test), in a
+    ``split`` column, from cumulative bucket ranges. ``splits`` is an
+    ordered list of ``(label, weight)`` with weights summing to 1.0; the
+    bucket space is carved into contiguous ranges in that order, so a
+    given key's label never changes when *other* splits are re-weighted
+    upstream of it.
     """
     total = sum(w for _, w in splits)
     if abs(total - 1.0) > 1e-9:
@@ -99,7 +99,7 @@ def hash_split(
     # float rounding can leave bucket == n_buckets-1 unassigned; the last
     # label absorbs the remainder so the split is total
     assert expr is not None
-    return df.withColumn(split_col, expr.otherwise(splits[-1][0]))
+    return df.withColumn("split", expr.otherwise(splits[-1][0]))
 
 
 def weighted_mix(

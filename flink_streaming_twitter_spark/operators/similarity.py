@@ -84,10 +84,9 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k per query vector: (q_id, vec_id, sim).
+    """Exact cosine top-k per query vector over ``vec_id``/``embedding``
+    rows: (q_id, vec_id, sim, rank).
 
     queries is broadcast (it is small by construction); ranking is a
     row_number window partitioned by q_id — its input is already reduced
@@ -99,34 +98,34 @@ def brute_force_topk(
     from pyspark.sql import Window
 
     q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("q_norm"),
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_vec"),
+        l2_norm(F.col("embedding")).alias("q_norm"),
     ).filter(finite_or_null(F.col("q_norm")) > 0)
     # norms once per row (not per pair) — identical doubles to the per-pair cosine
     c = (
-        corpus.select(id_col, vec_col)
-        .withColumn("v_norm", l2_norm(F.col(vec_col)))
+        corpus.select("vec_id", "embedding")
+        .withColumn("v_norm", l2_norm(F.col("embedding")))
         .filter(finite_or_null(F.col("v_norm")) > 0)
     )
     sims = (
         c.crossJoin(F.broadcast(q))
-        .filter(F.col(id_col) != F.col("q_id"))
+        .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
-            id_col,
+            "vec_id",
             F.round(
-                dot_product(F.col("q_vec"), F.col(vec_col))
+                dot_product(F.col("q_vec"), F.col("embedding"))
                 / (F.col("q_norm") * F.col("v_norm")),
                 ROUND_DECIMALS,
             ).alias("sim"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col(id_col).asc())
+    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
     return (
         sims.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("q_id", id_col, "sim", "rank")
+        .select("q_id", "vec_id", "sim", "rank")
     )
 
 
@@ -176,8 +175,6 @@ def ivf_assign(
     vectors: DataFrame,
     centroids: DataFrame,
     n_nearest: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign each vector to its n_nearest centroids by cosine (ties by
     cent_id ASC): (vec_id, embedding, cent_id). Broadcast cross join —
@@ -201,21 +198,21 @@ def ivf_assign(
     from pyspark.sql import Window
 
     cents = centroids.select(
-        F.col(id_col).alias("cent_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("c_norm"),
+        F.col("vec_id").alias("cent_id"),
+        F.col("embedding").alias("c_vec"),
+        l2_norm(F.col("embedding")).alias("c_norm"),
     ).filter(finite_or_null(F.col("c_norm")) > 0)
     paired = (
-        vectors.select(id_col, vec_col)
-        .withColumn("v_norm", l2_norm(F.col(vec_col)))
+        vectors.select("vec_id", "embedding")
+        .withColumn("v_norm", l2_norm(F.col("embedding")))
         .filter(finite_or_null(F.col("v_norm")) > 0)
         .crossJoin(F.broadcast(cents))
         .select(
-            id_col,
-            vec_col,
+            "vec_id",
+            "embedding",
             "cent_id",
             F.round(
-                dot_product(F.col("c_vec"), F.col(vec_col))
+                dot_product(F.col("c_vec"), F.col("embedding"))
                 / (F.col("v_norm") * F.col("c_norm")),
                 ROUND_DECIMALS,
             ).alias("c_sim"),
@@ -225,20 +222,20 @@ def ivf_assign(
         # lexicographic struct max: highest c_sim, then lowest cent_id —
         # the same total order the window path uses
         return (
-            paired.groupBy(id_col)
+            paired.groupBy("vec_id")
             .agg(
                 F.max_by(
-                    F.struct(F.col("cent_id"), F.col(vec_col).alias("v")),
+                    F.struct(F.col("cent_id"), F.col("embedding").alias("v")),
                     F.struct(F.col("c_sim"), (-F.col("cent_id")).alias("nc")),
                 ).alias("b")
             )
-            .select(id_col, F.col("b.v").alias(vec_col), F.col("b.cent_id"))
+            .select("vec_id", F.col("b.v").alias("embedding"), F.col("b.cent_id"))
         )
-    w = Window.partitionBy(id_col).orderBy(F.col("c_sim").desc(), F.col("cent_id").asc())
+    w = Window.partitionBy("vec_id").orderBy(F.col("c_sim").desc(), F.col("cent_id").asc())
     return (
         paired.withColumn("crank", F.row_number().over(w))
         .filter(F.col("crank") <= n_nearest)
-        .select(id_col, vec_col, "cent_id")
+        .select("vec_id", "embedding", "cent_id")
     )
 
 
@@ -249,8 +246,6 @@ def ivf_topk(
     nprobe: int = 3,
     seed_mod: int | None = 53,
     seed_rem: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: (q_id, vec_id, sim, rank).
 
@@ -280,11 +275,11 @@ def ivf_topk(
 
     if seed_mod is None:
         seed_mod = max(2, int(corpus.count() ** 0.5))
-    cents = corpus.filter((F.col(id_col) % seed_mod) == (seed_rem % seed_mod))
-    assigned = ivf_assign(corpus, cents, 1, id_col, vec_col)
+    cents = corpus.filter((F.col("vec_id") % seed_mod) == (seed_rem % seed_mod))
+    assigned = ivf_assign(corpus, cents, 1)
     probes = (
-        ivf_assign(queries, cents, nprobe, id_col, vec_col)
-        .select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"), "cent_id")
+        ivf_assign(queries, cents, nprobe)
+        .select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"), "cent_id")
     )
     # norms once per ROW (same discipline as brute_force_topk): the
     # probed-cell re-rank otherwise recomputes BOTH norms per candidate
@@ -292,25 +287,25 @@ def ivf_topk(
     # dot/(q_norm*v_norm) multiplies the identical doubles in the same
     # order the per-pair cosine does, so results are bit-identical.
     sims = (
-        assigned.withColumn("v_norm", l2_norm(F.col(vec_col)))
+        assigned.withColumn("v_norm", l2_norm(F.col("embedding")))
         .join(F.broadcast(probes.withColumn("q_norm", l2_norm(F.col("q_vec")))), "cent_id")
-        .filter(F.col(id_col) != F.col("q_id"))
+        .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
-            id_col,
+            "vec_id",
             F.round(
-                dot_product(F.col("q_vec"), F.col(vec_col))
+                dot_product(F.col("q_vec"), F.col("embedding"))
                 / (F.col("q_norm") * F.col("v_norm")),
                 ROUND_DECIMALS,
             ).alias("sim"),
         )
         # no distinct needed: each corpus vector lives in exactly one cell
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col(id_col).asc())
+    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
     return (
         sims.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("q_id", id_col, "sim", "rank")
+        .select("q_id", "vec_id", "sim", "rank")
     )
 
 
@@ -348,13 +343,12 @@ def lsh_topk(
     k: int,
     num_planes: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_probes: int = 1,
 ) -> DataFrame:
-    """Approximate top-k: exact cosine re-rank restricted to the query's
-    LSH bucket(s). Deterministic (hash-derived planes, rounded signs) →
-    fully oracle-checkable despite being approximate w.r.t. brute force.
+    """Approximate top-k over ``vec_id``/``embedding`` rows: exact cosine
+    re-rank restricted to the query's LSH bucket(s). Deterministic
+    (hash-derived planes, rounded signs) → fully oracle-checkable despite
+    being approximate w.r.t. brute force.
     ``n_probes > 1`` enables multi-probe (see lsh_probe_buckets): recall
     rises with probes while per-query cost stays probes × corpus/2^planes
     — the standard dial at scale, where re-hashing the corpus (more
@@ -370,18 +364,18 @@ def lsh_topk(
     # same division order, bit-identical results.
     bucketed = (
         corpus.select(
-            F.col(id_col),
-            F.col(vec_col),
-            l2_norm(F.col(vec_col)).alias("v_norm"),
-            lsh_bucket(F.col(vec_col), num_planes, dim).alias("bucket"),
+            F.col("vec_id"),
+            F.col("embedding"),
+            l2_norm(F.col("embedding")).alias("v_norm"),
+            lsh_bucket(F.col("embedding"), num_planes, dim).alias("bucket"),
         )
         .filter(finite_or_null(F.col("v_norm")) > 0)
     )
     q = (
         queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            l2_norm(F.col(vec_col)).alias("q_norm"),
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").alias("q_vec"),
+            l2_norm(F.col("embedding")).alias("q_norm"),
         )
         .filter(finite_or_null(F.col("q_norm")) > 0)
         .select(
@@ -395,20 +389,20 @@ def lsh_topk(
     )
     sims = (
         bucketed.join(F.broadcast(q), F.col("bucket") == F.col("q_bucket"))
-        .filter(F.col(id_col) != F.col("q_id"))
+        .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
-            id_col,
+            "vec_id",
             F.round(
-                dot_product(F.col("q_vec"), F.col(vec_col))
+                dot_product(F.col("q_vec"), F.col("embedding"))
                 / (F.col("q_norm") * F.col("v_norm")),
                 ROUND_DECIMALS,
             ).alias("sim"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col(id_col).asc())
+    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
     return (
         sims.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("q_id", id_col, "sim", "rank")
+        .select("q_id", "vec_id", "sim", "rank")
     )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import MERSENNE_31, md5_int60
 from ..functions.text import STOPWORDS, tokens
+from .sampling import cap_per_key
 
 # polynomial fingerprint parameters (shared with the DuckDB oracle)
 FP_BASE = 31
@@ -26,17 +27,18 @@ FP_POWERS = [pow(FP_BASE, e, MERSENNE_31) for e in range(8)]
 SUBWORD_PATTERN = r"\w{1,4}"
 
 
-def quality_metrics(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Per-document quality features + composite score.
+def quality_metrics(docs: DataFrame) -> DataFrame:
+    """Per-document quality features + composite score of the ``text``
+    column.
 
-    Columns: n_tokens, n_uniq_tokens, n_chars, avg_token_len,
+    Columns: doc_id, n_tokens, n_uniq_tokens, n_chars, avg_token_len,
     stopword_ratio, uniq_ratio, quality_score.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n_tok = F.size(toks)
     n_uniq = F.size(F.array_distinct(toks))
     n_stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    nonspace = F.length(F.regexp_replace(F.col(text_col), r"\s+", ""))
+    nonspace = F.length(F.regexp_replace(F.col("text"), r"\s+", ""))
     # `\w` in Java regex is ASCII-only: a CJK-only document tokenizes to
     # [] and a bare division would throw under ANSI mode (Spark 4
     # default) — token-free docs get ratio 0 / quality 0 by definition
@@ -52,10 +54,10 @@ def quality_metrics(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
         + F.lit(0.2) * F.least(n_tok / F.lit(100.0), F.lit(1.0)),
     ).otherwise(F.lit(0.0))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_tok.alias("n_tokens"),
         n_uniq.alias("n_uniq_tokens"),
-        F.length(F.col(text_col)).alias("n_chars"),
+        F.length(F.col("text")).alias("n_chars"),
         ratio(nonspace).alias("avg_token_len"),
         stop_ratio.alias("stopword_ratio"),
         uniq_ratio.alias("uniq_ratio"),
@@ -63,7 +65,7 @@ def quality_metrics(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
     )
 
 
-def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Character-class language heuristic: CJK → zh, kana → ja, hangul →
     ko, cyrillic → ru, latin-with-diacritics → latin-ext, else en.
 
@@ -72,7 +74,7 @@ def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     pandas_udf here for a real corpus.) Output: one row per (lang,
     predicted_lang) with counts — the confusion-matrix shape.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     predicted = (
         F.when(t.rlike(r"[一-鿿]"), "zh")
         .when(t.rlike(r"[぀-ヿ]"), "ja")
@@ -88,17 +90,18 @@ def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def token_stats(docs: DataFrame, group_col: str = "source", text_col: str = "text") -> DataFrame:
-    """Per-group token accounting: whitespace tokens, BPE-ish subword
-    estimate, chars; integer sums (exact) + double averages."""
-    n_tok = F.size(tokens(F.col(text_col)))
-    n_sub = F.size(F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(SUBWORD_PATTERN), 0))
-    n_chars = F.length(F.col(text_col))
+def token_stats(docs: DataFrame) -> DataFrame:
+    """Per-``source`` token accounting of the ``text`` column: whitespace
+    tokens, BPE-ish subword estimate, chars; integer sums (exact) +
+    double averages."""
+    n_tok = F.size(tokens(F.col("text")))
+    n_sub = F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(SUBWORD_PATTERN), 0))
+    n_chars = F.length(F.col("text"))
     per_doc = docs.select(
-        F.col(group_col), n_tok.alias("nt"), n_sub.alias("ns"), n_chars.alias("nc")
+        F.col("source"), n_tok.alias("nt"), n_sub.alias("ns"), n_chars.alias("nc")
     )
     return (
-        per_doc.groupBy(group_col)
+        per_doc.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("nt").alias("total_tokens"),
@@ -106,7 +109,7 @@ def token_stats(docs: DataFrame, group_col: str = "source", text_col: str = "tex
             F.sum("nc").alias("total_chars"),
         )
         .select(
-            group_col,
+            "source",
             "n_docs",
             "total_tokens",
             "total_subwords",
@@ -119,8 +122,9 @@ def token_stats(docs: DataFrame, group_col: str = "source", text_col: str = "tex
     )
 
 
-def fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Order-sensitive polynomial fingerprint over the token sequence:
+def fingerprints(docs: DataFrame) -> DataFrame:
+    """Order-sensitive polynomial fingerprint per ``doc_id`` over the
+    token sequence of its ``text``:
 
         fp = Σ_i (md5_60(tok_i) mod p) * 31^(i mod 8) mod p   (mod p)
 
@@ -129,7 +133,7 @@ def fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     int64 arithmetic is exact and engine-portable.
     """
     exploded = docs.select(
-        F.col(id_col), F.posexplode(tokens(F.col(text_col))).alias("pos", "tok")
+        F.col("doc_id"), F.posexplode(tokens(F.col("text"))).alias("pos", "tok")
     )
     h = md5_int60(F.col("tok")) % F.lit(MERSENNE_31)
     power = F.element_at(
@@ -137,8 +141,8 @@ def fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     )
     term = (h * power) % F.lit(MERSENNE_31)
     return (
-        exploded.select(F.col(id_col), term.alias("term"))
-        .groupBy(id_col)
+        exploded.select(F.col("doc_id"), term.alias("term"))
+        .groupBy("doc_id")
         .agg((F.sum("term") % F.lit(MERSENNE_31)).alias("fingerprint"))
     )
 
@@ -185,16 +189,15 @@ def clean_text(text: F.Column) -> F.Column:
 
 def normalize_text(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     extra_cols: tuple[str, ...] = (),
     nfc: bool = False,
 ) -> DataFrame:
-    """Canonical text cleanup pass — the transform every corpus runs
-    before dedup/tokenization so that cosmetic variants (case, runs of
-    whitespace, stray control bytes) hash identically downstream. The
-    steps are the shared chain :func:`clean_text` (lowercase, collapse
-    whitespace, strip C0/DEL controls, trim).
+    """Canonical text cleanup pass over a ``doc_id``/``text`` table —
+    the transform every corpus runs before dedup/tokenization so that
+    cosmetic variants (case, runs of whitespace, stray control bytes)
+    hash identically downstream. The steps are the shared chain
+    :func:`clean_text` (lowercase, collapse whitespace, strip C0/DEL
+    controls, trim).
 
     Emits the normalized text plus audit columns (``changed``,
     ``chars_removed``) so a pipeline can report how much cleanup the
@@ -207,11 +210,42 @@ def normalize_text(
     Off by default: it inserts a vectorized Python stage, which belongs
     in a run-once ingest pass, not in every query over the corpus (the
     default path stays 100% JVM-side)."""
-    cleaned = clean_text(nfc_udf()(F.col(text_col)) if nfc else F.col(text_col))
+    cleaned = clean_text(nfc_udf()(F.col("text")) if nfc else F.col("text"))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         cleaned.alias("norm_text"),
-        (cleaned != F.col(text_col)).alias("changed"),
-        (F.length(text_col) - F.length(cleaned)).alias("chars_removed"),
+        (cleaned != F.col("text")).alias("changed"),
+        (F.length("text") - F.length(cleaned)).alias("chars_removed"),
         *[F.col(c) for c in extra_cols],
     )
+
+
+def corpus_exact_dedup(docs: DataFrame, nfc: bool = False) -> DataFrame:
+    """The corpus pipelines' shared head: exact dedup on normalized text,
+    one row per distinct digest with the per-document features the later
+    stages read. Columns: doc_id, source, digest, n_tokens, n_chars.
+
+    1. NULL text is filtered first (the dedup-family convention of
+       operators/dedup.exact_dedup): md5(NULL) would group every
+       failed-fetch document under one digest and the k=1 cap would
+       keep exactly one of them, with NULL features;
+    2. :func:`normalize_text` (narrow, fused into the scan; ``nfc`` as
+       there);
+    3. per-row featurization — md5 digest, ``\\w+`` token count, char
+       count of the normalized text — *before* any shuffle, dropping the
+       text, so the one wide stage moves a few dozen bytes per row
+       whatever the document size;
+    4. keep-first per digest via ``cap_per_key`` with k=1 (min doc_id
+       survives; WindowGroupLimit forwards one row per digest per map
+       task)."""
+    norm = normalize_text(
+        docs.filter(F.col("text").isNotNull()), extra_cols=("source",), nfc=nfc
+    )
+    feat = norm.select(
+        "doc_id",
+        "source",
+        F.md5("norm_text").alias("digest"),
+        F.size(F.regexp_extract_all("norm_text", F.lit(r"\w+"), 0)).alias("n_tokens"),
+        F.length("norm_text").alias("n_chars"),
+    )
+    return cap_per_key(feat, ["digest"], [F.col("doc_id").asc()], 1)

@@ -21,20 +21,19 @@ def per_window_top1(
     df: DataFrame,
     group_cols: list[str],
     key_col: str,
-    cnt_col: str = "cnt",
 ) -> DataFrame:
-    """Per group, the (key, cnt) with the max cnt; ties → greatest key.
+    """Per group, the (key, cnt) with the max ``cnt``; ties → greatest key.
 
     Output columns: *group_cols, top_<key_col>, top_cnt.
     """
-    best = F.max(F.struct(F.col(cnt_col), F.col(key_col))).alias("best")
+    best = F.max(F.struct(F.col("cnt"), F.col(key_col))).alias("best")
     return (
         df.groupBy(*group_cols)
         .agg(best)
         .select(
             *group_cols,
             F.col(f"best.{key_col}").alias(f"top_{key_col}"),
-            F.col(f"best.{cnt_col}").alias("top_cnt"),
+            F.col("best.cnt").alias("top_cnt"),
         )
     )
 
@@ -44,13 +43,12 @@ def top_k(
     order_col: str,
     k: int,
     tiebreak_col: str,
-    ascending_tiebreak: bool = True,
 ) -> DataFrame:
-    """Global deterministic top-k: ORDER BY order_col DESC, tiebreak LIMIT k.
+    """Global deterministic top-k: ORDER BY order_col DESC, tiebreak ASC
+    LIMIT k.
 
     Catalyst rewrites sort+limit into TakeOrderedAndProject — each
     partition keeps a k-row heap and the driver merges; no global sort is
     materialized, so this is safe at any scale for small k.
     """
-    tb = F.col(tiebreak_col).asc() if ascending_tiebreak else F.col(tiebreak_col).desc()
-    return df.orderBy(F.col(order_col).desc(), tb).limit(k)
+    return df.orderBy(F.col(order_col).desc(), F.col(tiebreak_col).asc()).limit(k)

@@ -26,8 +26,8 @@ D182 = "decimal(18,2)"
 D184 = "decimal(18,4)"
 
 
-def _dec(col: str, typ: str = D182) -> F.Column:
-    return F.col(col).cast(typ)
+def _dec(col: str) -> F.Column:
+    return F.col(col).cast(D182)
 
 
 def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -215,7 +215,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same contract, same edge evidence, and same recursive-CTE oracle
     as :func:`dedup_clusters`, but the closure runs through
-    ``connected_components_star`` (operators/graph.py:103) — the
+    ``connected_components_star`` (operators/graph.py) — the
     alternating large-star/small-star contraction (Kiveris et al., SoCC
     2014) that converges in O(log n) rounds instead of O(diameter).
     Identical labels, different physical plan: this is the deep-graph
@@ -297,7 +297,7 @@ shingles AS (
 _SHINGLES = _shingles_sql(31)
 
 
-def _char_shingles_sql(bits: int = 31) -> str:
+def _char_shingles_sql() -> str:
     """Distinct (doc_id, sh) CHARACTER-k-gram hashes — the oracle twin
     of operators/dedup.char_shingle_hashes over char_normalized_text.
     The normalization chain is byte-identical to TEXT_NORMALIZE_NFC_SQL
@@ -309,7 +309,6 @@ def _char_shingles_sql(bits: int = 31) -> str:
     Both engines' substr counts CODE POINTS, so multi-byte scripts
     slice identically (verified bit-for-bit on CJK/emoji/combining-
     accent fixtures, round 11)."""
-    mod = "\n      % 2147483648" if bits == 31 else ""
     k = CHAR_SHINGLE_K
     return rf"""
 norm AS (
@@ -325,7 +324,8 @@ norm AS (
 nz AS (SELECT doc_id, nt FROM norm WHERE len(nt) > 0),
 shingles AS (
   SELECT DISTINCT doc_id,
-    ('0x' || substr(md5(substr(nt, i, {k})), 1, 15))::BIGINT{mod} AS sh
+    ('0x' || substr(md5(substr(nt, i, {k})), 1, 15))::BIGINT
+      % 2147483648 AS sh
   FROM nz, LATERAL (
     SELECT unnest(range(1, greatest(len(nt) - {k - 1}, 1) + 1)) AS i) g
 )

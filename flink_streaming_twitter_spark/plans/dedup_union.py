@@ -55,44 +55,27 @@ from .dedup import (
 )
 
 
-def dedup_clusters_char_union(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    char_est_threshold: float | None = None,
-    closure=None,
-) -> DataFrame:
+def dedup_clusters_char_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union the word-tier evidence chain (exact star edges + word
     MinHash-LSH pairs — plans/dedup.py::_dup_evidence, verbatim) with
     the char-tier near-dup pairs (the dedup_minhash_lsh_char operator,
     verbatim), then one connected-components closure over the combined
     edge set. Same duplicate-key contract as the siblings: the node set
     seeds from DISTINCT doc_id, and every tier resolves re-delivered
-    keys via one_row_per_key/arg_min before hashing.
-
-    The keyword-only knobs exist for tools/scale_suite.py's dial
-    measurements (raised char est gate, star closure) so they time THIS
-    plan rather than a copy that could drift from future contract fixes
-    (round-14 review finding). The entry itself — and its oracle — is
-    always the default: pinned params.py gate, plain closure."""
+    keys via one_row_per_key/arg_min before hashing. Both tiers use the
+    pinned params.py gate, and the closure is plain propagation."""
     from ..operators.graph import connected_components
 
-    if closure is None:
-        closure = connected_components
     docs = load_table(spark, sf_dir, "documents")
     char_pairs = D.minhash_lsh_dedup(
         docs,
         num_perm=P.MINHASH_PERMS,
         bands=P.MINHASH_BANDS,
-        est_threshold=(
-            P.MINHASH_EST_THRESHOLD
-            if char_est_threshold is None
-            else char_est_threshold
-        ),
+        est_threshold=P.MINHASH_EST_THRESHOLD,
         shingle_k=CHAR_SHINGLE_K,
         shingle_mode="char",
     ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    comp = closure(
+    comp = connected_components(
         _dup_evidence(docs).union(char_pairs),
         nodes=docs.select(F.col("doc_id").alias("id")).distinct(),
     )

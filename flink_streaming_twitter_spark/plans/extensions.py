@@ -180,55 +180,94 @@ _ONE_DEFINITION_PER_STEP = (
     "plan unchanged; green vs its unchanged oracle at sf0.01 on the "
     "changed tree (check_oracle 86/86)"
 )
+# The every-option-has-a-caller change turned options no call sets into
+# the constants they always were (column names, a tokenizer flag, a tie
+# order, a bound, oracle-SQL widths) and moved the corpus pipelines' exact
+# dedup head into operators/textops.corpus_exact_dedup. Every queries()
+# plan is unchanged (masked optimized and physical plans identical at
+# sf0.001; q_corpus_pipeline differs only in internal column names).
+_EVERY_OPTION_HAS_A_CALLER = (
+    "; every option has a caller: options no call set were turned into "
+    "constants in this entry's import closure with its plan unchanged; "
+    "green vs its unchanged oracle at sf0.01 on the changed tree "
+    "(check_oracle 86/86)"
+)
 TAIL_EXEMPTIONS: tuple[tuple[str, str], ...] = (
     (
         "dedup_clusters",
-        _OPT_R15_DEDUP + _TOKENIZE_ONCE + _NEIGHBOUR_MIN_START + _ONE_DEFINITION_PER_STEP,
+        _OPT_R15_DEDUP + _TOKENIZE_ONCE + _NEIGHBOUR_MIN_START + _ONE_DEFINITION_PER_STEP
+        + _EVERY_OPTION_HAS_A_CALLER,
     ),
     (
         "dedup_clusters_star",
-        _OPT_R15_DEDUP + _TOKENIZE_ONCE + _NEIGHBOUR_MIN_START + _ONE_DEFINITION_PER_STEP,
+        _OPT_R15_DEDUP + _TOKENIZE_ONCE + _NEIGHBOUR_MIN_START + _ONE_DEFINITION_PER_STEP
+        + _EVERY_OPTION_HAS_A_CALLER,
     ),
     (
         "dedup_clusters_char_union",
-        _OPT_R15_DEDUP + _TOKENIZE_ONCE + _NEIGHBOUR_MIN_START + _ONE_DEFINITION_PER_STEP,
+        _OPT_R15_DEDUP + _TOKENIZE_ONCE + _NEIGHBOUR_MIN_START + _ONE_DEFINITION_PER_STEP
+        + _EVERY_OPTION_HAS_A_CALLER,
     ),
-    ("events_sessionize", _OPT_R15_CLOSURE_ONLY + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP),
-    ("multimodal_meta", _OPT_R15_CLOSURE_ONLY + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP),
+    (
+        "events_sessionize",
+        _OPT_R15_CLOSURE_ONLY + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP
+        + _EVERY_OPTION_HAS_A_CALLER,
+    ),
+    (
+        "multimodal_meta",
+        _OPT_R15_CLOSURE_ONLY + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP
+        + _EVERY_OPTION_HAS_A_CALLER,
+    ),
     (
         "q_range_join_error_impact",
-        _OPT_R15_CLOSURE_ONLY + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP,
+        _OPT_R15_CLOSURE_ONLY + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP
+        + _EVERY_OPTION_HAS_A_CALLER,
     ),
-    ("dedup_embedding_cosine", _ORPHAN_DELETION),
-    ("doc_fingerprint", _ORPHAN_DELETION + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP),
+    ("dedup_embedding_cosine", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
+    (
+        "doc_fingerprint",
+        _ORPHAN_DELETION + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP + _EVERY_OPTION_HAS_A_CALLER,
+    ),
     ("q_approx_distinct_users", _ORPHAN_DELETION),
-    ("q_approx_percentiles", _ORPHAN_DELETION),
+    ("q_approx_percentiles", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
     ("q_asof_last_error", _ORPHAN_DELETION),
-    ("q_corpus_pipeline", _ORPHAN_DELETION + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP),
+    (
+        "q_corpus_pipeline",
+        _ORPHAN_DELETION + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP + _EVERY_OPTION_HAS_A_CALLER,
+    ),
     ("q_distinct_users", _ORPHAN_DELETION),
-    ("q_embedding_norms", _ORPHAN_DELETION),
-    ("q_grouping_sets_sales", _ORPHAN_DELETION),
-    ("q_order_rank_distribution", _ORPHAN_DELETION),
+    ("q_embedding_norms", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
+    ("q_grouping_sets_sales", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
+    ("q_order_rank_distribution", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
     ("q_pivot_daily", _ORPHAN_DELETION),
-    ("q_price_percentiles", _ORPHAN_DELETION),
+    ("q_price_percentiles", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
     ("q_rollup_counts", _ORPHAN_DELETION),
     ("q_user_segments", _ORPHAN_DELETION),
     ("q_user_top_orders", _ORPHAN_DELETION),
-    ("q_value_by_window_sane", _WINDOWS_FOLD),
+    ("q_value_by_window_sane", _WINDOWS_FOLD + _EVERY_OPTION_HAS_A_CALLER),
     ("q_value_stats", _ORPHAN_DELETION),
-    ("q_value_stats_sane", _WINDOWS_FOLD),
-    ("similarity_brute_topk", _ORPHAN_DELETION),
-    ("similarity_ivf_topk", _ORPHAN_DELETION),
-    ("similarity_lsh_topk", _ORPHAN_DELETION),
-    ("similarity_lsh_topk_probe3", _ORPHAN_DELETION),
-    ("text_langid", _ORPHAN_DELETION + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP),
-    ("text_quality", _ORPHAN_DELETION + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP),
-    ("text_token_stats", _ORPHAN_DELETION + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP),
-    ("tpch_q12_late_shipments", _ORPHAN_DELETION),
-    ("tpch_q1_pricing_summary", _ORPHAN_DELETION),
-    ("tpch_q3_shipping_priority", _ORPHAN_DELETION),
-    ("tpch_q4_order_priority", _ORPHAN_DELETION),
-    ("tpch_q5_local_supplier_volume", _ORPHAN_DELETION),
+    ("q_value_stats_sane", _WINDOWS_FOLD + _EVERY_OPTION_HAS_A_CALLER),
+    ("similarity_brute_topk", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
+    ("similarity_ivf_topk", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
+    ("similarity_lsh_topk", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
+    ("similarity_lsh_topk_probe3", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
+    (
+        "text_langid",
+        _ORPHAN_DELETION + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP + _EVERY_OPTION_HAS_A_CALLER,
+    ),
+    (
+        "text_quality",
+        _ORPHAN_DELETION + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP + _EVERY_OPTION_HAS_A_CALLER,
+    ),
+    (
+        "text_token_stats",
+        _ORPHAN_DELETION + _TOKENIZE_ONCE + _ONE_DEFINITION_PER_STEP + _EVERY_OPTION_HAS_A_CALLER,
+    ),
+    ("tpch_q12_late_shipments", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
+    ("tpch_q1_pricing_summary", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
+    ("tpch_q3_shipping_priority", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
+    ("tpch_q4_order_priority", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
+    ("tpch_q5_local_supplier_volume", _ORPHAN_DELETION + _EVERY_OPTION_HAS_A_CALLER),
 )
 
 

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sampling import cap_per_key, cap_per_key_salted, hash_split, weighted_mix
-from ..operators.textops import normalize_text
+from ..operators.textops import corpus_exact_dedup, normalize_text
 from ..sources.files import load_table
 
 SPLITS = [("train", 0.8), ("val", 0.1), ("test", 0.1)]
@@ -111,38 +111,20 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalize → exact-dedup on normalized text → weighted domain
     admission → train/val/test split → per-(split, source) profile:
 
-    1. ``normalize_text`` (narrow, fused into the scan),
-    2. per-row featurization — md5 digest, token count, char count —
-       *before* any shuffle, then the document text is DROPPED: the
-       only wide stage keys on the 32-hex digest, so a shuffled row is
-       a few dozen bytes regardless of document size (shuffling
-       normalized bodies would move the whole corpus),
-    3. keep-one-per-digest via ``cap_per_key`` with k=1 — quota
-       capping IS exact dedup at k=1 (min doc_id survives;
-       WindowGroupLimit forwards one row per digest per map task),
-    4. ``weighted_mix`` admission + ``hash_split`` assignment (both
+    1. ``corpus_exact_dedup`` (operators/textops.py), the head
+       ``corpus_prep_app.run`` shares: NULL-text filter, normalize,
+       featurize (md5 digest, token count, char count) before any
+       shuffle, keep-first per digest — quota capping IS exact dedup at
+       k=1. The only wide stage keys on the 32-hex digest, so a
+       shuffled row is a few dozen bytes regardless of document size;
+    2. ``weighted_mix`` admission + ``hash_split`` assignment (both
        narrow md5-bucket filters), then one final aggregate.
 
     Total cost at any corpus size: one digest-keyed exchange of thin
     rows plus the 3×20-group aggregate. The token count uses the same
-    ``\\w+`` tokenizer as the text-analysis family.
-
-    NULL text is filtered at the head (dedup-family convention —
-    operators/dedup.py::exact_dedup): md5(NULL) digests would otherwise
-    group every failed-fetch doc under one key and the k=1 cap would
-    keep exactly one of them. The oracle applies the identical filter."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    norm = normalize_text(docs, extra_cols=("source",))
-    featurized = norm.select(
-        "doc_id",
-        "source",
-        F.md5("norm_text").alias("text_digest"),
-        F.size(F.regexp_extract_all(F.col("norm_text"), F.lit(r"\w+"), 0)).alias(
-            "n_tokens"
-        ),
-        F.length("norm_text").alias("n_chars_norm"),
-    )
-    deduped = cap_per_key(featurized, ["text_digest"], [F.col("doc_id").asc()], 1)
+    ``\\w+`` tokenizer as the text-analysis family. The oracle applies
+    the identical NULL-text filter."""
+    deduped = corpus_exact_dedup(load_table(spark, sf_dir, "documents"))
     admitted = weighted_mix(
         deduped, "source", "doc_id", MIX_FRACTIONS, MIX_DEFAULT, N_BUCKETS
     )
@@ -152,7 +134,7 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tokens").alias("total_tokens"),
-            F.sum("n_chars_norm").alias("total_chars"),
+            F.sum("n_chars").alias("total_chars"),
         )
     )
 

@@ -148,9 +148,8 @@ def q_tokenize_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 LAST_DRAIN_TIMING: dict = {}
-"""query_start/query_end perf_counter stamps of the most recent drain
-whose caller did not pass its own ``timing`` dict — see
-_drain_events_stream."""
+"""query_start/query_end perf_counter stamps of the most recent drain —
+see _drain_events_stream."""
 
 _REPLAY_FILES = 3  # time-ordered files, one micro-batch each
 _STATE_PARTITIONS = 4  # a replay's shuffle partitions — see _drain_events_stream
@@ -164,7 +163,6 @@ def _drain_events_stream(
     output_mode: str,
     state_store: str | None = None,
     progress: list | None = None,
-    timing: dict | None = None,
 ) -> DataFrame:
     """Replay the events table through the ACTUAL Structured Streaming
     engine and return the drained memory sink as a batch DataFrame.
@@ -194,10 +192,11 @@ def _drain_events_stream(
 
     ``progress`` (optional) receives the query's recentProgress entries
     after the drain — tests assert ≥2 non-empty micro-batches and zero
-    watermark-dropped rows from it. ``timing`` (optional) is filled with
-    ``query_start``/``query_end`` perf_counter stamps bracketing ONLY
-    the stream execution (start→termination), so the bench probe's
-    seconds exclude the replay-prep and conf bookkeeping (ADVICE r3).
+    watermark-dropped rows from it. The module-global LAST_DRAIN_TIMING
+    is refilled with ``query_start``/``query_end`` perf_counter stamps
+    bracketing ONLY the stream execution (start→termination), so the
+    bench probe's seconds exclude the replay-prep and conf bookkeeping
+    (ADVICE r3).
 
     _STATE_PARTITIONS sizes ``spark.sql.shuffle.partitions`` for THIS
     query only (captured at stream start, restored after the drain):
@@ -220,13 +219,7 @@ def _drain_events_stream(
 
     import pyarrow.parquet as pq
 
-    if timing is None:
-        # always expose the query-only stamps module-globally so callers
-        # that reach a drain through a generic queries() entry (the
-        # scale probe) can still separate stream execution from replay
-        # prep without duplicating the entry's build wiring
-        timing = LAST_DRAIN_TIMING
-        timing.clear()
+    LAST_DRAIN_TIMING.clear()
     load_table(spark, sf_dir, "events")  # sets nanosAsLong/UTC session confs
     src = os.path.join(sf_dir, "events.parquet")
     d = tempfile.mkdtemp(prefix=f"{view}_")
@@ -269,7 +262,7 @@ def _drain_events_stream(
             )
         plan = build(ensure_event_time(stream, "ts"))
         try:
-            timing["query_start"] = time.perf_counter()
+            LAST_DRAIN_TIMING["query_start"] = time.perf_counter()
             q = start_query(
                 plan,
                 name=view,
@@ -283,14 +276,14 @@ def _drain_events_stream(
             if not q.awaitTermination(600):
                 q.stop()
                 raise TimeoutError(f"{view}: drain did not finish within 600s")
-            timing["query_end"] = time.perf_counter()
+            LAST_DRAIN_TIMING["query_end"] = time.perf_counter()
         except BaseException:
             # never leave a half-filled timing dict behind (ADVICE r4):
             # a consumer checking `if LAST_DRAIN_TIMING` after a failed
             # drain would KeyError on query_end or pair a fresh
             # query_end with a stale query_start
-            timing.pop("query_start", None)
-            timing.pop("query_end", None)
+            LAST_DRAIN_TIMING.pop("query_start", None)
+            LAST_DRAIN_TIMING.pop("query_end", None)
             raise
         if progress is not None:
             progress.extend(q.recentProgress)

@@ -280,11 +280,11 @@ round(
 """
 
 
-def _lsh_probe_sql(n_probes: int = LSH_N_PROBES) -> str:
+def _lsh_probe_sql() -> str:
     """Multi-probe twin of _lsh_sql: per query expose the 8 rounded
     plane dots (the same doubles the Spark accumulator rounds), derive
     the base bucket from their signs, rank planes by (|dot|, plane) and
-    flip the n_probes-1 smallest — base XOR 2^j — then candidate-join
+    flip the LSH_N_PROBES-1 smallest — base XOR 2^j — then candidate-join
     every probed bucket. The three probed buckets are pairwise distinct
     and each corpus vector owns ONE bucket, so a (q_id, vec_id) pair
     appears at most once on both engines and the re-rank needs no
@@ -329,7 +329,7 @@ flips AS (
   SELECT rid, j FROM (
     SELECT rid, j, row_number() OVER (PARTITION BY rid ORDER BY m ASC, j ASC) AS fr
     FROM margins
-  ) WHERE fr <= {n_probes - 1}
+  ) WHERE fr <= {LSH_N_PROBES - 1}
 ),
 qbuckets AS (
   SELECT q_id, q_vec, base AS q_bucket FROM qb

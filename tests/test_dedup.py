@@ -254,12 +254,11 @@ def test_simhash_identical_docs_distance_zero(spark):
 
 def test_ngram_jaccard_blocked_decomposition_matches_global(spark):
     """An exact PPJoin over groups with DISJOINT shingle sets equals the
-    union of per-group exact joins — the decomposition
-    tools/scale_suite.py's recall_denominator_x100 cell uses to measure
-    the x100 t=0.5 denominator
-    after the global join proved disk-bound (a pair with Jaccard > 0
-    must share a shingle, so verified shingle-disjoint blocks cannot
-    interact). Salting mirrors make_scale10: a per-group token inside
+    union of per-group exact joins — the decomposition SCALE.md's
+    round-6 x100 t=0.5 recall denominator was measured with after the
+    global join proved disk-bound (a pair with Jaccard > 0 must share a
+    shingle, so verified shingle-disjoint blocks cannot interact).
+    Salting mirrors that corpus's replica scheme: a per-group token inside
     every 3-shingle makes cross-group shingle sets disjoint; per-block
     document frequencies reorder the prefix heuristic, so this also
     re-pins that prefix filtering is lossless under ANY df order."""

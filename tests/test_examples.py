@@ -71,6 +71,47 @@ def test_corpus_prep_app_end_to_end(spark, sf_dir):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def test_corpus_prep_app_drops_null_text_documents(spark):
+    """Documents with NULL text are dropped before exact dedup, as
+    q_corpus_pipeline and operators/dedup.exact_dedup drop them:
+    md5(NULL) is one digest for all of them, so the keep-first cap would
+    otherwise keep the lowest NULL-text id with NULL features and add a
+    profile row with NULL totals."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples")
+    )
+    from corpus_prep_app import run
+
+    src = tempfile.mkdtemp(prefix="corpus_null_src_")
+    out = tempfile.mkdtemp(prefix="corpus_null_out_")
+    try:
+        spark.createDataFrame(
+            [
+                (1, None, "en", "src0", 0),
+                (2, None, "en", "src0", 0),
+                (3, None, "en", "src1", 0),
+                (4, "alpha beta gamma delta epsilon", "en", "src0", 30),
+                (5, "one two three four five six", "en", "src1", 27),
+            ],
+            "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+        ).write.parquet(f"{src}/documents.parquet")
+        run(spark, src, out, show=False)
+
+        corpus = spark.read.parquet(f"{out}/corpus").collect()
+        assert sorted(r.doc_id for r in corpus) == [4, 5]
+        assert all(r.digest is not None and r.n_tokens > 0 for r in corpus)
+        profile = spark.read.parquet(f"{out}/profile").collect()
+        assert sum(r.n_docs for r in profile) == 2
+        assert all(r.total_tokens is not None and r.total_chars is not None for r in profile)
+    finally:
+        spark.catalog.clearCache()
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(out, ignore_errors=True)
+
+
 def test_twitter_stream_app_fans_out_four_pipelines(spark):
     """The production entrypoint's exact wiring — four concurrent
     streaming queries with foreachBatch point-mapper sinks off one tweet

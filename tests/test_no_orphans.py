@@ -1,5 +1,6 @@
-"""Orphan guard: every public function and class in the package must be
-referenced by code outside ``tests/``.
+"""Orphan guards: every public function and class in the package must be
+referenced by code outside ``tests/``, and every option (defaulted
+parameter) of a public package function must be set by some call.
 
 Pure ``ast`` over the repository's Python files — no Spark session. A
 reference is a ``Name``, an ``Attribute`` or an ``ImportFrom`` alias with
@@ -21,6 +22,16 @@ PACKAGE = "flink_streaming_twitter_spark"
 
 EXEMPT = {
     "hash_sample": "reference oracle that tests/test_sampling.py checks weighted_mix against",
+}
+
+EXEMPT_OPTIONS = {
+    "kafka_tweet_stream.starting_offsets": (
+        "deployment setting: where a fresh consumer group starts reading the topic"
+    ),
+    "connected_components_star.max_iter": (
+        "the non-convergence bound: the loop raises instead of running forever"
+    ),
+    "hash_sample.n_buckets": "part of the sampling oracle that EXEMPT keeps",
 }
 
 
@@ -95,3 +106,61 @@ def test_every_public_package_name_has_a_caller_outside_tests():
     assert not orphans, "public names with no caller outside tests/:\n" + "\n".join(orphans)
     stale = sorted(set(EXEMPT) - set(spans))
     assert not stale, f"exemptions for names that no longer exist: {stale}"
+
+
+def _options(tree: ast.Module) -> list[tuple[str, str, int | None, int]]:
+    """(function, parameter, position or None if keyword-only, line) of
+    each defaulted parameter of a public top-level function."""
+    out = []
+    for node in tree.body:
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        if node.name.startswith("_"):
+            continue
+        a = node.args
+        positional = a.posonlyargs + a.args
+        first = len(positional) - len(a.defaults)
+        out += [(node.name, p.arg, i, node.lineno) for i, p in enumerate(positional) if i >= first]
+        out += [
+            (node.name, p.arg, None, node.lineno)
+            for p, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None
+        ]
+    return out
+
+
+def _calls(tree: ast.Module):
+    """(callee name, positional argument count, keyword names) of each call."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            func = node.func
+            name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+            if name:
+                yield name, len(node.args), {k.arg for k in node.keywords}
+
+
+def test_every_option_has_a_caller():
+    """An option that no call sets is a constant with extra steps. Calls
+    anywhere count, tests included: a test that pins a variant is a
+    caller. Matching is by callee name, like the orphan guard above."""
+    options, keywords, positional = [], set(), {}
+    for path in _python_files():
+        rel = path.relative_to(REPO).as_posix()
+        tree = ast.parse(path.read_text(), filename=rel)
+        if rel.startswith(f"{PACKAGE}/"):
+            options += [(rel, *o) for o in _options(tree)]
+        for name, n_args, kws in _calls(tree):
+            keywords.update((name, k) for k in kws)
+            positional[name] = max(positional.get(name, 0), n_args)
+    assert options, "no package options found"
+
+    unset = sorted(
+        f"{rel}:{line} {fn}({param})"
+        for rel, fn, param, index, line in options
+        if (fn, param) not in keywords
+        and not (index is not None and positional.get(fn, 0) > index)
+        and f"{fn}.{param}" not in EXEMPT_OPTIONS
+    )
+    assert not unset, "options that no call sets:\n" + "\n".join(unset)
+    stale = sorted(set(EXEMPT_OPTIONS) - {f"{fn}.{param}" for _r, fn, param, _i, _l in options})
+    assert not stale, f"option exemptions for parameters that no longer exist: {stale}"

@@ -161,7 +161,6 @@ def _drain_events_stream(
     view: str,
     build: "Callable[[DataFrame], DataFrame]",
     output_mode: str,
-    state_store: str | None = None,
     progress: list | None = None,
 ) -> DataFrame:
     """Replay the events table through the ACTUAL Structured Streaming
@@ -228,20 +227,6 @@ def _drain_events_stream(
     except Exception:
         pass
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    # start_query(state_store=...) mutates session-level state-store confs
-    # that each query captures AT START; snapshot and restore them so one
-    # RocksDB gate entry can't silently switch every later streaming
-    # query in a shared session off the default provider
-    _STATE_CONFS = (
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-    )
-    prev_state: dict[str, str | None] = {}
-    for c in _STATE_CONFS:
-        try:
-            prev_state[c] = spark.conf.get(c)
-        except Exception:
-            prev_state[c] = None
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
         schema = spark.read.parquet(src).schema
@@ -263,13 +248,7 @@ def _drain_events_stream(
         plan = build(ensure_event_time(stream, "ts"))
         try:
             LAST_DRAIN_TIMING["query_start"] = time.perf_counter()
-            q = start_query(
-                plan,
-                name=view,
-                output_mode=output_mode,
-                available_now=True,
-                state_store=state_store,
-            )
+            q = start_query(plan, name=view, output_mode=output_mode, available_now=True)
             # on timeout the query would keep reading the split files the
             # finally block deletes and the memory sink would be
             # half-populated — stop it and fail loudly instead
@@ -290,14 +269,6 @@ def _drain_events_stream(
         return spark.table(view)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        for c, v in prev_state.items():
-            if v is None:
-                try:
-                    spark.conf.unset(c)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(c, v)
         shutil.rmtree(d, ignore_errors=True)
 
 
@@ -428,9 +399,7 @@ def stream_interval_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_qa_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q-A as ONE natively chained two-aggregation streaming query
     (operators/windows.py::trending_two_stage, append mode) run by
-    the real engine — and on the RocksDB state store provider, so the
-    100 TB state path gets runtime coverage in the gate, not just a
-    config option. The oracle is the batch Q-A SQL restricted to the
+    the real engine. The oracle is the batch Q-A SQL restricted to the
     sampling windows the final watermark (max event time − 300 s)
     finalizes: append mode only emits a window once the watermark passes
     its end, so the tail windows of a bounded replay legitimately never
@@ -438,8 +407,7 @@ def stream_qa_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     pretending the stream saw infinity. Under the multi-batch replay
     most sampling windows finalize MID-STREAM (the watermark advances
     between micro-batches), so the hash also certifies incremental
-    append emission + chained-aggregation state handoff across batches,
-    on RocksDB.
+    append emission + chained-aggregation state handoff across batches.
     """
     sink = _drain_events_stream(
         spark,
@@ -455,12 +423,6 @@ def stream_qa_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
             P.SAMPLE_SLIDE_S,
         ),
         output_mode="append",
-        # RocksDB pays per-INSTANCE commit overhead (one store per
-        # shuffle partition per stateful operator per batch): sweep at
-        # sf0.1 measured 4→1.98 s, 8→2.22 s, 16→2.85 s (round 13), the
-        # same _STATE_PARTITIONS the HDFS drains use. Same SIZE-THIS-UP
-        # caveat applies on a real cluster.
-        state_store="rocksdb",
     )
     return sink.select("sample_w_start", "top_event_type", "top_cnt")
 

@@ -22,10 +22,13 @@ for batch and stream (SIGMOD 2018, PAPERS.md). Semantics mapping
 - Q-C's global window + running sum is exactly Spark's ungrouped
   streaming aggregation in update mode.
 
-State at scale: per-key window state lives in the executor StateStore
-(RocksDB provider on a real cluster — conf
-``spark.sql.streaming.stateStore.providerClass``); watermark eviction
-bounds it to (windows per key in the 300 s horizon).
+State: per-key window state lives in Spark's default HDFS-backed
+StateStore (executor heap, like the reference's unconfigured Flink
+state backend); watermark eviction bounds it to (windows per key in the
+300 s horizon). No query here chooses a provider: an operator who needs
+another one sets the session's state-store provider class with
+``--conf``, and a query restarted on an existing checkpoint keeps the
+provider recorded in that checkpoint's offset log (SCALE.md).
 """
 
 from __future__ import annotations
@@ -40,10 +43,6 @@ from pyspark.sql.streaming import StreamingQuery
 WATERMARK_S = 300  # Main.java:66 Time.seconds(300)
 WATERMARK = f"{WATERMARK_S} seconds"
 TRIGGER = "5 seconds"
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
 
 
 def ensure_event_time(df: DataFrame, ts_col: str) -> DataFrame:
@@ -74,38 +73,13 @@ def start_query(
     foreach_batch: Callable[[DataFrame, int], None] | None = None,
     checkpoint_dir: str | None = None,
     available_now: bool = False,
-    state_store: str | None = None,
 ) -> StreamingQuery:
     """writeStream wiring shared by every pipeline: the 5 s processing-time
     trigger (Main.java:88) and, without ``foreach_batch``, the memory sink.
 
     ``available_now=True`` drains the source and stops — the mode the
     replay tests use for deterministic stream==batch assertions.
-
-    ``state_store="rocksdb"`` selects the RocksDB state store provider
-    for this query — the 100 TB streaming-state path: the default
-    HDFS-backed provider keeps every key-window pair's state in executor
-    HEAP (state size is then bounded by executor memory), while RocksDB
-    spills to local SSD and bounds only the working set. Changelog
-    checkpointing is enabled with it so per-batch commits upload deltas
-    instead of full SST snapshots. The provider class is a session conf
-    captured by each query AT START, so it is set here just before
-    ``start()``; queries already running are unaffected, but set it back
-    (or pass ``state_store=None``, which leaves the conf untouched) before
-    concurrently starting a query that must use the default provider.
     """
-    if state_store is not None:
-        spark = df.sparkSession
-        if state_store == "rocksdb":
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-                "true",
-            )
-        elif state_store in ("hdfs", "default"):
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            raise ValueError(f"unknown state_store {state_store!r}")
     w = df.writeStream.queryName(name).outputMode(output_mode)
     if available_now:
         w = w.trigger(availableNow=True)

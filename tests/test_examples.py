@@ -6,16 +6,32 @@ and the twitter job's four-query fan-out over a file replay."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 import shutil
+import sys
 import tempfile
 
 from pyspark.sql import types as T
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "examples"))
+
+
+def test_package_and_apps_import_from_this_checkout():
+    """The package and the example apps resolve under the checkout that
+    holds this test, so a copy of the repo (a CI workspace, an exported
+    parent commit) tests its own code and not another checkout's."""
+    import corpus_prep_app
+
+    import flink_streaming_twitter_spark
+
+    repo = os.path.realpath(REPO)
+    for mod in (flink_streaming_twitter_spark, corpus_prep_app):
+        path = os.path.realpath(mod.__file__)
+        assert os.path.commonpath([repo, path]) == repo, (mod.__name__, path)
+
 
 def test_corpus_prep_app_end_to_end(spark, sf_dir):
-    import sys
-
-    sys.path.insert(0, "/root/repo/examples")
     from corpus_prep_app import run
 
     out = tempfile.mkdtemp(prefix="corpus_smoke_")
@@ -77,12 +93,6 @@ def test_corpus_prep_app_drops_null_text_documents(spark):
     md5(NULL) is one digest for all of them, so the keep-first cap would
     otherwise keep the lowest NULL-text id with NULL features and add a
     profile row with NULL totals."""
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples")
-    )
     from corpus_prep_app import run
 
     src = tempfile.mkdtemp(prefix="corpus_null_src_")
@@ -119,9 +129,6 @@ def test_twitter_stream_app_fans_out_four_pipelines(spark):
     (same parse→pipeline path; the broker itself can't exist here). All
     four reference measurements must receive points, and the points
     must render as InfluxDB line protocol."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/examples")
     from twitter_stream_app import build_queries
 
     from flink_streaming_twitter_spark.streaming.sinks import (
@@ -158,7 +165,6 @@ def test_twitter_stream_app_fans_out_four_pipelines(spark):
         # data file before the flush file even on coarse-mtime
         # filesystems (flush first would watermark-drop every data row)
         import glob
-        import os
         import time as _time
 
         stamped: set[str] = set()

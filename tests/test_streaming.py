@@ -8,9 +8,12 @@ answer once the source is drained.
 from __future__ import annotations
 
 import datetime as dt
+import os
 import shutil
 import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
@@ -43,6 +46,29 @@ BASE = dt.datetime(2024, 1, 1, 0, 0, 0)
 def _watermarked(stream, delay=WATERMARK):
     """The input every pipeline operator runs on as a stream."""
     return ensure_event_time(stream, "ts").withWatermark("ts", delay)
+
+
+def _write_flat(d, parts, cols=("event_type",), start=0):
+    """Write each part as ONE flat parquet file ``f{i:02d}.parquet`` in
+    ``d``, numbered from ``start`` (the file source does not admit nested
+    .parquet directories), with strictly increasing mtimes that pin the
+    order the file source admits them in — the layout the gate drain
+    harness uses. A part is a list of ``(ts, *cols)`` rows, ``ts`` a
+    datetime or whole seconds after BASE."""
+    for i, part in enumerate(parts, start=start):
+        p = f"{d}/f{i:02d}.parquet"
+        ts, *values = zip(*part)
+        t = pa.table(
+            {
+                "ts": pa.array(
+                    [BASE + dt.timedelta(seconds=v) if isinstance(v, int) else v for v in ts],
+                    pa.timestamp("us"),
+                ),
+                **{c: pa.array(list(v)) for c, v in zip(cols, values)},
+            }
+        )
+        pq.write_table(t, p)
+        os.utime(p, (1_700_000_000 + i * 3600,) * 2)
 
 
 @pytest.fixture()
@@ -85,66 +111,6 @@ def test_stream_windowed_counts_equal_batch(spark, replay_dir):
         for r in spark.sql("SELECT * FROM wc_stream").collect()
     }
     assert got == expected and len(got) > 0
-
-
-def test_stream_windowed_counts_on_rocksdb_state_store(spark, replay_dir):
-    """Same stream==batch property with the RocksDB state store provider —
-    the 100 TB streaming-state path (state on local SSD, not executor
-    heap). Asserts the state actually went through RocksDB: the
-    checkpoint's state dir holds SST/zip snapshots, not the default
-    provider's .delta files."""
-    import glob
-    import os
-
-    ckpt = tempfile.mkdtemp(prefix="rocks_ck_")
-    try:
-        stream = (
-            spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(replay_dir)
-        )
-        wm = _watermarked(stream)
-        q = start_query(
-            sliding_window_counts(wm, "ts", "event_type", "10 seconds", "5 seconds"),
-            name="wc_rocks",
-            output_mode="complete",
-            available_now=True,
-            checkpoint_dir=ckpt,
-            state_store="rocksdb",
-        )
-        assert q.awaitTermination(120)
-
-        batch = spark.read.schema(SCHEMA).parquet(replay_dir)
-        expected = {
-            (r.w_start, r.event_type): r.cnt
-            for r in (
-                batch.groupBy(
-                    F.window("ts", "10 seconds", "5 seconds").alias("window"), "event_type"
-                )
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .select(F.col("window.start").cast("long").alias("w_start"), "event_type", "cnt")
-                .collect()
-            )
-        }
-        got = {
-            (r.w_start, r.event_type): r.cnt
-            for r in spark.sql("SELECT * FROM wc_rocks").collect()
-        }
-        assert got == expected and len(got) > 0
-
-        # RocksDB evidence: with changelog checkpointing each batch commits
-        # a .changelog delta (snapshots/.zip+SSTs appear on the periodic
-        # maintenance cadence); the default HDFS provider would have
-        # written .delta files instead
-        state_files = glob.glob(os.path.join(ckpt, "state", "**"), recursive=True)
-        assert any(
-            f.endswith((".zip", ".changelog")) or "SSTs" in f for f in state_files
-        )
-        assert not any(f.endswith(".delta") for f in state_files)
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        spark.conf.unset(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-        )
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_stream_running_total_converges(spark, replay_dir):
@@ -833,8 +799,7 @@ def test_stream_dedup_reemits_after_watermark_eviction(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-@pytest.mark.parametrize("provider", ["default", "rocksdb"])
-def test_streaming_restart_recovers_state_exactly_once(spark, provider):
+def test_streaming_restart_recovers_state_exactly_once(spark):
     """Checkpoint recovery — the Structured Streaming guarantee a 100 TB
     deployment actually rides (executors die; queries restart) that the
     availableNow drains alone never exercise. An append-mode windowed
@@ -850,10 +815,6 @@ def test_streaming_restart_recovers_state_exactly_once(spark, provider):
       AFTER it (w_end <= the restart boundary yet absent from phase 1)
       — proving they were finalized out of RECOVERED state, since the
       file-source log skips the already-processed files on restart.
-
-    Parametrized over both state-store providers: the default HDFS-backed
-    store and RocksDB with changelog checkpointing (per-batch delta
-    uploads) — the provider SCALE.md designates for real state volumes.
     """
     rows = [
         (BASE + dt.timedelta(seconds=s), "abc"[s % 3])
@@ -861,26 +822,6 @@ def test_streaming_restart_recovers_state_exactly_once(spark, provider):
     ]
     rows.sort(key=lambda r: r[0])
     thirds = [rows[:15], rows[15:30], rows[30:]]
-
-    def write_files(d, parts, start=0):
-        # FLAT single parquet files (the file source does not admit
-        # nested .parquet directories), mtimes pin admission order —
-        # same layout the gate drain harness uses
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        for i, part in enumerate(parts, start=start):
-            p = f"{d}/f{i:02d}.parquet"
-            t = pa.table(
-                {
-                    "ts": pa.array([r[0] for r in part], pa.timestamp("us")),
-                    "event_type": pa.array([r[1] for r in part]),
-                }
-            )
-            pq.write_table(t, p)
-            os.utime(p, (1_700_000_000 + i * 3600,) * 2)
 
     def drain(src_dir, view, cp):
         # foreachBatch, not the memory sink: memory refuses to recover
@@ -907,38 +848,25 @@ def test_streaming_restart_recovers_state_exactly_once(spark, provider):
             available_now=True,
             checkpoint_dir=cp,
             foreach_batch=collect,
-            state_store=None if provider == "default" else provider,
         )
         assert q.awaitTermination(300), f"{view}: drain timed out"
         return out
 
-    conf_keys = (
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-    )
-    saved = {}
-    for c in conf_keys:
-        try:
-            saved[c] = spark.conf.get(c)
-        except Exception:
-            saved[c] = None
-    work = tempfile.mkdtemp(prefix=f"restart_{provider}_")
+    work = tempfile.mkdtemp(prefix="restart_")
     try:
-        import os
-
         ref_dir, rec_dir = f"{work}/ref", f"{work}/rec"
         os.makedirs(ref_dir), os.makedirs(rec_dir)
-        write_files(ref_dir, thirds)
-        reference = drain(ref_dir, f"rc_ref_{provider}", f"{work}/cp_ref")
+        _write_flat(ref_dir, thirds)
+        reference = drain(ref_dir, "rc_ref", f"{work}/cp_ref")
         assert reference  # windows finalized under the 40 s watermark
 
-        write_files(rec_dir, thirds[:2])
-        p1 = drain(rec_dir, f"rc_p1_{provider}", f"{work}/cp_rec")
+        _write_flat(rec_dir, thirds[:2])
+        p1 = drain(rec_dir, "rc_p1", f"{work}/cp_rec")
         # add the third file (later mtime) and RESTART from the same
         # checkpoint — a fresh query object, recovered offsets + state;
         # the source log already tracks f00/f01, so only f02 is new work
-        write_files(rec_dir, [thirds[2]], start=2)
-        p2 = drain(rec_dir, f"rc_p2_{provider}", f"{work}/cp_rec")
+        _write_flat(rec_dir, [thirds[2]], start=2)
+        p2 = drain(rec_dir, "rc_p2", f"{work}/cp_rec")
 
         assert p1 and p2
         assert p1 | p2 == reference  # nothing lost across the restart
@@ -951,18 +879,9 @@ def test_streaming_restart_recovers_state_exactly_once(spark, provider):
         assert held_over, "no window crossed the restart in recovered state"
     finally:
         shutil.rmtree(work, ignore_errors=True)
-        for c, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(c)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(c, v)
 
 
-@pytest.mark.parametrize("provider", ["default", "rocksdb"])
-def test_session_window_merges_across_restart(spark, provider):
+def test_session_window_merges_across_restart(spark):
     """Session-window state has a different layout than windowed aggs
     (per-key session ranges that MERGE), so restart recovery gets its
     own pin: a session with events on BOTH sides of the restart — last
@@ -973,31 +892,14 @@ def test_session_window_merges_across_restart(spark, provider):
     partition an uninterrupted run exactly (nothing lost, nothing
     re-emitted), and the trailing still-open session never emits in
     either run."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     files = [
-        [0, 5, 10, 40, 45, 80, 85, 90, 95],
-        [130, 135, 170, 175, 180, 220, 225],
-        [233, 238, 270, 275],
+        [(s, "a") for s in part]
+        for part in (
+            [0, 5, 10, 40, 45, 80, 85, 90, 95],
+            [130, 135, 170, 175, 180, 220, 225],
+            [233, 238, 270, 275],
+        )
     ]
-
-    def write_files(d, parts, start=0):
-        for i, part in enumerate(parts, start=start):
-            p = f"{d}/f{i:02d}.parquet"
-            t = pa.table(
-                {
-                    "ts": pa.array(
-                        [BASE + dt.timedelta(seconds=s) for s in part],
-                        pa.timestamp("us"),
-                    ),
-                    "event_type": pa.array(["a"] * len(part)),
-                }
-            )
-            pq.write_table(t, p)
-            os.utime(p, (1_700_000_000 + i * 3600,) * 2)
 
     def drain(src_dir, view, cp):
         out: set = set()
@@ -1021,22 +923,11 @@ def test_session_window_merges_across_restart(spark, provider):
             available_now=True,
             checkpoint_dir=cp,
             foreach_batch=collect,
-            state_store=None if provider == "default" else provider,
         )
         assert q.awaitTermination(300), f"{view}: drain timed out"
         return out
 
-    conf_keys = (
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-    )
-    saved = {}
-    for c in conf_keys:
-        try:
-            saved[c] = spark.conf.get(c)
-        except Exception:
-            saved[c] = None
-    work = tempfile.mkdtemp(prefix=f"sess_restart_{provider}_")
+    work = tempfile.mkdtemp(prefix="sess_restart_")
     # UTC-pinned like every other epoch in this suite: the naive parquet
     # timestamps are wall-clock values that Spark interprets in the session
     # timezone (UTC, session.py), so the host TZ must not leak in.
@@ -1044,13 +935,13 @@ def test_session_window_merges_across_restart(spark, provider):
     try:
         ref_dir, rec_dir = f"{work}/ref", f"{work}/rec"
         os.makedirs(ref_dir), os.makedirs(rec_dir)
-        write_files(ref_dir, files)
-        reference = drain(ref_dir, f"sr_ref_{provider}", f"{work}/cp_ref")
+        _write_flat(ref_dir, files)
+        reference = drain(ref_dir, "sr_ref", f"{work}/cp_ref")
 
-        write_files(rec_dir, files[:2])
-        p1 = drain(rec_dir, f"sr_p1_{provider}", f"{work}/cp_rec")
-        write_files(rec_dir, [files[2]], start=2)
-        p2 = drain(rec_dir, f"sr_p2_{provider}", f"{work}/cp_rec")
+        _write_flat(rec_dir, files[:2])
+        p1 = drain(rec_dir, "sr_p1", f"{work}/cp_rec")
+        _write_flat(rec_dir, [files[2]], start=2)
+        p2 = drain(rec_dir, "sr_p2", f"{work}/cp_rec")
 
         assert p1 | p2 == reference and not (p1 & p2)
         # the session that straddles the restart: [220, 225] recovered
@@ -1063,50 +954,20 @@ def test_session_window_merges_across_restart(spark, provider):
         assert len(p1) == 5
     finally:
         shutil.rmtree(work, ignore_errors=True)
-        for c, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(c)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(c, v)
 
 
-@pytest.mark.parametrize("provider", ["default", "rocksdb"])
-def test_interval_join_buffers_across_restart(spark, provider):
+def test_interval_join_buffers_across_restart(spark):
     """Stream-stream join state is the third distinct state layout
     (buffered input rows on both legs, evicted by the opposite side's
     watermark + range bound): a view buffered BEFORE the restart must
     pair with a click arriving AFTER it — the restarted query can only
     produce that pair from checkpoint-recovered join state, since the
     file-source log never re-reads the view's file."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     files = [
         [(0, "u1", "view"), (2, "u1", "click"), (40, "u2", "view")],
         [(60, "u2", "click"), (100, "u1", "view")],  # view buffered at restart
         [(103, "u1", "click"), (120, "u3", "click")],  # click pairs post-restart
     ]
-
-    def write_files(d, parts, start=0):
-        for i, part in enumerate(parts, start=start):
-            p = f"{d}/f{i:02d}.parquet"
-            t = pa.table(
-                {
-                    "ts": pa.array(
-                        [BASE + dt.timedelta(seconds=s) for s, _u, _e in part],
-                        pa.timestamp("us"),
-                    ),
-                    "user_id": pa.array([u for _s, u, _e in part]),
-                    "event_type": pa.array([e for _s, _u, e in part]),
-                }
-            )
-            pq.write_table(t, p)
-            os.utime(p, (1_700_000_000 + i * 3600,) * 2)
 
     schema = T.StructType(
         [
@@ -1145,33 +1006,23 @@ def test_interval_join_buffers_across_restart(spark, provider):
             available_now=True,
             checkpoint_dir=cp,
             foreach_batch=collect,
-            state_store=None if provider == "default" else provider,
         )
         assert q.awaitTermination(300), f"{view}: drain timed out"
         return out
 
-    conf_keys = (
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-    )
-    saved = {}
-    for c in conf_keys:
-        try:
-            saved[c] = spark.conf.get(c)
-        except Exception:
-            saved[c] = None
-    work = tempfile.mkdtemp(prefix=f"join_restart_{provider}_")
+    work = tempfile.mkdtemp(prefix="join_restart_")
     epoch = int(BASE.replace(tzinfo=dt.timezone.utc).timestamp())
     try:
         ref_dir, rec_dir = f"{work}/ref", f"{work}/rec"
         os.makedirs(ref_dir), os.makedirs(rec_dir)
-        write_files(ref_dir, files)
-        reference = drain(ref_dir, f"jr_ref_{provider}", f"{work}/cp_ref")
+        cols = ("user_id", "event_type")
+        _write_flat(ref_dir, files, cols)
+        reference = drain(ref_dir, "jr_ref", f"{work}/cp_ref")
 
-        write_files(rec_dir, files[:2])
-        p1 = drain(rec_dir, f"jr_p1_{provider}", f"{work}/cp_rec")
-        write_files(rec_dir, [files[2]], start=2)
-        p2 = drain(rec_dir, f"jr_p2_{provider}", f"{work}/cp_rec")
+        _write_flat(rec_dir, files[:2], cols)
+        p1 = drain(rec_dir, "jr_p1", f"{work}/cp_rec")
+        _write_flat(rec_dir, [files[2]], cols, start=2)
+        p2 = drain(rec_dir, "jr_p2", f"{work}/cp_rec")
 
         assert p1 | p2 == reference and not (p1 & p2)
         assert ("u1", epoch + 0, epoch + 2) in p1  # matched pre-restart
@@ -1183,28 +1034,14 @@ def test_interval_join_buffers_across_restart(spark, provider):
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
-        for c, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(c)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(c, v)
 
 
-@pytest.mark.parametrize("provider", ["default", "rocksdb"])
-def test_dedup_within_watermark_state_survives_restart(spark, provider):
+def test_dedup_within_watermark_state_survives_restart(spark):
     """Fourth and final state layout in the restart-recovery suite: the
     built-in dropDuplicatesWithinWatermark key store. A key first
     emitted before the restart recurs after it, still inside the
     watermark horizon — the restarted query must swallow it out of
     recovered dedup state; a new post-restart key emits once."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     # watermark 60 s horizon; key "a" recurs at t=70 (within 60 s of its
     # state's expiry-watermark) post-restart, key "c" is new
     files = [
@@ -1212,21 +1049,6 @@ def test_dedup_within_watermark_state_survives_restart(spark, provider):
         [(40, "a"), (45, "b")],  # duplicates swallowed pre-restart
         [(70, "a"), (75, "c")],  # "a" recurs post-restart; "c" is new
     ]
-
-    def write_files(d, parts, start=0):
-        for i, part in enumerate(parts, start=start):
-            p = f"{d}/f{i:02d}.parquet"
-            t = pa.table(
-                {
-                    "ts": pa.array(
-                        [BASE + dt.timedelta(seconds=s) for s, _k in part],
-                        pa.timestamp("us"),
-                    ),
-                    "event_type": pa.array([k for _s, k in part]),
-                }
-            )
-            pq.write_table(t, p)
-            os.utime(p, (1_700_000_000 + i * 3600,) * 2)
 
     def drain(src_dir, view, cp):
         out: list = []
@@ -1249,33 +1071,22 @@ def test_dedup_within_watermark_state_survives_restart(spark, provider):
             available_now=True,
             checkpoint_dir=cp,
             foreach_batch=collect,
-            state_store=None if provider == "default" else provider,
         )
         assert q.awaitTermination(300), f"{view}: drain timed out"
         return out
 
-    conf_keys = (
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-    )
-    saved = {}
-    for c in conf_keys:
-        try:
-            saved[c] = spark.conf.get(c)
-        except Exception:
-            saved[c] = None
-    work = tempfile.mkdtemp(prefix=f"ddwr_{provider}_")
+    work = tempfile.mkdtemp(prefix="ddwr_")
     epoch = int(BASE.replace(tzinfo=dt.timezone.utc).timestamp())
     try:
         ref_dir, rec_dir = f"{work}/ref", f"{work}/rec"
         os.makedirs(ref_dir), os.makedirs(rec_dir)
-        write_files(ref_dir, files)
-        reference = drain(ref_dir, f"dd_ref_{provider}", f"{work}/cp_ref")
+        _write_flat(ref_dir, files)
+        reference = drain(ref_dir, "dd_ref", f"{work}/cp_ref")
 
-        write_files(rec_dir, files[:2])
-        p1 = drain(rec_dir, f"dd_p1_{provider}", f"{work}/cp_rec")
-        write_files(rec_dir, [files[2]], start=2)
-        p2 = drain(rec_dir, f"dd_p2_{provider}", f"{work}/cp_rec")
+        _write_flat(rec_dir, files[:2])
+        p1 = drain(rec_dir, "dd_p1", f"{work}/cp_rec")
+        _write_flat(rec_dir, [files[2]], start=2)
+        p2 = drain(rec_dir, "dd_p2", f"{work}/cp_rec")
 
         assert sorted(p1 + p2) == sorted(reference)
         assert sorted(k for k, _t in p1) == ["a", "b"]
@@ -1284,18 +1095,9 @@ def test_dedup_within_watermark_state_survives_restart(spark, provider):
         assert [(k, t) for k, t in p2] == [("c", epoch + 75)]
     finally:
         shutil.rmtree(work, ignore_errors=True)
-        for c, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(c)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(c, v)
 
 
-@pytest.mark.parametrize("provider", ["default", "rocksdb"])
-def test_chained_two_stage_trending_recovers_across_restart(spark, provider):
+def test_chained_two_stage_trending_recovers_across_restart(spark):
     """Sixth restart pin: the natively CHAINED two-aggregation query —
     two stateful operators whose stores must recover coherently under
     ONE watermark. The restart lands while the stage-1 windows over the
@@ -1305,31 +1107,11 @@ def test_chained_two_stage_trending_recovers_across_restart(spark, provider):
     — flow through both recovered stages. The flush event's own windows
     stay open forever, so every post-restart emission is recovered-state
     work."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     files = [
         [(0, "a"), (1, "a"), (2, "b"), (6, "a"), (7, "b"), (8, "b"), (11, "a")],
         [(40, "b"), (41, "b"), (44, "a")],  # windows open at restart
         [(100, "zz_flush")],  # advances the watermark post-restart
     ]
-
-    def write_files(d, parts, start=0):
-        for i, part in enumerate(parts, start=start):
-            p = f"{d}/f{i:02d}.parquet"
-            t = pa.table(
-                {
-                    "ts": pa.array(
-                        [BASE + dt.timedelta(seconds=s) for s, _k in part],
-                        pa.timestamp("us"),
-                    ),
-                    "event_type": pa.array([k for _s, k in part]),
-                }
-            )
-            pq.write_table(t, p)
-            os.utime(p, (1_700_000_000 + i * 3600,) * 2)
 
     def drain(src_dir, view, cp):
         out: set = set()
@@ -1353,33 +1135,22 @@ def test_chained_two_stage_trending_recovers_across_restart(spark, provider):
             available_now=True,
             checkpoint_dir=cp,
             foreach_batch=collect,
-            state_store=None if provider == "default" else provider,
         )
         assert q.awaitTermination(300), f"{view}: drain timed out"
         return out
 
-    conf_keys = (
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-    )
-    saved = {}
-    for c in conf_keys:
-        try:
-            saved[c] = spark.conf.get(c)
-        except Exception:
-            saved[c] = None
-    work = tempfile.mkdtemp(prefix=f"chain_restart_{provider}_")
+    work = tempfile.mkdtemp(prefix="chain_restart_")
     epoch = int(BASE.replace(tzinfo=dt.timezone.utc).timestamp())
     try:
         ref_dir, rec_dir = f"{work}/ref", f"{work}/rec"
         os.makedirs(ref_dir), os.makedirs(rec_dir)
-        write_files(ref_dir, files)
-        reference = drain(ref_dir, f"ch_ref_{provider}", f"{work}/cp_ref")
+        _write_flat(ref_dir, files)
+        reference = drain(ref_dir, "ch_ref", f"{work}/cp_ref")
 
-        write_files(rec_dir, files[:2])
-        p1 = drain(rec_dir, f"ch_p1_{provider}", f"{work}/cp_rec")
-        write_files(rec_dir, [files[2]], start=2)
-        p2 = drain(rec_dir, f"ch_p2_{provider}", f"{work}/cp_rec")
+        _write_flat(rec_dir, files[:2])
+        p1 = drain(rec_dir, "ch_p1", f"{work}/cp_rec")
+        _write_flat(rec_dir, [files[2]], start=2)
+        p2 = drain(rec_dir, "ch_p2", f"{work}/cp_rec")
 
         assert p1 | p2 == reference and not (p1 & p2)
         assert p1 and p2
@@ -1392,14 +1163,6 @@ def test_chained_two_stage_trending_recovers_across_restart(spark, provider):
         assert (epoch + 45, "b", 2) in p2
     finally:
         shutil.rmtree(work, ignore_errors=True)
-        for c, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(c)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(c, v)
 
 
 def test_running_total_continues_from_recovered_sum_after_restart(spark):
@@ -1410,31 +1173,7 @@ def test_running_total_continues_from_recovered_sum_after_restart(spark):
     only the new 3-event file and its final emission must be 10 — a
     number producible only by adding the new events to checkpoint-
     recovered aggregate state."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    files = [
-        [0, 1, 2, 6],
-        [7, 8, 11],
-        [20, 21, 25],
-    ]
-
-    def write_files(d, parts, start=0):
-        for i, part in enumerate(parts, start=start):
-            p = f"{d}/f{i:02d}.parquet"
-            t = pa.table(
-                {
-                    "ts": pa.array(
-                        [BASE + dt.timedelta(seconds=s) for s in part],
-                        pa.timestamp("us"),
-                    ),
-                    "event_type": pa.array(["a"] * len(part)),
-                }
-            )
-            pq.write_table(t, p)
-            os.utime(p, (1_700_000_000 + i * 3600,) * 2)
+    files = [[(s, "a") for s in part] for part in ([0, 1, 2, 6], [7, 8, 11], [20, 21, 25])]
 
     def drain(src_dir, view, cp):
         totals: list = []
@@ -1463,14 +1202,12 @@ def test_running_total_continues_from_recovered_sum_after_restart(spark):
 
     work = tempfile.mkdtemp(prefix="rt_restart_")
     try:
-        import os
-
         rec_dir = f"{work}/rec"
         os.makedirs(rec_dir)
-        write_files(rec_dir, files[:2])
+        _write_flat(rec_dir, files[:2])
         p1 = drain(rec_dir, "rt_p1", f"{work}/cp")
         assert p1[-1] == 7  # running total after the first two files
-        write_files(rec_dir, [files[2]], start=2)
+        _write_flat(rec_dir, [files[2]], start=2)
         p2 = drain(rec_dir, "rt_p2", f"{work}/cp")
         # the restarted query saw only 3 new events; every emission being
         # 10 (never 3) requires the recovered sum (the availableNow
@@ -1482,8 +1219,7 @@ def test_running_total_continues_from_recovered_sum_after_restart(spark):
         shutil.rmtree(work, ignore_errors=True)
 
 
-@pytest.mark.parametrize("provider", ["default", "rocksdb"])
-def test_midbatch_failure_foreachbatch_redelivers_uncommitted_batch(spark, provider):
+def test_midbatch_failure_foreachbatch_redelivers_uncommitted_batch(spark):
     """Failure INSIDE an uncommitted micro-batch — the recovery scenario
     the clean-boundary restart suite above never exercises. The
     foreachBatch sink records each delivery, then raises on the FIRST
@@ -1495,26 +1231,9 @@ def test_midbatch_failure_foreachbatch_redelivers_uncommitted_batch(spark, provi
     replay is what makes an idempotent-by-batch-id sink exactly-once),
     committed batches are never re-delivered, and the last-delivery-per-
     batch-id view equals an uninterrupted run exactly."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     rows = [(BASE + dt.timedelta(seconds=s), "abc"[s % 3]) for s in range(0, 300, 7)]
     thirds = [rows[:15], rows[15:30], rows[30:]]
     FAIL_BID = 1
-
-    def write_files(d, parts, start=0):
-        for i, part in enumerate(parts, start=start):
-            p = f"{d}/f{i:02d}.parquet"
-            t = pa.table(
-                {
-                    "ts": pa.array([r[0] for r in part], pa.timestamp("us")),
-                    "event_type": pa.array([r[1] for r in part]),
-                }
-            )
-            pq.write_table(t, p)
-            os.utime(p, (1_700_000_000 + i * 3600,) * 2)
 
     def drain(src_dir, view, cp, deliveries, fail_once_on=None):
         tripped = {"done": fail_once_on is None}
@@ -1541,7 +1260,6 @@ def test_midbatch_failure_foreachbatch_redelivers_uncommitted_batch(spark, provi
             available_now=True,
             checkpoint_dir=cp,
             foreach_batch=sink,
-            state_store=None if provider == "default" else provider,
         )
         try:
             assert q.awaitTermination(300), f"{view}: drain timed out"
@@ -1549,31 +1267,19 @@ def test_midbatch_failure_foreachbatch_redelivers_uncommitted_batch(spark, provi
         except Exception as exc:  # StreamingQueryException on injected crash
             return exc
 
-    conf_keys = (
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-    )
-    saved = {}
-    for c in conf_keys:
-        try:
-            saved[c] = spark.conf.get(c)
-        except Exception:
-            saved[c] = None
-    work = tempfile.mkdtemp(prefix=f"midbatch_fb_{provider}_")
+    work = tempfile.mkdtemp(prefix="midbatch_fb_")
     try:
-        import os
-
         ref_dir, rec_dir = f"{work}/ref", f"{work}/rec"
         os.makedirs(ref_dir), os.makedirs(rec_dir)
-        write_files(ref_dir, thirds)
+        _write_flat(ref_dir, thirds)
         ref_deliveries: list = []
-        assert drain(ref_dir, f"mb_ref_{provider}", f"{work}/cp_ref", ref_deliveries) is None
+        assert drain(ref_dir, "mb_ref", f"{work}/cp_ref", ref_deliveries) is None
         reference = {bid: b for bid, b in ref_deliveries}
 
-        write_files(rec_dir, thirds)
+        _write_flat(rec_dir, thirds)
         deliveries: list = []
         exc = drain(
-            rec_dir, f"mb_p1_{provider}", f"{work}/cp_rec", deliveries, fail_once_on=FAIL_BID
+            rec_dir, "mb_p1", f"{work}/cp_rec", deliveries, fail_once_on=FAIL_BID
         )
         assert exc is not None and "injected sink crash" in str(exc)
         # batch 0 committed, batch 1 delivered once then crashed mid-batch
@@ -1581,7 +1287,7 @@ def test_midbatch_failure_foreachbatch_redelivers_uncommitted_batch(spark, provi
 
         # restart from the same checkpoint: fresh query object, same sink
         assert (
-            drain(rec_dir, f"mb_p2_{provider}", f"{work}/cp_rec", deliveries) is None
+            drain(rec_dir, "mb_p2", f"{work}/cp_rec", deliveries) is None
         )
         bids = [bid for bid, _ in deliveries]
         # at-least-once: the uncommitted batch re-delivers with the SAME id
@@ -1598,18 +1304,9 @@ def test_midbatch_failure_foreachbatch_redelivers_uncommitted_batch(spark, provi
         assert last == reference
     finally:
         shutil.rmtree(work, ignore_errors=True)
-        for c, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(c)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(c, v)
 
 
-@pytest.mark.parametrize("provider", ["default", "rocksdb"])
-def test_midbatch_failure_file_sink_stays_exactly_once(spark, provider):
+def test_midbatch_failure_file_sink_stays_exactly_once(spark):
     """The other half of the delivery contract: the FILE sink is
     EXACTLY-ONCE across a mid-batch failure, because output files only
     become visible through the per-batch _spark_metadata commit. Batch 2's
@@ -1620,24 +1317,8 @@ def test_midbatch_failure_file_sink_stays_exactly_once(spark, provider):
     the file-source log never re-admits f00/f01, the WAL'd batch
     re-executes, and the metadata-log-aware read of the output directory
     must equal an uninterrupted run exactly — no loss, no duplicates."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     rows = [(BASE + dt.timedelta(seconds=s), "abc"[s % 3]) for s in range(0, 300, 7)]
     thirds = [rows[:15], rows[15:30], rows[30:]]
-
-    def write_file(d, i, part):
-        p = f"{d}/f{i:02d}.parquet"
-        t = pa.table(
-            {
-                "ts": pa.array([r[0] for r in part], pa.timestamp("us")),
-                "event_type": pa.array([r[1] for r in part]),
-            }
-        )
-        pq.write_table(t, p)
-        os.utime(p, (1_700_000_000 + i * 3600,) * 2)
 
     def start(src_dir, view, cp, out_dir):
         stream = (
@@ -1665,43 +1346,22 @@ def test_midbatch_failure_file_sink_stays_exactly_once(spark, provider):
             for r in spark.read.parquet(out_dir).collect()
         )
 
-    conf_keys = (
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-    )
-    saved = {}
-    for c in conf_keys:
-        try:
-            saved[c] = spark.conf.get(c)
-        except Exception:
-            saved[c] = None
-    if provider == "rocksdb":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
-    work = tempfile.mkdtemp(prefix=f"midbatch_fs_{provider}_")
+    work = tempfile.mkdtemp(prefix="midbatch_fs_")
     try:
         ref_dir, rec_dir = f"{work}/ref", f"{work}/rec"
         os.makedirs(ref_dir), os.makedirs(rec_dir)
-        for i, part in enumerate(thirds):
-            write_file(ref_dir, i, part)
-        q = start(ref_dir, f"fs_ref_{provider}", f"{work}/cp_ref", f"{work}/out_ref")
+        _write_flat(ref_dir, thirds)
+        q = start(ref_dir, "fs_ref", f"{work}/cp_ref", f"{work}/out_ref")
         assert q.awaitTermination(300)
         reference = read_sink(f"{work}/out_ref")
         assert reference  # watermark finalized windows into the sink
 
-        write_file(rec_dir, 0, thirds[0])
-        write_file(rec_dir, 1, thirds[1])
+        _write_flat(rec_dir, thirds[:2])
         # f02: right path, garbage bytes — batch 2 fails at scan time
         with open(f"{rec_dir}/f02.parquet", "wb") as fh:
             fh.write(b"this is not a parquet file")
         os.utime(f"{rec_dir}/f02.parquet", (1_700_000_000 + 2 * 3600,) * 2)
-        q = start(rec_dir, f"fs_p1_{provider}", f"{work}/cp_rec", f"{work}/out_rec")
+        q = start(rec_dir, "fs_p1", f"{work}/cp_rec", f"{work}/out_rec")
         with pytest.raises(Exception):
             q.awaitTermination(300)
         committed_early = read_sink(f"{work}/out_rec")
@@ -1711,8 +1371,8 @@ def test_midbatch_failure_file_sink_stays_exactly_once(spark, provider):
         # fix the file IN PLACE (same path — the source log keys on path,
         # so the repaired file is re-read by the WAL'd batch, not
         # re-admitted as new input) and restart from the same checkpoint
-        write_file(rec_dir, 2, thirds[2])
-        q = start(rec_dir, f"fs_p2_{provider}", f"{work}/cp_rec", f"{work}/out_rec")
+        _write_flat(rec_dir, [thirds[2]], start=2)
+        q = start(rec_dir, "fs_p2", f"{work}/cp_rec", f"{work}/out_rec")
         assert q.awaitTermination(300)
         assert read_sink(f"{work}/out_rec") == reference  # exactly-once
 
@@ -1734,18 +1394,9 @@ def test_midbatch_failure_file_sink_stays_exactly_once(spark, provider):
         assert read_sink(f"{work}/out_rec") == reference  # orphan ignored
     finally:
         shutil.rmtree(work, ignore_errors=True)
-        for c, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(c)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(c, v)
 
 
-@pytest.mark.parametrize("provider", ["default", "rocksdb"])
-def test_watermark_drop_count_matches_predicted_late_rows(spark, provider):
+def test_watermark_drop_count_matches_predicted_late_rows(spark):
     """Positive pin of the late-data DROP path: every other drain asserts
     zero drops; here rows are deliberately late and the engine-reported
     stateOperators.numRowsDroppedByWatermark must equal the count the
@@ -1763,11 +1414,6 @@ def test_watermark_drop_count_matches_predicted_late_rows(spark, provider):
     current, > 90 late-events) merges into live state and emits in the
     same batch rather than dropping. The surviving rows' finalized
     windows are cross-checked against a batch oracle."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     DELAY = 10
     SIZE = 20
     f00 = [0, 3, 18, 22, 41, 100]
@@ -1797,36 +1443,11 @@ def test_watermark_drop_count_matches_predicted_late_rows(spark, provider):
     assert len(predicted_dropped_state_rows) == 2
     assert 100 in survivors and 130 in survivors
 
-    def write_file(d, i, secs):
-        p = f"{d}/f{i:02d}.parquet"
-        t = pa.table(
-            {
-                "ts": pa.array(
-                    [BASE + dt.timedelta(seconds=s) for s in secs], pa.timestamp("us")
-                ),
-                "event_type": pa.array(["a"] * len(secs)),
-            }
-        )
-        pq.write_table(t, p)
-        os.utime(p, (1_700_000_000 + i * 3600,) * 2)
-
-    conf_keys = (
-        "spark.sql.streaming.stateStore.providerClass",
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-    )
-    saved = {}
-    for c in conf_keys:
-        try:
-            saved[c] = spark.conf.get(c)
-        except Exception:
-            saved[c] = None
-    work = tempfile.mkdtemp(prefix=f"latedrop_{provider}_")
+    work = tempfile.mkdtemp(prefix="latedrop_")
     try:
         src = f"{work}/src"
         os.makedirs(src)
-        write_file(src, 0, f00)
-        write_file(src, 1, f01)
-        write_file(src, 2, f02)
+        _write_flat(src, [[(s, "a") for s in f] for f in (f00, f01, f02)])
         got: set = set()
 
         def collect(batch_df, _bid):
@@ -1844,12 +1465,11 @@ def test_watermark_drop_count_matches_predicted_late_rows(spark, provider):
             sliding_window_counts(
                 wm, "ts", "event_type", f"{SIZE} seconds", f"{SIZE} seconds"
             ),
-            name=f"latedrop_{provider}",
+            name="latedrop",
             output_mode="append",
             available_now=True,
             checkpoint_dir=f"{work}/cp",
             foreach_batch=collect,
-            state_store=None if provider == "default" else provider,
         )
         assert q.awaitTermination(300), "drain timed out"
 
@@ -1873,14 +1493,6 @@ def test_watermark_drop_count_matches_predicted_late_rows(spark, provider):
         assert (epoch + 80, epoch + 100, 1) in got
     finally:
         shutil.rmtree(work, ignore_errors=True)
-        for c, v in saved.items():
-            if v is None:
-                try:
-                    spark.conf.unset(c)
-                except Exception:
-                    pass
-            else:
-                spark.conf.set(c, v)
 
 
 def test_processing_time_trigger_fits_5s_envelope(spark):
@@ -1978,11 +1590,6 @@ def test_far_future_event_poisons_watermark_and_evicts_stream_tail(spark):
     has no watermark — the parity boundary is semantics, not a bug).
     Deploy guidance (SCALE.md): sanity-bound event time at ingest,
     before the watermark assigner, like the NULL-ts contract."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     DELAY = 10
     SIZE = 20
     f00 = [0, 5, 18]
@@ -2008,25 +1615,11 @@ def test_far_future_event_poisons_watermark_and_evicts_stream_tail(spark):
     assert all(w_end(s) <= wm_after_poison for s in f03)   # f03 drops
     predicted_dropped_state_rows = {w_end(s) for s in f03}  # {80}
 
-    def write_file(d, i, secs):
-        p = f"{d}/f{i:02d}.parquet"
-        t = pa.table(
-            {
-                "ts": pa.array(
-                    [BASE + dt.timedelta(seconds=s) for s in secs], pa.timestamp("us")
-                ),
-                "event_type": pa.array(["a"] * len(secs)),
-            }
-        )
-        pq.write_table(t, p)
-        os.utime(p, (1_700_000_000 + i * 3600,) * 2)
-
     work = tempfile.mkdtemp(prefix="poisonwm_")
     try:
         src = f"{work}/src"
         os.makedirs(src)
-        for i, secs in enumerate((f00, f01, f02, f03)):
-            write_file(src, i, secs)
+        _write_flat(src, [[(s, "a") for s in f] for f in (f00, f01, f02, f03)])
         got: set = set()
 
         def collect(batch_df, _bid):
@@ -2095,11 +1688,6 @@ def test_sane_event_time_before_watermark_prevents_poison_eviction(spark):
     windows over the same guarded data. This is why the guard must sit
     upstream of withWatermark — the poisoned-watermark failure is
     unrecoverable downstream of it."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from flink_streaming_twitter_spark.functions.sanity import sane_event_time
 
     DELAY = 10
@@ -2111,25 +1699,11 @@ def test_sane_event_time_before_watermark_prevents_poison_eviction(spark):
     # deploy-side now+skew rule is modeled with explicit tight bounds
     LO, HI = "2024-01-01 00:00:00", "2024-01-02 00:00:00"
 
-    def write_file(d, i, secs):
-        p = f"{d}/f{i:02d}.parquet"
-        t = pa.table(
-            {
-                "ts": pa.array(
-                    [BASE + dt.timedelta(seconds=s) for s in secs], pa.timestamp("us")
-                ),
-                "event_type": pa.array(["a"] * len(secs)),
-            }
-        )
-        pq.write_table(t, p)
-        os.utime(p, (1_700_000_000 + i * 3600,) * 2)
-
     work = tempfile.mkdtemp(prefix="sanewm_")
     try:
         src = f"{work}/src"
         os.makedirs(src)
-        for i, secs in enumerate(files):
-            write_file(src, i, secs)
+        _write_flat(src, [[(s, "a") for s in f] for f in files])
         got: set = set()
 
         def collect(batch_df, _bid):

@@ -31,7 +31,30 @@ Spark parallelize and encode the scale knobs here so every entry point
   SQL conf, which ``spark.conf.set`` refuses
   (CANNOT_MODIFY_STATIC_CONFIG), so it is written to the session's
   SQLConf directly; a session created later with ``newSession()``
-  starts from the static value again.
+  starts from the static value again;
+- streaming checkpoints written through Spark's FileSystem-based
+  checkpoint file manager (``spark.sql.streaming.checkpointFileManagerClass``
+  = ``CHECKPOINT_FILE_MANAGER``). Spark's default, the FileContext-based
+  manager, commits every offset-log, commit-log, file-source-log and
+  state-store file by writing a temp file and renaming it, and without
+  the native Hadoop library the local file system's
+  ``FileContext.rename`` forks a ``readlink`` process for the source and
+  the destination of each rename (``RawLocalFileSystem.getFileLinkStatus``
+  → ``FileUtil.readLink``), for the file and its ``.crc``: most of the
+  processes the JVM forks while the four live queries run, on every
+  trigger of every query. The FileSystem-based manager renames with
+  ``FileSystem.rename``, which on the local file system is
+  ``File.renameTo`` and forks nothing. The trade-off: a local POSIX
+  rename overwrites, so the no-overwrite guard of the offset and commit
+  logs becomes check-then-rename — two drivers on one checkpoint (an
+  unsupported setup) could both write a batch where one would otherwise
+  fail. On HDFS, rename still refuses an existing destination. Creating
+  each checkpoint file still forks a ``chmod``; only the native Hadoop
+  library avoids that. A checkpoint written under Spark's default
+  manager restarts under this one with its state and offsets: the
+  manager changes how files are renamed, not what they hold.
+  ``get_or_create`` sets it on a provided session too; it is a runtime
+  conf, read each time a query opens its checkpoint.
 """
 
 from __future__ import annotations
@@ -41,6 +64,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
 
 
 def build_session(
@@ -77,6 +103,7 @@ def build_session(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -85,15 +112,17 @@ def build_session(
 
 def get_or_create(spark: SparkSession | None = None) -> SparkSession:
     """Reuse an externally provided session (the driver passes one) but make
-    sure the confs the engine's correctness depends on are applied, and
+    sure the confs the engine's correctness depends on are applied,
     per-call DataFrame debugging is off (module docstring: effective only
-    if no wrapped call ran in this process before)."""
+    if no wrapped call ran in this process before) and checkpoints use
+    the FileSystem-based file manager."""
     if spark is None:
         return build_session()
     # Session timezone must be UTC for window-epoch arithmetic to match the
     # oracle; these are runtime-settable confs.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
     # a static conf: spark.conf.set refuses it (module docstring)
     spark._jsparkSession.sessionState().conf().setConfString(
         "spark.python.sql.dataFrameDebugging.enabled", "false"

@@ -11,6 +11,10 @@ import shutil
 import sys
 import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
 from pyspark.sql import types as T
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -221,3 +225,130 @@ def test_twitter_stream_app_fans_out_four_pipelines(spark):
     finally:
         shutil.rmtree(d, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+class _DriverCrash(Exception):
+    """Raised by a sink after it shipped: the batch is in the offset log
+    but not in the commit log, as when a driver dies between the two."""
+
+
+def test_four_live_queries_restart_to_the_uninterrupted_finals(spark):
+    """Restart check for the production wiring: the four build_queries
+    queries crash mid-replay, after every sink shipped batch 1 and before
+    any of them committed it, and are restarted on the same checkpoints.
+
+    - What a dashboard reads at the end must equal an uninterrupted drain:
+      InfluxDB keeps the last write per (measurement, series, timestamp).
+      running_total is stamped at trigger time, so its series carries
+      wall-clock timestamps that no two runs share; only its latest
+      total is compared.
+    - The restart re-runs batch 1 and re-ships its points. A re-shipped
+      point is idempotent when it overwrites the point first shipped
+      (same series and timestamp, same value). None may be otherwise:
+      even running_total's ``current_timestamp()`` is the batch timestamp
+      the offset log recorded, so its replayed point lands on the first
+      one instead of writing a new point."""
+    from twitter_stream_app import build_queries
+
+    from flink_streaming_twitter_spark.streaming.sinks import to_influx_points
+
+    crash_batch = 1
+    tags = ["#spark", "#flink", "#kafka"]
+    base = dt.datetime(2024, 1, 1)
+    parts = [
+        [(s, f"t{s} {tags[s % 3]} {tags[s * 7 % 3] if s % 4 == 0 else ''}")
+         for s in range(a, a + 12)]
+        for a in (0, 12, 24, 36)
+    ]
+    # far-future flush so the append-mode Q-A finalizes its windows
+    parts.append([(2000, "#done")])
+    n_tweets = sum(map(len, parts))
+    schema = T.StructType(
+        [
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("lang", T.StringType()),
+        ]
+    )
+
+    def drain(src, ckpt, crash: bool) -> dict:
+        shipped: dict[str, list] = {}
+
+        def sink_factory(measurement, ts_col, tag_cols, field_cols):
+            def on_batch(batch_df, batch_id):
+                pts = to_influx_points(batch_df, measurement, ts_col, tag_cols, field_cols)
+                shipped.setdefault(measurement, []).extend(
+                    (batch_id, (p.ts, tuple(sorted(p.tags.items()))), tuple(p.fields))
+                    for p in pts.collect()
+                )
+                if crash and batch_id == crash_batch:
+                    raise _DriverCrash(measurement)
+
+            return on_batch
+
+        tweets = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+        for q in build_queries(tweets, sink_factory, ckpt, available_now=True):
+            if crash:
+                with pytest.raises(Exception, match="_DriverCrash"):
+                    q.awaitTermination(180)
+            else:
+                assert q.awaitTermination(180), f"{q.name} did not drain"
+                assert q.exception() is None
+        return shipped
+
+    def finals(*runs) -> dict:
+        out = {}
+        for run in runs:
+            for m, pts in run.items():
+                for _bid, key, value in pts:
+                    out[m if m == "TotalTweetCountFlink" else (m, key)] = value
+        return out
+
+    work = tempfile.mkdtemp(prefix="live_restart_")
+    try:
+        src = f"{work}/in"
+        os.makedirs(src)
+        for i, part in enumerate(parts):
+            path = f"{src}/f{i:02d}.parquet"
+            ts, text = zip(*part)
+            pq.write_table(
+                pa.table(
+                    {
+                        "ts": pa.array(
+                            [base + dt.timedelta(seconds=t) for t in ts], pa.timestamp("us")
+                        ),
+                        "text": pa.array(text),
+                        "lang": pa.array(["en"] * len(part)),
+                    }
+                ),
+                path,
+            )
+            # strictly increasing mtimes pin the order the file source
+            # admits the files in: the flush last
+            os.utime(path, (1_700_000_000 + i * 3600,) * 2)
+
+        reference = drain(src, f"{work}/ck_ref", crash=False)
+        first = drain(src, f"{work}/ck", crash=True)
+        restarted = drain(src, f"{work}/ck", crash=False)
+
+        assert set(reference) == {
+            "TrendingHashTagFlink2",
+            "TrendingHashTagFlink1",
+            "TotalTweetCountFlink",
+            "TweetPerSecondCountFlink",
+        }
+        assert finals(first, restarted) == finals(reference)
+        assert finals(reference)["TotalTweetCountFlink"] == (n_tweets,)
+
+        def batch_points(run, m):
+            return {key: value for bid, key, value in run.get(m, []) if bid == crash_batch}
+
+        reshipped = {m: batch_points(restarted, m) for m in reference}
+        assert all(
+            reshipped[m]
+            for m in ("TrendingHashTagFlink1", "TotalTweetCountFlink", "TweetPerSecondCountFlink")
+        ), reshipped
+        not_idempotent = {m for m in reference if reshipped[m] != batch_points(first, m)}
+        assert not_idempotent == set(), not_idempotent
+    finally:
+        shutil.rmtree(work, ignore_errors=True)

@@ -31,3 +31,36 @@ def test_get_or_create_turns_debugging_off_on_a_provided_session(spark, monkeypa
         sql_conf.setConfString(key, "false")
     monkeypatch.setattr(err_utils, "_enable_debugging_cache", None)
     assert err_utils.is_debugging_enabled() is False
+
+
+def _checkpoint_file_manager(spark, path) -> str:
+    """The class Spark opens a streaming checkpoint at ``path`` with,
+    resolved the way a starting query resolves it."""
+    jvm = spark._jvm
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    path = jvm.org.apache.hadoop.fs.Path(str(path))
+    return checkpointing.CheckpointFileManager.create(path, hadoop_conf).getClass().getName()
+
+
+def test_checkpoints_use_the_filesystem_based_file_manager(spark, tmp_path):
+    """Spark's default FileContext-based manager forks a readlink process
+    for both ends of every checkpoint rename on a JVM without the native
+    Hadoop library; build_session and get_or_create both pin the
+    FileSystem-based one, which renames without forking."""
+    from flink_streaming_twitter_spark.session import CHECKPOINT_FILE_MANAGER, get_or_create
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert CHECKPOINT_FILE_MANAGER.endswith(".FileSystemBasedCheckpointFileManager")
+    # build_session (the suite's session)
+    assert spark.conf.get(key) == CHECKPOINT_FILE_MANAGER
+    assert _checkpoint_file_manager(spark, tmp_path) == CHECKPOINT_FILE_MANAGER
+    # a provided session with Spark's default manager named explicitly
+    default = CHECKPOINT_FILE_MANAGER.replace("FileSystemBased", "FileContextBased")
+    spark.conf.set(key, default)
+    try:
+        assert _checkpoint_file_manager(spark, tmp_path) == default
+        assert get_or_create(spark).conf.get(key) == CHECKPOINT_FILE_MANAGER
+        assert _checkpoint_file_manager(spark, tmp_path) == CHECKPOINT_FILE_MANAGER
+    finally:
+        spark.conf.set(key, CHECKPOINT_FILE_MANAGER)

@@ -799,6 +799,33 @@ def test_stream_dedup_reemits_after_watermark_eviction(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def _drain_windowed_counts(spark, src_dir, view, cp) -> set:
+    """Drain ``src_dir`` one file per micro-batch through 20 s tumbling
+    counts per event_type under a 40 s watermark, in append mode, and
+    return the emitted (w_start, w_end, event_type, cnt) rows.
+    foreachBatch, not the memory sink: memory refuses to recover from an
+    existing checkpoint, and foreachBatch is the recovery-capable
+    collector production restarts actually use."""
+    out: set = set()
+
+    def collect(batch_df, _bid):
+        out.update((r.w_start, r.w_end, r.event_type, r.cnt) for r in batch_df.collect())
+
+    stream = spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src_dir)
+    wm = _watermarked(stream, "40 seconds")
+    plan = sliding_window_counts(wm, "ts", "event_type", "20 seconds", "20 seconds")
+    q = start_query(
+        plan,
+        name=view,
+        output_mode="append",
+        available_now=True,
+        checkpoint_dir=cp,
+        foreach_batch=collect,
+    )
+    assert q.awaitTermination(300), f"{view}: drain timed out"
+    return out
+
+
 def test_streaming_restart_recovers_state_exactly_once(spark):
     """Checkpoint recovery — the Structured Streaming guarantee a 100 TB
     deployment actually rides (executors die; queries restart) that the
@@ -823,50 +850,21 @@ def test_streaming_restart_recovers_state_exactly_once(spark):
     rows.sort(key=lambda r: r[0])
     thirds = [rows[:15], rows[15:30], rows[30:]]
 
-    def drain(src_dir, view, cp):
-        # foreachBatch, not the memory sink: memory refuses to recover
-        # from an existing checkpoint, and foreachBatch is the recovery-
-        # capable collector production restarts actually use
-        out: set = set()
-
-        def collect(batch_df, _bid):
-            out.update(
-                (r.w_start, r.w_end, r.event_type, r.cnt) for r in batch_df.collect()
-            )
-
-        stream = (
-            spark.readStream.schema(SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        wm = _watermarked(stream, "40 seconds")
-        plan = sliding_window_counts(wm, "ts", "event_type", "20 seconds", "20 seconds")
-        q = start_query(
-            plan,
-            name=view,
-            output_mode="append",
-            available_now=True,
-            checkpoint_dir=cp,
-            foreach_batch=collect,
-        )
-        assert q.awaitTermination(300), f"{view}: drain timed out"
-        return out
-
     work = tempfile.mkdtemp(prefix="restart_")
     try:
         ref_dir, rec_dir = f"{work}/ref", f"{work}/rec"
         os.makedirs(ref_dir), os.makedirs(rec_dir)
         _write_flat(ref_dir, thirds)
-        reference = drain(ref_dir, "rc_ref", f"{work}/cp_ref")
+        reference = _drain_windowed_counts(spark, ref_dir, "rc_ref", f"{work}/cp_ref")
         assert reference  # windows finalized under the 40 s watermark
 
         _write_flat(rec_dir, thirds[:2])
-        p1 = drain(rec_dir, "rc_p1", f"{work}/cp_rec")
+        p1 = _drain_windowed_counts(spark, rec_dir, "rc_p1", f"{work}/cp_rec")
         # add the third file (later mtime) and RESTART from the same
         # checkpoint — a fresh query object, recovered offsets + state;
         # the source log already tracks f00/f01, so only f02 is new work
         _write_flat(rec_dir, [thirds[2]], start=2)
-        p2 = drain(rec_dir, "rc_p2", f"{work}/cp_rec")
+        p2 = _drain_windowed_counts(spark, rec_dir, "rc_p2", f"{work}/cp_rec")
 
         assert p1 and p2
         assert p1 | p2 == reference  # nothing lost across the restart
@@ -1215,6 +1213,54 @@ def test_running_total_continues_from_recovered_sum_after_restart(spark):
         assert p2 and all(t == 10 for t in p2)
         # monotone non-decreasing across the whole restarted lifetime
         assert (p1 + p2) == sorted(p1 + p2)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def test_checkpoint_from_the_filecontext_file_manager_restarts_under_the_default(spark):
+    """Upgrade path for a checkpoint that outlives the engine's switch to
+    the FileSystem-based checkpoint file manager (session.py): a windowed
+    count written under Spark's FileContext-based manager is restarted on
+    the same checkpoint under the session default. Windows finalized
+    after the restart out of recovered state, no window lost or
+    re-emitted, and every event counted exactly once."""
+    from flink_streaming_twitter_spark.session import CHECKPOINT_FILE_MANAGER
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key) == CHECKPOINT_FILE_MANAGER
+    old_manager = CHECKPOINT_FILE_MANAGER.replace("FileSystemBased", "FileContextBased")
+    rows = [(s, "abc"[s % 3]) for s in range(0, 300, 7)]
+    thirds = [rows[:15], rows[15:30], rows[30:]]
+
+    work = tempfile.mkdtemp(prefix="cfm_upgrade_")
+    try:
+        ref_dir, rec_dir = f"{work}/ref", f"{work}/rec"
+        os.makedirs(ref_dir), os.makedirs(rec_dir)
+        _write_flat(ref_dir, thirds)
+        reference = _drain_windowed_counts(spark, ref_dir, "cfm_ref", f"{work}/cp_ref")
+
+        _write_flat(rec_dir, thirds[:2])
+        spark.conf.set(key, old_manager)
+        try:
+            p1 = _drain_windowed_counts(spark, rec_dir, "cfm_p1", f"{work}/cp_rec")
+        finally:
+            spark.conf.set(key, CHECKPOINT_FILE_MANAGER)
+        _write_flat(rec_dir, [thirds[2]], start=2)
+        p2 = _drain_windowed_counts(spark, rec_dir, "cfm_p2", f"{work}/cp_rec")
+
+        assert p1 and p2
+        assert p1 | p2 == reference
+        assert not (p1 & p2)
+        # windows built entirely before the restart, finalized after it
+        boundary = int((BASE + dt.timedelta(seconds=thirds[2][0][0])).timestamp())
+        assert {r for r in p2 if r[1] <= boundary}, "no window crossed the restart"
+        # every event of the finalized windows counted once across both
+        # managers (the open last windows stay behind the watermark)
+        last_end = max(r[1] for r in reference)
+        counted = sum(
+            1 for ts, _ in rows if int((BASE + dt.timedelta(seconds=ts)).timestamp()) < last_end
+        )
+        assert sum(r[3] for r in p1 | p2) == counted
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -5,20 +5,16 @@ over a raw document dump.
 Stages (all from flink_streaming_twitter_spark, every one of them an
 oracle-verified gate operator):
 
-1. normalize      — canonical text cleanup (optionally Unicode NFC via
-                    the Arrow-batched variant: --nfc);
+1. normalize      — canonical text cleanup (lowercase, whitespace,
+                    control characters);
 2. exact dedup    — keep-first per normalized-text digest (documents
                     with NULL text are dropped first);
 3. near dedup     — MinHash-LSH pairs → connected components → keep the
-                    min doc_id per cluster (--deep-graphs switches the
-                    closure to the large-star/small-star form for
-                    corpora with long transitive dup chains; --char-tier
-                    unions char-5-gram evidence over NFC-normalized text
-                    into the graph, the multilingual tier that catches
+                    min doc_id per cluster (--char-tier unions
+                    char-5-gram evidence over NFC-normalized text into
+                    the graph, the multilingual tier that catches
                     CJK/emoji near-dups the ASCII word tokenizer cannot);
-4. admission      — weighted per-domain mixing + per-domain quota cap
-                    (salted two-phase form via --hot-domains when one
-                    source dominates);
+4. admission      — weighted per-domain mixing + per-domain quota cap;
 5. split          — deterministic md5-bucket train/val/test assignment;
 6. profile        — per-(split, source) doc/token/char counts,
                     aggregated from the persisted stage-5 output (the
@@ -33,12 +29,18 @@ Usage (paths default to the synthetic test tables):
 
     python examples/corpus_prep_app.py \
         --in /root/testdata/sf0.01 --out /tmp/corpus_out \
-        [--nfc] [--deep-graphs] [--hot-domains]
+        [--char-tier] [--cap-k 10]
 
 Every decision (dedup survivor, admission, split) is a pure function of
 document content/ids — rerunning on any cluster size reproduces the
 same corpus row-for-row, which is what makes train/test separation
 auditable (SCALE.md, corpus-management section).
+
+The app has one closure and one quota cap. The large-star/small-star
+closure (``connected_components_star``) gives the same labels as plain
+propagation and the salted cap (``cap_per_key_salted``) the same
+survivors as ``cap_per_key``; both stay in the package for their gate
+entries.
 """
 
 from __future__ import annotations
@@ -51,14 +53,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from flink_streaming_twitter_spark.operators.graph import (
-    connected_components,
-    connected_components_star,
-)
+from flink_streaming_twitter_spark.operators.graph import connected_components
 from flink_streaming_twitter_spark.operators.dedup import minhash_lsh_dedup
 from flink_streaming_twitter_spark.operators.sampling import (
     cap_per_key,
-    cap_per_key_salted,
     hash_split,
     weighted_mix,
 )
@@ -73,9 +71,6 @@ def run(
     src: str,
     out: str,
     *,
-    nfc: bool = False,
-    deep_graphs: bool = False,
-    hot_domains: bool = False,
     char_tier: bool = False,
     cap_k: int = 10,
     show: bool = True,
@@ -96,7 +91,7 @@ def run(
     # node table and near_kept all read it, and unpersisted the corpus
     # write rebuilt it (scan, normalize, window limit) once for each of
     # the last two
-    exact_kept = corpus_exact_dedup(docs, nfc=nfc).persist()
+    exact_kept = corpus_exact_dedup(docs).persist()
 
     # 3. near dedup on the exact survivors: LSH pairs → components →
     # keep the cluster minimum. accounting=True also returns the
@@ -142,8 +137,7 @@ def run(
             char_dropped.withColumn("tier", F.lit("char"))
         )
     dropped_buckets.write.mode("overwrite").parquet(f"{out}/metrics/dedup_cap_loss")
-    cc = connected_components_star if deep_graphs else connected_components
-    comp = cc(pairs, nodes=exact_kept.select(F.col("doc_id").alias("id")))
+    comp = connected_components(pairs, nodes=exact_kept.select(F.col("doc_id").alias("id")))
     near_kept = exact_kept.join(
         comp.filter(F.col("id") == F.col("comp")).select(F.col("id").alias("doc_id")),
         "doc_id",
@@ -153,8 +147,7 @@ def run(
     admitted = weighted_mix(
         near_kept, "source", "doc_id", {"src0": 1.0, "src1": 1.0}, 0.5
     )
-    cap = cap_per_key_salted if hot_domains else cap_per_key
-    capped = cap(
+    capped = cap_per_key(
         admitted, ["source"], [F.col("n_chars").desc(), F.col("doc_id").asc()], cap_k
     )
 
@@ -177,26 +170,18 @@ def run(
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    ap = argparse.ArgumentParser(
+        description="Curate a training corpus: normalize, exact and near dedup, "
+        "per-domain admission, train/val/test split, profile."
+    )
     ap.add_argument("--in", dest="src", default="/root/testdata/sf0.01")
     ap.add_argument("--out", dest="out", default="/tmp/corpus_out")
-    ap.add_argument("--nfc", action="store_true", help="Unicode NFC first (Arrow UDF)")
-    ap.add_argument(
-        "--deep-graphs",
-        action="store_true",
-        help="large-star/small-star closure (O(log n) rounds) for long dup chains",
-    )
-    ap.add_argument(
-        "--hot-domains",
-        action="store_true",
-        help="salted two-phase quota cap for a skewed source distribution",
-    )
     ap.add_argument(
         "--char-tier",
         action="store_true",
         help="union char-5-gram MinHash evidence (multilingual near-dups) into the dup graph",
     )
-    ap.add_argument("--cap-k", type=int, default=10)
+    ap.add_argument("--cap-k", type=int, default=10, help="per-domain quota")
     args = ap.parse_args()
 
     spark = build_session("corpus-prep")
@@ -205,9 +190,6 @@ def main() -> None:
         spark,
         args.src,
         args.out,
-        nfc=args.nfc,
-        deep_graphs=args.deep_graphs,
-        hot_domains=args.hot_domains,
         char_tier=args.char_tier,
         cap_k=args.cap_k,
     )

@@ -116,7 +116,13 @@ def build_queries(
     )
 
     # Q-C TotalTweetCountFlink (Main.java:148-157): ungrouped running
-    # count, stamped at trigger time like the reference's wall-clock stamp
+    # count, stamped at trigger time like the reference's wall-clock stamp.
+    # A no-data micro-batch (the watermark moved, no new tweets) emits the
+    # unchanged total again under a new stamp. That repeat is the
+    # reference's own behaviour: ContinuousProcessingTimeTrigger.of(5 s)
+    # on Q-C's global window (Main.java:154) re-fires the unchanged total
+    # every 5 s, while Spark repeats it only on watermark-driven no-data
+    # batches, so less often.
     qc = tweets.agg(F.count(F.lit(1)).alias("total")).withColumn("ts", F.current_timestamp())
     queries.append(
         start_query(

@@ -72,10 +72,9 @@ def sane_measurement(col: Column) -> Column:
     ).otherwise(col)
 
 
-def sane_event_time(
-    col: Column, lo: str = EVENT_TIME_LO, hi: str = EVENT_TIME_HI
-) -> Column:
-    """``col`` if lo <= col < hi, else NULL (NULL stays NULL).
+def sane_event_time(col: Column) -> Column:
+    """``col`` if EVENT_TIME_LO <= col < EVENT_TIME_HI, else NULL (NULL
+    stays NULL).
 
     Nullifying (rather than filtering) composes with the established
     NULL-ts contract: window()/session_window() drop NULL event times on
@@ -87,6 +86,7 @@ def sane_event_time(
     ``CASE WHEN ts >= TIMESTAMP 'lo' AND ts < TIMESTAMP 'hi' THEN ts END``.
     """
     return F.when(
-        (col >= F.lit(lo).cast("timestamp")) & (col < F.lit(hi).cast("timestamp")),
+        (col >= F.lit(EVENT_TIME_LO).cast("timestamp"))
+        & (col < F.lit(EVENT_TIME_HI).cast("timestamp")),
         col,
     )

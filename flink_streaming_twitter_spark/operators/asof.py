@@ -28,10 +28,9 @@ def asof_join_backward(
     right_ts: str,
     value_col: str,
     out_col: str = "asof_value",
-    strict: bool = True,
 ) -> DataFrame:
     """For each left row, the ``value_col`` of the latest right row with
-    right_ts < left_ts (strict) or <= (non-strict), matching on key_cols.
+    right_ts strictly before left_ts, matching on key_cols.
 
     Left rows with no prior right row get NULL. Ties among right rows at
     identical timestamps are broken by the larger value_col
@@ -63,9 +62,8 @@ def asof_join_backward(
     ASOF operator; see the q_asof_last_error oracle.
     """
     # marker orders right rows relative to left rows at equal timestamps:
-    # strict → right sorts AFTER left (excluded by the ..-1 frame);
-    # non-strict → right sorts BEFORE left (included).
-    right_marker = 2 if strict else 0
+    # right (2) sorts AFTER left (1), so the ..-1 frame excludes a right
+    # row at the left row's own timestamp
     vtype = right.schema[value_col].dataType
     lhs = left.select(
         *key_cols,
@@ -78,7 +76,7 @@ def asof_join_backward(
     rhs = right.filter(F.col(right_ts).isNotNull()).select(
         *key_cols,
         F.col(right_ts).alias("_ts"),
-        F.lit(right_marker).alias("_m"),
+        F.lit(2).alias("_m"),
         F.col(value_col).alias("_v"),
         F.struct(F.col(value_col).alias("v")).alias("_vs"),
         F.lit(None).cast(lhs.schema["_row"].dataType).alias("_row"),

@@ -240,8 +240,9 @@ CHAR_EVIDENCE_PATTERN = r"[^\s\x00-\x1f\x7f]"
 def char_normalized_text(text: F.Column) -> F.Column:
     """The char tier's text: Unicode NFC, then the corpus cleanup chain
     (operators/textops.clean_text — the chain normalize_text applies),
-    so char shingles are computed over exactly the text the corpus-prep
-    pipeline persists with ``nfc=True``.
+    so char shingles are computed over exactly the text the NFC normalize
+    pass (``normalize_text(nfc=True)``, the q_text_normalize_nfc entry)
+    emits.
 
     ASCII mask (round 15, guide §4 "pass only the columns the function
     needs" taken down to the BYTES the function needs): NFC is the
@@ -510,7 +511,6 @@ def lsh_candidate_pairs(
     signatures: DataFrame,
     num_perm: int,
     bands: int,
-    max_bucket: int | None = DEFAULT_LSH_MAX_BUCKET,
 ) -> DataFrame:
     """Band the signature, bucket-join per band → distinct (doc_a, doc_b).
 
@@ -518,11 +518,11 @@ def lsh_candidate_pairs(
     structs — one narrow pass; the self-join shuffles on (band, sig)
     buckets, so cost tracks bucket occupancy. At 100 TB a hot bucket (all
     boilerplate docs) would skew the join; AQE skew-join splits the
-    shuffle, and buckets larger than ``max_bucket`` (default
-    DEFAULT_LSH_MAX_BUCKET — measured ~250× above genuine near-dup
-    occupancy) are dropped before the quadratic join; route their members
-    through the exact-dedup track instead. ``None`` disables. The loss
-    ledger of the cap comes with minhash_lsh_dedup(accounting=True).
+    shuffle, and buckets larger than DEFAULT_LSH_MAX_BUCKET (measured
+    ~250× above genuine near-dup occupancy) are dropped before the
+    quadratic join; route their members through the exact-dedup track
+    instead. The loss ledger of the cap comes with
+    minhash_lsh_dedup(accounting=True).
     """
     # persist the BANDED table, not (only) the upstream signatures: three
     # lineages read it — the occupancy aggregate behind the cap and the
@@ -534,7 +534,7 @@ def lsh_candidate_pairs(
     # sig) row per (doc, band) is a few dozen bytes × bands per doc —
     # trivial next to the text.
     banded = banded_signatures(signatures, num_perm, bands).persist()
-    joined, _ = _bucket_self_join(banded, ["band", "sig"], max_bucket)
+    joined, _ = _bucket_self_join(banded, ["band", "sig"], DEFAULT_LSH_MAX_BUCKET)
     return joined.select(
         F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     ).distinct()
@@ -620,7 +620,6 @@ def lsh_verified_jaccard(
     bands: int = 4,
     threshold: float = 0.5,
     shingle_k: int = 3,
-    shingle_mode: str = "word",
 ) -> DataFrame:
     """The two-tier 100 TB near-dup pipeline: MinHash-LSH candidate
     generation (cost ∝ band-bucket occupancy) followed by EXACT Jaccard
@@ -644,11 +643,8 @@ def lsh_verified_jaccard(
     identical data, at a MEASURED 99.85% recall (25,562 of a
     construction-pinned 25,600 true pairs — SCALE.md ×100 table).
     Precision is exact either way; deploy this form at scale.
-    (``shingle_mode="char"`` switches candidate generation AND exact
-    verification to the char-k-gram evidence base — the multilingual
-    deploy twin.)
     """
-    sets = doc_shingle_sets(docs, k=shingle_k, shingle_mode=shingle_mode).persist()
+    sets = doc_shingle_sets(docs, k=shingle_k).persist()
     cands = lsh_candidate_pairs(minhash_signatures(sets, num_perm), num_perm, bands)
     return _verified_jaccard(cands, sets, threshold)
 
@@ -658,7 +654,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     shingle_k: int = 3,
     hash_bits: int = 31,
-    shingle_mode: str = "word",
 ) -> DataFrame:
     """EXACT all-pairs Jaccard ≥ threshold over k-word shingle sets:
     (doc_a, doc_b, jaccard). Complete — no false negatives.
@@ -701,12 +696,7 @@ def ngram_jaccard_pairs(
     collisions by design; exactness is what cannot.
     """
     # the packed sets feed the inverted index and both verification sides
-    # (shingle_mode="char" switches the evidence base — the exactness
-    # baseline for the multilingual tier, used by the recall measurement
-    # in SCALE.md; same PPJoin machinery either way)
-    sets = doc_shingle_sets(
-        docs, k=shingle_k, hash_bits=hash_bits, shingle_mode=shingle_mode
-    ).persist()
+    sets = doc_shingle_sets(docs, k=shingle_k, hash_bits=hash_bits).persist()
     # persist the exploded (id, sz, sh) frame too (round 15): the dfreq
     # aggregate and the prefix arm both read it, and AQE re-plans the
     # subtrees independently, so unpersisted the shingle explode runs

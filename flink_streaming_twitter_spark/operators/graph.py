@@ -22,17 +22,19 @@ disciplines encoded here:
   optimizer, the classic iterative-Spark failure;
 - label propagation converges in O(component diameter) rounds, and
   near-dup clusters are shallow (dup groups are cliques or stars), so
-  max_iter stays small; for deep graphs ``connected_components_star``
-  implements the large-star/small-star formulation (Kiveris et al.,
-  "Connected Components in MapReduce and Beyond", SoCC 2014), which
-  converges in O(log n) rounds — the 100 TB path when cluster chains
-  are long (e.g. transitive near-dup chains across crawl snapshots).
+  the bound MAX_ROUNDS stays small; for deep graphs
+  ``connected_components_star`` implements the large-star/small-star
+  formulation (Kiveris et al., "Connected Components in MapReduce and
+  Beyond", SoCC 2014), which converges in O(log n) rounds — the 100 TB
+  path when cluster chains are long (e.g. transitive near-dup chains
+  across crawl snapshots).
 
 ``dedup_clusters`` keeps plain propagation: near-dup components are
 shallow stars/cliques where it converges in 1-2 rounds, fewer total
 stages than star's two jobs per round. The star variant is the escape
 hatch the docstring used to only name; the deep-chain test pins the
-round advantage.
+round advantage: a path too long for plain propagation's MAX_ROUNDS
+converges within the star form's STAR_MAX_ROUNDS.
 """
 
 from __future__ import annotations
@@ -40,18 +42,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+# non-convergence bounds: each loop raises instead of running forever
+MAX_ROUNDS = 25
+STAR_MAX_ROUNDS = 20
+
 
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame | None = None,
-    max_iter: int = 25,
     stats: dict | None = None,
 ) -> DataFrame:
     """(id, comp) for every node of the ``src``/``dst`` edge list, comp =
     min node id reachable (undirected).
 
     ``nodes`` optionally supplies isolated vertices (no edges), each its
-    own singleton component. Raises if max_iter rounds don't converge;
+    own singleton component. Raises if MAX_ROUNDS rounds don't converge;
     ``stats["rounds"]`` reports the join rounds used.
     """
     # materialize the DIRECTED edge list ONCE, then symmetrize from the
@@ -90,7 +95,7 @@ def connected_components(
         singles = nodes.select("id").join(active, "id", "left_anti")
         return converged.union(singles.select("id", F.col("id").alias("comp")))
 
-    for rnd in range(1, max_iter + 1):
+    for rnd in range(1, MAX_ROUNDS + 1):
         if stats is not None:
             stats["rounds"] = rnd
         nbr_min = (
@@ -120,15 +125,10 @@ def connected_components(
         )
         if improved.get["n"] == 0:
             return with_singletons(labels)
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    raise RuntimeError(f"connected_components did not converge in {MAX_ROUNDS} rounds")
 
 
-def connected_components_star(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    max_iter: int = 20,
-    stats: dict | None = None,
-) -> DataFrame:
+def connected_components_star(edges: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
     """(id, comp) per node — same contract as :func:`connected_components`
     — via alternating large-star/small-star contractions (Kiveris et al.,
     SoCC 2014), converging in O(log n) rounds instead of O(diameter).
@@ -148,9 +148,8 @@ def connected_components_star(
     {(member, component-min)}. Same lineage discipline as plain
     propagation: ``localCheckpoint`` per round, cost per round ∝ current
     edge count (which only shrinks or stays — contractions never add
-    edges beyond dedup).
-
-    ``stats["rounds"]`` reports rounds used (one large+small pair each).
+    edges beyond dedup). Raises if STAR_MAX_ROUNDS rounds (one
+    large+small pair each) don't converge.
     """
     # canonical downhill edges (a > b), self-loops out; endpoints are
     # remembered so self-loop-only/isolated nodes still get labeled.
@@ -198,10 +197,8 @@ def connected_components_star(
     n_edges, e_hash = fingerprint(E)
     converged = n_edges == 0
     rnd = 0
-    while not converged and rnd < max_iter:
+    while not converged and rnd < STAR_MAX_ROUNDS:
         rnd += 1
-        if stats is not None:
-            stats["rounds"] = rnd
         sym = E.union(E.select(F.col("b").alias("a"), F.col("a").alias("b")))
         # large-star: (v, m(u)) for v ∈ N(u) with v > u, m(u) = min(N(u) ∪ {u})
         mins = (
@@ -238,7 +235,7 @@ def connected_components_star(
         E, n_edges, e_hash = new_e, new_n, new_hash
     if not converged:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+            f"connected_components_star did not converge in {STAR_MAX_ROUNDS} rounds"
         )
     # fixpoint edge set is {(member, root)}: members label by their root,
     # roots (and edge-less nodes) label themselves

@@ -1,14 +1,13 @@
 """Multimodal column plumbing: image/audio/video as opaque BINARY columns
 with typed metadata.
 
-The decode kernel is import-gated on PIL: where Pillow exists
-it decodes real images (dimensions, frame count, 8-bin luminance
-histogram feature); in this container (no PIL/cv2/torchaudio) — or for
-payloads PIL cannot parse, like the synthetic text-bytes test corpus —
-it falls back to a deterministic fake keyed off the payload bytes, so
-the driver's rows-only gate entry is stable in BOTH worlds. The
-Spark-side plumbing is identical either way and fully tested: schemas,
-Arrow batch shape, mapInPandas signature, partition sizing.
+The decode kernel is a deterministic stand-in keyed off the payload
+bytes (dimensions, frame count, an 8-value feature), so the
+oracle-checked gate entry's DuckDB twin re-derives its arithmetic on any
+machine. A real decoder (an image library or a model embedding) slots
+into :func:`_decode_payload` with the same return shape; the Spark-side
+plumbing around it is what this module pins: schemas, Arrow batch
+shape, mapInPandas signature, partition sizing.
 
 Design for 100 TB of media:
 - payloads live in their own column so Parquet column pruning skips them
@@ -50,19 +49,6 @@ DECODED_SCHEMA = T.StructType(
     ]
 )
 
-def _try_import_pil():
-    try:  # optional dependency — absent in this container
-        from PIL import Image
-
-        return Image
-    except ImportError:
-        return None
-
-
-_PIL_IMAGE = _try_import_pil()
-REAL_DECODERS_AVAILABLE = _PIL_IMAGE is not None
-
-
 def payload_metadata(df: DataFrame) -> DataFrame:
     """Expression-only metadata of the ``payload`` column: byte length,
     sha256, magic-byte format sniff. Runs without touching Python."""
@@ -84,10 +70,9 @@ def payload_metadata(df: DataFrame) -> DataFrame:
     )
 
 
-def _decode_payload_stub(payload: bytes) -> tuple[int, int, int, list[float]]:
-    """Deterministic fake decode keyed off the payload bytes — the
-    fallback wherever PIL is absent or the bytes aren't a decodable
-    image, so tests and the rows-only gate entry are stable everywhere.
+def _decode_payload(payload: bytes) -> tuple[int, int, int, list[float]]:
+    """Deterministic decode keyed off the payload bytes, so tests and the
+    gate entry's oracle are stable everywhere.
 
     Returns (width, height, n_frames, feature[8])."""
     n = len(payload)
@@ -99,42 +84,11 @@ def _decode_payload_stub(payload: bytes) -> tuple[int, int, int, list[float]]:
     return width, height, n_frames, feature
 
 
-def _decode_payload(
-    payload: bytes, force_stub: bool = False
-) -> tuple[int, int, int, list[float]]:
-    """Decode kernel: real PIL decode when Pillow can parse the bytes,
-    deterministic stub otherwise (import-gated — VERDICT r2 item 5).
-
-    The real path emits (width, height, n_frames, 8-bin luminance
-    histogram normalized to sum 1) — a minimal but honest feature; swap
-    in a model embedding here for production. Returns
-    (width, height, n_frames, feature[8]) either way.
-
-    ``force_stub=True`` pins the deterministic fake regardless of the
-    environment — used by the oracle-checked gate entry, whose DuckDB
-    twin re-derives the stub arithmetic and must match on any machine,
-    with or without Pillow installed."""
-    if _PIL_IMAGE is not None and not force_stub:
-        import io
-
-        try:
-            im = _PIL_IMAGE.open(io.BytesIO(payload))
-            width, height = im.size
-            n_frames = int(getattr(im, "n_frames", 1))
-            hist = im.convert("L").histogram()
-            total = float(sum(hist)) or 1.0
-            feature = [sum(hist[i * 32 : (i + 1) * 32]) / total for i in range(8)]
-            return int(width), int(height), n_frames, feature
-        except Exception:
-            pass  # not a PIL-decodable payload — deterministic fallback
-    return _decode_payload_stub(payload)
-
-
-def decode_media(df: DataFrame, force_stub: bool = False) -> DataFrame:
-    """mapInPandas decode pass: MEDIA_SCHEMA rows → DECODED_SCHEMA rows.
+def decode_media(df: DataFrame) -> DataFrame:
+    """mapInPandas decode pass: MEDIA_SCHEMA rows → DECODED_SCHEMA rows,
+    through :func:`_decode_payload`.
 
     Arrow-batched; each batch is decoded columnarly in one Python call.
-    ``force_stub`` propagates to :func:`_decode_payload` (see there).
     """
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -144,7 +98,7 @@ def decode_media(df: DataFrame, force_stub: bool = False) -> DataFrame:
             # pass at scale. Emit the row with NULL decode fields so
             # accounting survives and a downstream filter can quarantine.
             decoded = [
-                _decode_payload(bytes(p), force_stub)
+                _decode_payload(bytes(p))
                 if p is not None
                 else (None, None, None, None)
                 for p in pdf["payload"]

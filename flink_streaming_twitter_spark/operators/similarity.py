@@ -244,7 +244,7 @@ def ivf_topk(
     queries: DataFrame,
     k: int,
     nprobe: int = 3,
-    seed_mod: int | None = 53,
+    seed_mod: int = 53,
     seed_rem: int = 7,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: (q_id, vec_id, sim, rank).
@@ -259,22 +259,16 @@ def ivf_topk(
     production IVF — at 100 TB the assignment is a broadcast pass and the
     probe join touches ~nprobe/ncells of the corpus.
 
-    ``seed_mod=None`` auto-sizes to ~√n (one count() job): ncells ≈ √n is
-    the standard IVF balance — a FIXED seed_mod makes ncells grow ∝ n and
-    the n×ncells assignment grow ∝ n², measured at both stress decades
-    (SCALE.md): 3.9× wall at a 10× corpus and 140× at ×100, vs 5.3× for
-    the auto-√n sizing on the same ×100 corpus — 14× faster at equal
-    recall (both score 1.00 recall@5 vs brute force on the ×100 corpus,
-    whose true neighbors are exact-duplicate vectors; on the sf0.1
-    corpus neighbor structure is noise-level cosine on near-orthogonal
-    synthetics, where probe-set choice dominates). The oracle-checked
-    query pins seed_mod for bit-exact reproducibility; deployments
-    should auto-size.
+    A FIXED seed_mod makes ncells grow ∝ n and the n×ncells assignment
+    grow ∝ n², measured at both stress decades (SCALE.md): 3.9× wall at a
+    10× corpus and 140× at ×100, where sizing ncells ≈ √n (the standard
+    IVF balance) cost 5.3× on the same ×100 corpus at equal recall. A
+    deployment passes ``seed_mod`` ≈ √n for its corpus size; the
+    auto-sizing branch that counted the corpus for it is at
+    ``operators/similarity.py @ af453c5``.
     """
     from pyspark.sql import Window
 
-    if seed_mod is None:
-        seed_mod = max(2, int(corpus.count() ** 0.5))
     cents = corpus.filter((F.col("vec_id") % seed_mod) == (seed_rem % seed_mod))
     assigned = ivf_assign(corpus, cents, 1)
     probes = (

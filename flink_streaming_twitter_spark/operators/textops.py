@@ -220,7 +220,7 @@ def normalize_text(
     )
 
 
-def corpus_exact_dedup(docs: DataFrame, nfc: bool = False) -> DataFrame:
+def corpus_exact_dedup(docs: DataFrame) -> DataFrame:
     """The corpus pipelines' shared head: exact dedup on normalized text,
     one row per distinct digest with the per-document features the later
     stages read. Columns: doc_id, source, digest, n_tokens, n_chars.
@@ -229,8 +229,7 @@ def corpus_exact_dedup(docs: DataFrame, nfc: bool = False) -> DataFrame:
        operators/dedup.exact_dedup): md5(NULL) would group every
        failed-fetch document under one digest and the k=1 cap would
        keep exactly one of them, with NULL features;
-    2. :func:`normalize_text` (narrow, fused into the scan; ``nfc`` as
-       there);
+    2. :func:`normalize_text` (narrow, fused into the scan);
     3. per-row featurization — md5 digest, ``\\w+`` token count, char
        count of the normalized text — *before* any shuffle, dropping the
        text, so the one wide stage moves a few dozen bytes per row
@@ -238,9 +237,7 @@ def corpus_exact_dedup(docs: DataFrame, nfc: bool = False) -> DataFrame:
     4. keep-first per digest via ``cap_per_key`` with k=1 (min doc_id
        survives; WindowGroupLimit forwards one row per digest per map
        task)."""
-    norm = normalize_text(
-        docs.filter(F.col("text").isNotNull()), extra_cols=("source",), nfc=nfc
-    )
+    norm = normalize_text(docs.filter(F.col("text").isNotNull()), extra_cols=("source",))
     feat = norm.select(
         "doc_id",
         "source",

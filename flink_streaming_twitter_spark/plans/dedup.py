@@ -97,12 +97,13 @@ def dedup_minhash_lsh_char(spark: SparkSession, sf_dir: str) -> DataFrame:
     different sentences), so at 16 permutations the ESTIMATED-Jaccard
     filter passes many pairs whose true char-J sits below threshold —
     12,566 pairs at sf0.1 vs exactly 256 with true char-J ≥ 0.5
-    (measured; the word entry's true set is the same 256). Deploy the
-    exact-verified twin (lsh_verified_jaccard(shingle_mode="char") —
-    measured 100% recall of the true set at 9.4× the exact all-pairs
-    join's speed, SCALE.md round-11 block) or raise the estimate
-    threshold; the gate entry keeps the family's pinned parameters so
-    the oracle certifies the estimation machinery itself.
+    (measured; the word entry's true set is the same 256). An
+    exact-verified char twin measured 100% recall of the true set at
+    9.4× the exact all-pairs join's speed (SCALE.md round-11 block; its
+    char mode is at operators/dedup.py @ af453c5, since no job ran
+    it); a deployment raises the estimate threshold instead. The gate
+    entry keeps the family's pinned parameters so the oracle certifies
+    the estimation machinery itself.
     Edge-corpus-bound: the
     audit corpus carries a near-identical CJK pair (word mode: zero
     evidence) and a combining-vs-precomposed accent pair (exact tier:

@@ -72,19 +72,19 @@ CHECKPOINT_FILE_MANAGER = (
 def build_session(
     app_name: str = "flink-streaming-twitter-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Create (or fetch) the tuned SparkSession."""
+    """Create (or fetch) the tuned SparkSession. ``extra_conf`` is applied
+    last, so it overrides any of the confs set here."""
     master = master or f"local[{DEFAULT_CPUS}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_CPUS)
-    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(
+            "spark.sql.shuffle.partitions",
+            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_CPUS),
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -99,7 +99,6 @@ def stream_interval_join(
     left_ts: str,
     right_ts: str,
     max_delay_s: int,
-    watermark: str = WATERMARK,
 ) -> DataFrame:
     """Watermarked stream-stream INNER join with a time-range condition:
     pairs where ``left_ts <= right_ts <= left_ts + max_delay_s`` on equal
@@ -111,11 +110,12 @@ def stream_interval_join(
     BOTH directions: a left row is droppable once the right watermark
     passes ``left_ts + max_delay_s``, a right row once the left watermark
     passes ``right_ts`` — so state is O(rows in the delay+watermark
-    horizon), not O(stream). ``left_ts``/``right_ts`` must be distinct
-    names (rename before calling); key columns are taken from the left.
+    horizon), not O(stream). Each side's watermark is the reference's
+    WATERMARK. ``left_ts``/``right_ts`` must be distinct names (rename
+    before calling); key columns are taken from the left.
     """
-    l = ensure_event_time(left, left_ts).withWatermark(left_ts, watermark)
-    r = ensure_event_time(right, right_ts).withWatermark(right_ts, watermark)
+    l = ensure_event_time(left, left_ts).withWatermark(left_ts, WATERMARK)
+    r = ensure_event_time(right, right_ts).withWatermark(right_ts, WATERMARK)
     key_eq = [l[k] == r[k] for k in key_cols]
     rng = (F.col(right_ts) >= F.col(left_ts)) & (
         F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {max_delay_s} SECONDS")

@@ -15,7 +15,11 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session(app_name="tests", master="local[4]", shuffle_partitions=4)
+    s = build_session(
+        app_name="tests",
+        master="local[4]",
+        extra_conf={"spark.sql.shuffle.partitions": "4"},
+    )
     yield s
     s.stop()
 

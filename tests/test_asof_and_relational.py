@@ -1,4 +1,4 @@
-"""As-of join semantics (strict/non-strict, ties, no-match) — the
+"""As-of join semantics (strictly prior, ties, no-match) — the
 union+window formulation in operators/asof.py."""
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ def test_strict_backward_excludes_equal_timestamps(spark):
     out = {
         r.tag: r.prior
         for r in asof_join_backward(
-            left, right, ["u"], "ts", "rts", "val", out_col="prior", strict=True
+            left, right, ["u"], "ts", "rts", "val", out_col="prior"
         ).collect()
     }
     # l0 at ts=10: right row at 10 is NOT strictly prior -> NULL
@@ -49,7 +49,7 @@ def test_null_timestamps_take_part_in_no_asof_relation(spark):
     out = {
         r.tag: r.prior
         for r in asof_join_backward(
-            left, right, ["u"], "ts", "rts", "val", out_col="prior", strict=True
+            left, right, ["u"], "ts", "rts", "val", out_col="prior"
         ).collect()
     }
     # undated_probe: key 1 has two dated observations; still no match.
@@ -57,17 +57,6 @@ def test_null_timestamps_take_part_in_no_asof_relation(spark):
     # dated (key 2): its ONLY observation is undated -> no match (the
     # pre-fix formulation carried 990.0 here).
     assert out == {"undated_probe": None, "earliest": None, "dated": None}
-
-
-def test_non_strict_includes_equal_timestamps(spark):
-    left, right = _frames(spark)
-    out = {
-        r.tag: r.prior
-        for r in asof_join_backward(
-            left, right, ["u"], "ts", "rts", "val", out_col="prior", strict=False
-        ).collect()
-    }
-    assert out == {"l0": 100.0, "l1": 150.0, "l2": 150.0, "l3": None}
 
 
 def test_approx_distinct_within_rsd_of_exact(spark, sf_dir):
@@ -111,7 +100,7 @@ def test_null_valued_observation_is_matched_not_skipped(spark):
     out = {
         r.tag: r.prior
         for r in asof_join_backward(
-            left, right, ["u"], "ts", "rts", "val", out_col="prior", strict=True
+            left, right, ["u"], "ts", "rts", "val", out_col="prior"
         ).collect()
     }
     # l0: nothing prior; l2: latest prior is the 100.0 reading;
@@ -125,7 +114,7 @@ def test_null_valued_observation_is_matched_not_skipped(spark):
     )
     [r] = asof_join_backward(
         left.filter("tag = 'l1'"), right2, ["u"], "ts", "rts", "val",
-        out_col="prior", strict=True,
+        out_col="prior",
     ).collect()
     assert r.prior == 7.0
 
@@ -159,7 +148,7 @@ def test_tie_among_right_rows_picks_greatest_value(spark):
     left = spark.createDataFrame([(1, 20.0, "x")], ["u", "ts", "tag"])
     right = spark.createDataFrame([(1, 10.0, 1.0), (1, 10.0, 2.0)], ["u", "rts", "val"])
     [r] = asof_join_backward(
-        left, right, ["u"], "ts", "rts", "val", out_col="prior", strict=True
+        left, right, ["u"], "ts", "rts", "val", out_col="prior"
     ).collect()
     assert r.prior == 2.0  # deterministic tie-break: larger value wins
 

@@ -336,7 +336,10 @@ def test_lsh_default_cap_loses_only_oversized_bucket_pairs(spark):
     occupancy <= 3)."""
     import itertools
 
+    from pyspark.sql import functions as F
+
     from flink_streaming_twitter_spark.operators.dedup import (
+        _bucket_self_join,
         banded_signatures,
         doc_shingle_sets,
         lsh_candidate_pairs,
@@ -353,14 +356,26 @@ def test_lsh_default_cap_loses_only_oversized_bucket_pairs(spark):
     ).persist()
     banded = banded_signatures(sigs, P.MINHASH_PERMS, P.MINHASH_BANDS)
 
-    uncapped = {
+    def bucket_pairs(max_bucket):
+        joined, _ = _bucket_self_join(banded, ["band", "sig"], max_bucket)
+        return {
+            (r.doc_a, r.doc_b)
+            for r in joined.select(
+                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+            )
+            .distinct()
+            .collect()
+        }
+
+    uncapped = bucket_pairs(None)
+    capped = bucket_pairs(cap)
+    # lsh_candidate_pairs runs the same join under the default cap, which
+    # an occupancy of 12 leaves inert
+    default = {
         (r.doc_a, r.doc_b)
-        for r in lsh_candidate_pairs(sigs, P.MINHASH_PERMS, P.MINHASH_BANDS, max_bucket=None).collect()
+        for r in lsh_candidate_pairs(sigs, P.MINHASH_PERMS, P.MINHASH_BANDS).collect()
     }
-    capped = {
-        (r.doc_a, r.doc_b)
-        for r in lsh_candidate_pairs(sigs, P.MINHASH_PERMS, P.MINHASH_BANDS, max_bucket=cap).collect()
-    }
+    assert default == uncapped
 
     # ground truth from the banded table itself: bucket -> member ids
     buckets: dict = {}
@@ -550,16 +565,6 @@ def test_char_mode_pairs_cjk_twins_that_word_mode_cannot_see(spark):
     word_pairs = {(r.doc_a, r.doc_b) for r in minhash_lsh_dedup(docs).collect()}
     assert (90, 91) not in word_pairs  # no word evidence exists for CJK
 
-    # the two-tier deploy composition takes the same knob: candidates
-    # AND exact verification on char evidence (J(90,91) = 9/10)
-    verified = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in lsh_verified_jaccard(
-            docs, shingle_k=CHAR_SHINGLE_K, shingle_mode="char"
-        ).collect()
-    }
-    assert verified[(90, 91)] == pytest.approx(0.9)
-
 
 def test_char_mode_nfc_unifies_combining_and_precomposed_accents(spark):
     """Byte-distinct, NFC-identical texts ("cafe" + COMBINING ACUTE vs
@@ -615,9 +620,8 @@ def test_word_prefilter_runs_on_lowered_text_kelvin_sign(spark):
 def test_char_normalized_text_equals_corpus_normalize_pass(spark):
     """char_normalized_text (the ASCII-masked NFC, then the shared
     textops.clean_text chain) must equal the corpus normalize pass with
-    nfc=True, or char shingles would silently diverge from the text the
-    corpus-prep pipeline persists. Pinned across the edge classes both
-    claim to handle."""
+    nfc=True, or char shingles would silently diverge from the text that
+    pass emits. Pinned across the edge classes both claim to handle."""
     from pyspark.sql import functions as F
 
     from flink_streaming_twitter_spark.operators.dedup import char_normalized_text
@@ -684,35 +688,6 @@ def test_char_mode_default_cap_inert_on_gate_corpus(spark, corpus_dir):
         "an UNCAPPED oracle and is no longer comparable — parameterize its "
         "oracle with the occupancy filter (see _minhash_lsh_sql(cap=))"
     )
-
-
-def test_char_two_tier_matches_exact_char_allpairs_on_fixture(spark):
-    """The char-tier deploy twin (LSH candidates + exact verify) must
-    reproduce the exact char all-pairs join's output on the fixture —
-    same pairs, same exact Jaccard values — including the CJK twins
-    (J=0.9) and the one-word-variant cluster (char-J=2/3, BELOW the
-    word tier's mid-range; both machinery paths share
-    doc_shingle_sets(shingle_mode="char") so the verify arithmetic is
-    common, and banding finds every J ≥ 2/3 fixture pair
-    deterministically under the pinned hash family). This is the
-    fixture-level pin of the sf0.1 recall measurement (SCALE.md
-    round 11: 256/256, 9.4× faster than exact)."""
-    rows = DOCS + [
-        (90, "日本語のテキスト 中文文本"),
-        (91, "日本語のテキスト 中文文本也"),
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    exact = {
-        (r.doc_a, r.doc_b): round(r.jaccard, 6)
-        for r in ngram_jaccard_pairs(docs, shingle_k=5, shingle_mode="char").collect()
-    }
-    verified = {
-        (r.doc_a, r.doc_b): round(r.jaccard, 6)
-        for r in lsh_verified_jaccard(docs, shingle_k=5, shingle_mode="char").collect()
-    }
-    assert exact == verified
-    assert exact[(90, 91)] == pytest.approx(0.9)  # the multilingual pair
-    assert exact[(0, 1)] == 1.0
 
 
 def test_md5_split_order_matches_hex_order(spark):

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from flink_streaming_twitter_spark.operators.graph import (
     connected_components,
     connected_components_star,
@@ -47,7 +49,7 @@ def test_star_matches_plain_on_random_graphs(spark):
             (rng.randrange(n), rng.randrange(n)) for _ in range(40 + 10 * trial)
         ]
         df = spark.createDataFrame(edges, ["src", "dst"])
-        plain = {r.id: r.comp for r in connected_components(df, max_iter=60).collect()}
+        plain = {r.id: r.comp for r in connected_components(df).collect()}
         star = {r.id: r.comp for r in connected_components_star(df).collect()}
         assert star == plain, f"trial {trial}"
 
@@ -57,23 +59,18 @@ def test_star_needs_far_fewer_rounds_on_deep_chain(spark):
     propagation moves the minimum ONE hop per round (O(diameter));
     large-star/small-star contracts the chain in O(log n) rounds —
     the difference that keeps transitive dedup-cluster chains feasible
-    at 100x depth."""
-    chain = [(i, i + 1) for i in range(16)]  # path of 17 nodes, diameter 16
-    df = spark.createDataFrame(chain, ["src", "dst"])
-    plain_stats: dict = {}
-    star_stats: dict = {}
-    plain = {
-        r.id: r.comp
-        for r in connected_components(df, max_iter=40, stats=plain_stats).collect()
-    }
-    star = {
-        r.id: r.comp
-        for r in connected_components_star(df, stats=star_stats).collect()
-    }
-    assert plain == star == {i: 0 for i in range(17)}
-    assert plain_stats["rounds"] >= 16  # one hop per round
-    assert star_stats["rounds"] <= 6  # logarithmic contraction
-    assert star_stats["rounds"] < plain_stats["rounds"]
+    at 100x depth. On a path longer than MAX_ROUNDS hops the plain
+    closure gives up, while the star closure labels every node with the
+    path's minimum within its own, smaller bound."""
+    from flink_streaming_twitter_spark.operators.graph import MAX_ROUNDS, STAR_MAX_ROUNDS
+
+    n = 40  # a path of 39 hops
+    assert n - 1 > MAX_ROUNDS > STAR_MAX_ROUNDS
+    df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["src", "dst"])
+    with pytest.raises(RuntimeError, match=f"did not converge in {MAX_ROUNDS} rounds"):
+        connected_components(df)
+    star = {r.id: r.comp for r in connected_components_star(df).collect()}
+    assert star == {i: 0 for i in range(n)}
 
 
 def test_neighbour_minimum_start_saves_a_join_round(spark):

@@ -1,6 +1,7 @@
 """Orphan guards: every public function and class in the package must be
 referenced by code outside ``tests/``, and every option (defaulted
-parameter) of a public package function must be set by some call.
+parameter) of a public package or ``examples/`` function must be set by
+some call outside ``tests/``.
 
 Pure ``ast`` over the repository's Python files — no Spark session. A
 reference is a ``Name``, an ``Attribute`` or an ``ImportFrom`` alias with
@@ -27,9 +28,6 @@ EXEMPT = {
 EXEMPT_OPTIONS = {
     "kafka_tweet_stream.starting_offsets": (
         "deployment setting: where a fresh consumer group starts reading the topic"
-    ),
-    "connected_components_star.max_iter": (
-        "the non-convergence bound: the loop raises instead of running forever"
     ),
     "hash_sample.n_buckets": "part of the sampling oracle that EXEMPT keeps",
 }
@@ -140,15 +138,20 @@ def _calls(tree: ast.Module):
 
 
 def test_every_option_has_a_caller():
-    """An option that no call sets is a constant with extra steps. Calls
-    anywhere count, tests included: a test that pins a variant is a
-    caller. Matching is by callee name, like the orphan guard above."""
+    """An option that no call sets is a constant with extra steps. Only
+    calls outside ``tests/`` count, the rule the orphan guard above
+    applies to names: a test that pins a variant no job, gate entry,
+    tool or benchmark runs keeps a configuration alive for the test
+    alone. Options of the package and of ``examples/`` are checked;
+    matching is by callee name, like the orphan guard above."""
     options, keywords, positional = [], set(), {}
     for path in _python_files():
         rel = path.relative_to(REPO).as_posix()
         tree = ast.parse(path.read_text(), filename=rel)
-        if rel.startswith(f"{PACKAGE}/"):
+        if rel.startswith((f"{PACKAGE}/", "examples/")):
             options += [(rel, *o) for o in _options(tree)]
+        if rel.startswith("tests/"):
+            continue
         for name, n_args, kws in _calls(tree):
             keywords.update((name, k) for k in kws)
             positional[name] = max(positional.get(name, 0), n_args)
@@ -164,3 +167,66 @@ def test_every_option_has_a_caller():
     assert not unset, "options that no call sets:\n" + "\n".join(unset)
     stale = sorted(set(EXEMPT_OPTIONS) - {f"{fn}.{param}" for _r, fn, param, _i, _l in options})
     assert not stale, f"option exemptions for parameters that no longer exist: {stale}"
+
+
+# modules outside the package whose functions perfbench/ drives; each is
+# imported from its own directory (perfbench puts both on sys.path)
+BENCHMARKED_MODULES = {
+    "corpus_prep_app": REPO / "examples",
+    "twitter_stream_app": REPO / "examples",
+    "bench": REPO,
+}
+
+
+def _benchmark_calls():
+    """(file:line, module, name, positional count, keyword names) of each
+    call in ``perfbench/*.py`` to a name imported from the package or a
+    module of BENCHMARKED_MODULES."""
+    for path in sorted((REPO / "perfbench").glob("*.py")):
+        rel = path.relative_to(REPO).as_posix()
+        tree = ast.parse(path.read_text(), filename=rel)
+        imported = {
+            a.asname or a.name: (node.module, a.name)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom)
+            and node.module
+            and (node.module.split(".")[0] == PACKAGE or node.module in BENCHMARKED_MODULES)
+            for a in node.names
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+                if node.func.id in imported:
+                    assert not any(isinstance(a, ast.Starred) for a in node.args)
+                    assert all(k.arg for k in node.keywords)
+                    yield (
+                        f"{rel}:{node.lineno}",
+                        *imported[node.func.id],
+                        len(node.args),
+                        [k.arg for k in node.keywords],
+                    )
+
+
+def test_benchmark_calls_bind_to_current_signatures():
+    """Every call the benchmark makes into the package, the two apps and
+    ``bench`` must still bind to the callee's signature (positional
+    count and keyword names), so removing or renaming an option cannot
+    silently break ``perfbench/run.py`` — its ``--trace 1`` path runs
+    only under the benchmark. Imports the modules; starts no Spark
+    session."""
+    import importlib
+    import inspect
+    import sys
+
+    for directory in {str(d) for d in BENCHMARKED_MODULES.values()}:
+        if directory not in sys.path:
+            sys.path.insert(0, directory)
+    calls = list(_benchmark_calls())
+    assert calls, "no benchmark calls into the package found"
+    unbound = []
+    for where, module, name, n_args, keywords in calls:
+        fn = getattr(importlib.import_module(module), name)
+        try:
+            inspect.signature(fn).bind(*[None] * n_args, **dict.fromkeys(keywords))
+        except TypeError as e:
+            unbound.append(f"{where} {module}.{name}: {e}")
+    assert not unbound, "benchmark calls that no longer bind:\n" + "\n".join(unbound)

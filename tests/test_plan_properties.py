@@ -207,10 +207,7 @@ def test_bucket_cap_plans_broadcast_anti_join(spark, sf_dir):
         D.doc_shingle_sets(docs, k=P.SHINGLE_K), P.MINHASH_PERMS
     )
     plan = _plan(
-        D.lsh_candidate_pairs(
-            sigs, P.MINHASH_PERMS, P.MINHASH_BANDS, max_bucket=D.DEFAULT_LSH_MAX_BUCKET
-        )
-    )
+D.lsh_candidate_pairs(sigs, P.MINHASH_PERMS, P.MINHASH_BANDS))
     assert "BroadcastHashJoin LeftAnti" in plan, plan
     assert "SortMergeJoin LeftAnti" not in plan
     assert "ShuffledHashJoin LeftAnti" not in plan

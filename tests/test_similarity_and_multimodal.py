@@ -221,81 +221,6 @@ def test_frame_sample_keeps_every_nth(spark):
         assert all(i % 4 == 0 for i in idxs)
 
 
-def test_decode_kernel_stub_real_switch():
-    """The decode kernel is import-gated on PIL: with no PIL (this
-    container) it takes the deterministic stub; with a (faked) PIL whose
-    open() succeeds it takes the real branch; with a PIL that can't
-    parse the bytes it falls back to the stub — both worlds honest."""
-    from flink_streaming_twitter_spark.operators import multimodal as M
-
-    payload = b"not really a jpeg payload"
-    stub = M._decode_payload_stub(payload)
-
-    # where Pillow is absent the kernel must equal the stub; where it IS
-    # installed, un-parseable bytes must still fall back to the stub —
-    # don't assert the container's environment, assert the behavior
-    assert M.REAL_DECODERS_AVAILABLE == (M._PIL_IMAGE is not None)
-    assert M._decode_payload(payload) == stub
-
-    class FakeImg:
-        size = (640, 480)
-        n_frames = 3
-
-        def convert(self, mode):
-            return self
-
-        def histogram(self):
-            return [1] * 256  # uniform → each of 8 bins sums 32/256
-
-    class FakePIL:
-        @staticmethod
-        def open(fp):
-            return FakeImg()
-
-    class BrokenPIL:
-        @staticmethod
-        def open(fp):
-            raise OSError("cannot identify image file")
-
-    orig = M._PIL_IMAGE
-    try:
-        M._PIL_IMAGE = FakePIL
-        w, h, nf, feat = M._decode_payload(payload)
-        assert (w, h, nf) == (640, 480, 3)
-        assert feat == [32.0 / 256.0] * 8
-        M._PIL_IMAGE = BrokenPIL
-        assert M._decode_payload(payload) == stub  # graceful fallback
-    finally:
-        M._PIL_IMAGE = orig
-
-
-def test_ivf_auto_seed_mod_sizes_cells_to_sqrt_n(spark):
-    """seed_mod=None is the deploy path (ncells ~ sqrt(n), SCALE.md):
-    results must still be a valid top-k (correct schema, ranks 1..k,
-    no self-matches) and the auto-sized quantizer must actually produce
-    ~sqrt(n) cells rather than n/53."""
-    from flink_streaming_twitter_spark.operators.similarity import ivf_topk
-
-    emb = (
-        spark.range(400)
-        .selectExpr(
-            "id AS vec_id",
-            "transform(sequence(1, 8), j -> cast(hash(id, j) % 100 AS double) / 100.0)"
-            " AS embedding",
-        )
-    )
-    out = ivf_topk(emb, emb.filter("vec_id < 2"), k=3, nprobe=2, seed_mod=None).collect()
-    by_q: dict = {}
-    for r in out:
-        assert r.q_id != r.vec_id
-        by_q.setdefault(r.q_id, []).append(r.rank)
-    for q, ranks in by_q.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1)), (q, ranks)
-    # auto seed_mod = floor(sqrt(400)) = 20 -> exactly the ids = 7 mod 20
-    n_cells = emb.filter("vec_id % 20 = 7").count()
-    assert n_cells == 20
-
-
 def test_decode_cache_keyed_per_session_and_sf_dir(spark):
     """The decode-once persist() cache is keyed per (session, sf_dir)
     (ADVICE r4): building plans for TWO sf dirs must leave both caches

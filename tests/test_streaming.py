@@ -271,8 +271,9 @@ def test_stream_session_merges_across_micro_batches(spark):
 
 
 def test_stream_interval_join_equals_batch(spark):
-    """Watermarked stream-stream interval join (view→click within 5 s per
-    user) must converge to the batch interval join once drained."""
+    """Watermarked stream-stream interval join (view→click within 150 s
+    per user, under the 300 s watermark) must converge to the batch
+    interval join once drained."""
     import shutil
     import tempfile
 
@@ -287,13 +288,13 @@ def test_stream_interval_join_equals_batch(spark):
         (BASE + dt.timedelta(seconds=s), u, e)
         for s, u, e in [
             (0, "u1", "view"),
-            (2, "u1", "click"),  # joins view@0 (delta 2)
-            (9, "u1", "click"),  # outside 5 s of view@0
-            (1, "u2", "view"),
-            (30, "u2", "click"),  # outside window
-            (3, "u3", "click"),  # no view at all
-            (10, "u1", "view"),
-            (12, "u1", "click"),  # joins view@10
+            (60, "u1", "click"),  # joins view@0 (delta 60)
+            (270, "u1", "click"),  # outside 150 s of view@0
+            (30, "u2", "view"),
+            (900, "u2", "click"),  # outside window
+            (90, "u3", "click"),  # no view at all
+            (300, "u1", "view"),
+            (360, "u1", "click"),  # joins view@300
         ]
     ]
     d = tempfile.mkdtemp(prefix="ssjoin_")
@@ -314,7 +315,7 @@ def test_stream_interval_join_equals_batch(spark):
             spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
         )
         q = start_query(
-            stream_interval_join(sv, sc, ["user_id"], "view_ts", "click_ts", 5, "10 seconds"),
+            stream_interval_join(sv, sc, ["user_id"], "view_ts", "click_ts", 150),
             name="ssj_stream",
             output_mode="append",
             available_now=True,
@@ -329,13 +330,13 @@ def test_stream_interval_join_equals_batch(spark):
         expected = {
             (r.user_id, int(r.view_ts.timestamp()), int(r.click_ts.timestamp()))
             for r in stream_interval_join(
-                bv, bc, ["user_id"], "view_ts", "click_ts", 5, "10 seconds"
+                bv, bc, ["user_id"], "view_ts", "click_ts", 150
             ).collect()
         }
         base_epoch = int(BASE.replace(tzinfo=dt.timezone.utc).timestamp())
         assert expected == {
-            ("u1", base_epoch + 0, base_epoch + 2),
-            ("u1", base_epoch + 10, base_epoch + 12),
+            ("u1", base_epoch + 0, base_epoch + 60),
+            ("u1", base_epoch + 300, base_epoch + 360),
         }
         assert got == expected
     finally:
@@ -962,9 +963,9 @@ def test_interval_join_buffers_across_restart(spark):
     produce that pair from checkpoint-recovered join state, since the
     file-source log never re-reads the view's file."""
     files = [
-        [(0, "u1", "view"), (2, "u1", "click"), (40, "u2", "view")],
-        [(60, "u2", "click"), (100, "u1", "view")],  # view buffered at restart
-        [(103, "u1", "click"), (120, "u3", "click")],  # click pairs post-restart
+        [(0, "u1", "view"), (60, "u1", "click"), (1200, "u2", "view")],
+        [(1800, "u2", "click"), (3000, "u1", "view")],  # view buffered at restart
+        [(3090, "u1", "click"), (3600, "u3", "click")],  # click pairs post-restart
     ]
 
     schema = T.StructType(
@@ -996,9 +997,7 @@ def test_interval_join_buffers_across_restart(spark):
             "user_id", F.col("ts").alias("click_ts")
         )
         q = start_query(
-            stream_interval_join(
-                views, clicks, ["user_id"], "view_ts", "click_ts", 5, "10 seconds"
-            ),
+            stream_interval_join(views, clicks, ["user_id"], "view_ts", "click_ts", 150),
             name=view,
             output_mode="append",
             available_now=True,
@@ -1023,12 +1022,12 @@ def test_interval_join_buffers_across_restart(spark):
         p2 = drain(rec_dir, "jr_p2", f"{work}/cp_rec")
 
         assert p1 | p2 == reference and not (p1 & p2)
-        assert ("u1", epoch + 0, epoch + 2) in p1  # matched pre-restart
+        assert ("u1", epoch + 0, epoch + 60) in p1  # matched pre-restart
         # the recovery pair: view buffered before the restart, click after
-        assert ("u1", epoch + 100, epoch + 103) in p2
+        assert ("u1", epoch + 3000, epoch + 3090) in p2
         assert reference == {
-            ("u1", epoch + 0, epoch + 2),
-            ("u1", epoch + 100, epoch + 103),
+            ("u1", epoch + 0, epoch + 60),
+            ("u1", epoch + 3000, epoch + 3090),
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -1639,7 +1638,7 @@ def test_far_future_event_poisons_watermark_and_evicts_stream_tail(spark):
     DELAY = 10
     SIZE = 20
     f00 = [0, 5, 18]
-    f01 = [30, 300_000_000]  # one ordinary event + the poison (~yr 2033 vs BASE)
+    f01 = [30, 3_000_000_000]  # one ordinary event + the poison (~yr 2119 vs BASE)
     f02 = [40, 55]           # arrives ONE batch after the poison
     f03 = [60, 62, 75]       # arrives TWO batches after the poison
 
@@ -1738,12 +1737,9 @@ def test_sane_event_time_before_watermark_prevents_poison_eviction(spark):
 
     DELAY = 10
     SIZE = 20
-    files = ([0, 5, 18], [30, 300_000_000], [40, 55], [60, 62, 75])
-    sane_secs = [s for f in files for s in f if s != 300_000_000]
-    # the test's sanity horizon: one day past BASE — the poison
-    # (~yr 2033) sits inside the engine-wide 2100 default, so the
-    # deploy-side now+skew rule is modeled with explicit tight bounds
-    LO, HI = "2024-01-01 00:00:00", "2024-01-02 00:00:00"
+    # the poison (~yr 2119) lies past the engine-wide 2100 bound
+    files = ([0, 5, 18], [30, 3_000_000_000], [40, 55], [60, 62, 75])
+    sane_secs = [s for f in files for s in f if s != 3_000_000_000]
 
     work = tempfile.mkdtemp(prefix="sanewm_")
     try:
@@ -1760,7 +1756,7 @@ def test_sane_event_time_before_watermark_prevents_poison_eviction(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        guarded = stream.withColumn("ts", sane_event_time(F.col("ts"), LO, HI))
+        guarded = stream.withColumn("ts", sane_event_time(F.col("ts")))
         wm = _watermarked(guarded, f"{DELAY} seconds")
         # update mode (the gate's stream_qb_counts mode): emits every
         # state change immediately, so the assertion isolates the

@@ -28,8 +28,8 @@ from __future__ import annotations
 import argparse
 
 from flink_streaming_twitter_spark.session import build_session
-from flink_streaming_twitter_spark.sources.kafka import kafka_tweet_stream, parse_tweets
-from flink_streaming_twitter_spark.streaming.runner import WATERMARK, ensure_event_time, start_query
+from flink_streaming_twitter_spark.sources.kafka import DEFAULT_TOPIC, kafka_tweet_stream, parse_tweets
+from flink_streaming_twitter_spark.streaming.runner import WATERMARK, start_query
 from flink_streaming_twitter_spark.streaming.sinks import (
     influx_lines_foreach_batch,
     to_influx_points,
@@ -65,8 +65,8 @@ def build_queries(
     tagged = tweets.select(
         F.explode(hashtags(F.col("text"))).alias("hashtag"), F.col("ts")
     )
-    tags = ensure_event_time(tagged, "ts").withWatermark("ts", WATERMARK)
-    tweets = ensure_event_time(tweets, "ts").withWatermark("ts", WATERMARK)
+    tags = tagged.withWatermark("ts", WATERMARK)
+    tweets = tweets.withWatermark("ts", WATERMARK)
 
     queries = []
 
@@ -160,7 +160,7 @@ def build_queries(
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--brokers", required=True, help="Kafka bootstrap servers")
-    ap.add_argument("--topic", default="tweeter-topic")  # Main.java:61
+    ap.add_argument("--topic", default=DEFAULT_TOPIC)  # Main.java:61
     ap.add_argument("--influx-url", required=True, help="InfluxDB /write URL")
     ap.add_argument("--checkpoint", default="/tmp/twitter-stream-checkpoints")
     args = ap.parse_args()

@@ -37,7 +37,7 @@ def md5_int31(col: Column) -> Column:
 _PERM_SEED = "flink-streaming-twitter"
 
 
-def _perm_params(num_perm: int) -> list[tuple[int, int]]:
+def minhash_params(num_perm: int) -> list[tuple[int, int]]:
     """Deterministic (a_i, b_i) pairs for the i-th min-hash permutation,
     derived from md5 so the DuckDB oracle can hard-code identical values."""
     params = []
@@ -58,9 +58,4 @@ def minhash_set_exprs(set_col: str, num_perm: int) -> list[Column]:
             F.transform(F.col(set_col), lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(MERSENNE_31))
         )
 
-    return [perm(a, b) for a, b in _perm_params(num_perm)]
-
-
-def minhash_params_sql(num_perm: int) -> list[tuple[int, int]]:
-    """The same (a_i, b_i) pairs for embedding into oracle SQL text."""
-    return _perm_params(num_perm)
+    return [perm(a, b) for a, b in minhash_params(num_perm)]

@@ -186,8 +186,7 @@ def one_row_per_key(df: DataFrame, key_col: str, content_col: str) -> DataFrame:
     md5(content) alone, so rows with equal content but differing extra
     columns would resolve nondeterministically between those extras.
     Keep any additional columns out of the frame (join them back on the
-    key afterwards) rather than widening the struct here; a frame with
-    extra columns falls back to the round-11 min_by(struct) form.
+    key afterwards): the result carries only (key, content).
 
     Applied at every KEY-evidence ingest point: the shingle tiers
     (doc_shingle_sets), SimHash (simhash_fingerprints — before it, a
@@ -198,10 +197,6 @@ def one_row_per_key(df: DataFrame, key_col: str, content_col: str) -> DataFrame:
     both engines agree per-row by construction) or to row-level
     fact aggregates; see SCALE.md's duplicate-key note for the scope.
     """
-    rest = [c for c in df.columns if c != key_col]
-    if rest != [content_col]:
-        picked = F.min_by(F.struct(*[F.col(c) for c in rest]), F.md5(F.col(content_col)))
-        return df.groupBy(key_col).agg(picked.alias("_w")).select(key_col, "_w.*")
     # project the digest once per consumer (the md5 is referenced by
     # three substrings — CollapseProject keeps the non-cheap alias in
     # its own Project instead of inlining it three times)

@@ -29,14 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("mime", T.StringType()),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -85,8 +77,8 @@ def _decode_payload(payload: bytes) -> tuple[int, int, int, list[float]]:
 
 
 def decode_media(df: DataFrame) -> DataFrame:
-    """mapInPandas decode pass: MEDIA_SCHEMA rows → DECODED_SCHEMA rows,
-    through :func:`_decode_payload`.
+    """mapInPandas decode pass: (media_id, payload, mime) rows →
+    DECODED_SCHEMA rows, through :func:`_decode_payload`.
 
     Arrow-batched; each batch is decoded columnarly in one Python call.
     """

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import MERSENNE_31, minhash_params_sql
+from ..functions.hashing import MERSENNE_31, minhash_params
 from ..operators import dedup as D
 from ..sources.files import load_table
 from . import params as P
@@ -343,7 +343,7 @@ GROUP BY 1
 
 
 def _minhash_sig_sql(num_perm: int) -> str:
-    params = minhash_params_sql(num_perm)
+    params = minhash_params(num_perm)
     mins = ",\n    ".join(
         f"min(({a} * sh + {b}) % {MERSENNE_31}) AS mh{i}" for i, (a, b) in enumerate(params)
     )

@@ -52,7 +52,5 @@ IVF_SEED_MOD = 53  # centroids: vec_id % mod == rem (~corpus/53 cells)
 IVF_SEED_REM = 7
 IVF_NPROBE = 3
 
-# simhash
-SIMHASH_BITS = 64
-SIMHASH_BANDS = 4  # 16 bits per band; hamming<=3 pairs always share a band
+# simhash (operators/dedup.py defines the fingerprint width and banding)
 SIMHASH_MAX_HAMMING = 3

@@ -19,8 +19,8 @@ from ..operators.windows import (
     trending_two_stage,
     tumbling_counts,
 )
-from ..sources.files import load_table
-from ..streaming.runner import WATERMARK, ensure_event_time, start_query, stream_interval_join
+from ..sources.files import ensure_event_time, load_table
+from ..streaming.runner import WATERMARK, start_query, stream_interval_join
 from . import params as P
 
 
@@ -241,10 +241,6 @@ def _drain_events_stream(
             # order (same trick the eviction unit test relies on)
             os.utime(path, (1_000_000_000 + i * 3600,) * 2)
         stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(d)
-        if dict(stream.dtypes).get("ts") == "bigint":  # TIMESTAMP(NANOS) as long
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
-            )
         plan = build(ensure_event_time(stream, "ts"))
         try:
             LAST_DRAIN_TIMING["query_start"] = time.perf_counter()

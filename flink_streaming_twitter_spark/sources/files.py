@@ -13,15 +13,44 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# event-time columns needing normalization to session-UTC TimestampType:
-# events.ts is parquet TIMESTAMP(NANOS) (surfaces as int64 nanos under
-# nanosAsLong); orders/lineitem dates are TIMESTAMP(MICROS,
-# isAdjustedToUTC=false) (surface as TIMESTAMP_NTZ in Spark 4)
+# event-time columns per table. The sf0.001-sf0.1 tables store all three
+# as TIMESTAMP(MICROS, isAdjustedToUTC=false), TIMESTAMP_NTZ in Spark 4;
+# an events.ts stored as TIMESTAMP(NANOS) loads as int64 under nanosAsLong
 _TS_COLUMNS = {
     "events": ("ts",),
     "orders": ("o_orderdate",),
     "lineitem": ("l_shipdate",),
 }
+
+
+def ensure_event_time(df: DataFrame, ts_col: str) -> DataFrame:
+    """Normalize an event-time column to TIMESTAMP (LTZ) interpreted as
+    UTC — the one event-time rule the batch tables and the stream replays
+    share, and the type ``withWatermark`` accepts:
+
+    - int64 nanos (parquet TIMESTAMP(NANOS) read under nanosAsLong) are
+      truncated to micros (consumers bucket at >= 1 s);
+    - TIMESTAMP_NTZ (parquet written with isAdjustedToUTC=false) is cast
+      in the session timezone — the same instant the DuckDB oracle's
+      naive epoch() computes. The cast reinterprets the wall-clock value
+      in the session timezone, so it is value-preserving ONLY under UTC:
+      asserted here rather than assumed, because a caller-built non-UTC
+      session would otherwise get silently shifted event times.
+
+    Any other column type passes through unchanged."""
+    dtype = dict(df.dtypes).get(ts_col)
+    if dtype == "bigint":
+        return df.withColumn(ts_col, F.timestamp_micros((F.col(ts_col) / 1000).cast("long")))
+    if dtype == "timestamp_ntz":
+        tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+        if tz not in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00"):
+            raise ValueError(
+                f"casting TIMESTAMP_NTZ column {ts_col!r} to TIMESTAMP requires a "
+                f"UTC session (spark.sql.session.timeZone={tz!r} would shift event "
+                "times); set the session timezone to UTC first"
+            )
+        return df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -37,17 +66,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    # Normalize event-time columns to TimestampType interpreted as UTC:
-    # int64 nanos → truncate to micros (consumers bucket at >= 1 s);
-    # TIMESTAMP_NTZ → cast in the UTC session zone (same instant the
-    # DuckDB oracle's naive epoch() computes).
-    dtypes = dict(df.dtypes)
     for col_name in _TS_COLUMNS.get(name, ()):
-        if dtypes.get(col_name) == "bigint":
-            df = df.withColumn(
-                col_name, F.timestamp_micros((F.col(col_name) / 1000).cast("long"))
-            )
-        elif dtypes.get(col_name) == "timestamp_ntz":
-            df = df.withColumn(col_name, F.col(col_name).cast("timestamp"))
+        df = ensure_event_time(df, col_name)
     return df
 

@@ -20,10 +20,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..schema import TWEET_JSON_SCHEMA
+from pyspark.sql import types as T
 
 DEFAULT_TOPIC = "tweeter-topic"
+
+# Input stream record (Tweet.java:14-21). The JSON property carrying
+# event time is `createdAt` although the POJO field is `timestamp_ms`; it
+# holds epoch milliseconds (Tweet.java:17-18, used as epoch ms at
+# Main.java:71). Unknown properties are ignored (Tweet.java:10).
+TWEET_JSON_SCHEMA = T.StructType(
+    [
+        T.StructField("text", T.StringType()),
+        T.StructField("createdAt", T.LongType()),
+        T.StructField("lang", T.StringType()),
+    ]
+)
 
 
 def kafka_options(

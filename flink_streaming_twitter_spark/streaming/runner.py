@@ -1,7 +1,9 @@
-"""Structured Streaming wiring: event-time normalization, query start and
-the stream-stream interval join. Each reference pipeline is the batch
-operator (operators/windows.py, operators/sessions.py) run on
-``ensure_event_time(df, ts).withWatermark(ts, WATERMARK)`` — one query
+"""Structured Streaming wiring: query start and the stream-stream
+interval join. Each reference pipeline is the batch operator
+(operators/windows.py, operators/sessions.py) run on
+``df.withWatermark(ts, WATERMARK)``, where ``df`` carries the event time
+that the batch tables also use (sources/kafka.parse_tweets, or
+sources/files.ensure_event_time for the parquet replays) — one query
 for batch and stream (SIGMOD 2018, PAPERS.md). Semantics mapping
 (SURVEY.md §2.5 T1, §7 hard-parts):
 
@@ -43,26 +45,6 @@ from pyspark.sql.streaming import StreamingQuery
 WATERMARK_S = 300  # Main.java:66 Time.seconds(300)
 WATERMARK = f"{WATERMARK_S} seconds"
 TRIGGER = "5 seconds"
-
-
-def ensure_event_time(df: DataFrame, ts_col: str) -> DataFrame:
-    """Normalize an event-time column to TIMESTAMP (LTZ) so
-    ``withWatermark`` accepts it: parquet written with
-    isAdjustedToUTC=false loads as TIMESTAMP_NTZ, which the watermark
-    machinery rejects. The cast reinterprets the wall-clock value in the
-    session timezone, so it is value-preserving ONLY under UTC — asserted
-    here rather than assumed, because a caller-built non-UTC session
-    would otherwise get silently shifted event times (ADVICE r2)."""
-    if dict(df.dtypes).get(ts_col) == "timestamp_ntz":
-        tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
-        if tz not in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00"):
-            raise ValueError(
-                f"casting TIMESTAMP_NTZ column {ts_col!r} to TIMESTAMP requires a "
-                f"UTC session (spark.sql.session.timeZone={tz!r} would shift event "
-                "times); set the session timezone to UTC first"
-            )
-        df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return df
 
 
 def start_query(
@@ -114,8 +96,8 @@ def stream_interval_join(
     WATERMARK. ``left_ts``/``right_ts`` must be distinct names (rename
     before calling); key columns are taken from the left.
     """
-    l = ensure_event_time(left, left_ts).withWatermark(left_ts, WATERMARK)
-    r = ensure_event_time(right, right_ts).withWatermark(right_ts, WATERMARK)
+    l = left.withWatermark(left_ts, WATERMARK)
+    r = right.withWatermark(right_ts, WATERMARK)
     key_eq = [l[k] == r[k] for k in key_cols]
     rng = (F.col(right_ts) >= F.col(left_ts)) & (
         F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {max_delay_s} SECONDS")

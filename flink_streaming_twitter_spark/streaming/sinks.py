@@ -58,7 +58,14 @@ def to_influx_points(
     stringifying here would make InfluxDB type the field as string on
     first write and break every numeric dashboard query. ``influx_line``
     renders the struct by Python type (int → ``5i``, float → ``5.0``,
-    str → quoted)."""
+    str → quoted).
+
+    The hashtag is a documented remap, not the reference's exact field
+    set: its two trending mappers put the hashtag STRING in the fields
+    map with an empty tags map (Main.java:228-229, 242-243). We ship it
+    as a TAG instead (indexed, and the series key a dashboard groups
+    by), so one BIGINT ``count`` is the sole field of all four
+    measurements."""
     tags = F.create_map(
         *[x for k, c in tag_cols.items() for x in (F.lit(k), F.col(c).cast("string"))]
     )

@@ -740,24 +740,6 @@ def test_one_row_per_key_hash_form_matches_min_by_form(spark):
     assert "HashAggregate" in plan
 
 
-def test_one_row_per_key_generic_frame_falls_back_to_min_by(spark):
-    """Frames wider than (key, content) keep the round-11 min_by(struct)
-    semantics: the winner's EXTRA columns travel with the winning row."""
-    from flink_streaming_twitter_spark.operators.dedup import one_row_per_key
-
-    rows = [(1, "alpha body", 10), (1, "beta body", 20), (2, None, 30)]
-    df = spark.createDataFrame(rows, "k INT, text STRING, extra INT")
-    got = {r.k: (r.text, r.extra) for r in one_row_per_key(df, "k", "text").collect()}
-    import hashlib
-
-    md5 = lambda s: hashlib.md5(s.encode()).hexdigest()  # noqa: E731
-    winner = min(("alpha body", "beta body"), key=md5)
-    assert got[1] == (winner, 10 if winner == "alpha body" else 20)
-    # an all-NULL-content key keeps one row whose struct is the min_by
-    # NULL result — extras come back NULL with it (round-11 semantics)
-    assert got[2] == (None, None)
-
-
 def test_one_row_per_key_keeps_one_row_for_null_key(spark):
     """A NULL key is a group like any other: one_row_per_key keeps
     exactly one row for it, the min-md5 content, as DuckDB's

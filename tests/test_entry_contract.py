@@ -129,8 +129,10 @@ def _package_import_closure() -> dict[str, set[str]]:
         elif isinstance(node, ast.ImportFrom):
             if node.level:  # relative: from .x / from ..operators import y
                 base = importer.split(".")
-                # importer is a module; its package is all but the last part
-                # (or itself for __init__, but files[] already normalized)
+                # importer is a module; its package is all but the last
+                # part. An __init__.py would resolve against its parent
+                # instead, but none imports anything
+                # (tests/test_no_orphans.py::test_package_init_files_import_nothing)
                 base = base[: len(base) - node.level]
                 stem = ".".join(base + ([node.module] if node.module else []))
             elif node.module and (

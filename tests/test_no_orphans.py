@@ -1,15 +1,16 @@
-"""Orphan guards: every public function and class in the package must be
-referenced by code outside ``tests/``, and every option (defaulted
+"""Orphan guards: every public function and class in the package, and
+every UPPER_CASE module constant in the package and ``examples/``, must
+be referenced by code outside ``tests/``; every option (defaulted
 parameter) of a public package or ``examples/`` function must be set by
-some call outside ``tests/``.
+some call outside ``tests/``; and no package ``__init__.py`` imports
+anything.
 
 Pure ``ast`` over the repository's Python files — no Spark session. A
 reference is a ``Name``, an ``Attribute`` or an ``ImportFrom`` alias with
-the definition's name. These do not count: anything under ``tests/``, the
-re-export imports in ``__init__.py`` files, and a name used inside its own
-definition (recursion). Matching is by name, so a same-named symbol
-elsewhere keeps a definition alive; the guard catches code that nothing
-reaches, not every dead path.
+the definition's name. These do not count: anything under ``tests/``
+and a name used inside its own definition (recursion). Matching is by
+name, so a same-named symbol elsewhere keeps a definition alive; the
+guard catches code that nothing reaches, not every dead path.
 """
 
 from __future__ import annotations
@@ -23,6 +24,12 @@ PACKAGE = "flink_streaming_twitter_spark"
 
 EXEMPT = {
     "hash_sample": "reference oracle that tests/test_sampling.py checks weighted_mix against",
+    "TAIL_EXEMPTIONS": (
+        "rotation declaration of the driver contract; tests/test_entry_contract.py reads it"
+    ),
+    "DIFF_ANCHOR": (
+        "rotation declaration of the driver contract; tests/test_entry_contract.py reads it"
+    ),
 }
 
 EXEMPT_OPTIONS = {
@@ -52,25 +59,34 @@ def _python_files() -> list[Path]:
 
 
 def _definitions(rel: str, tree: ast.Module) -> list[tuple[str, str, int, int]]:
-    """(name, file, first line, last line) of each public top-level
-    function/class."""
-    return [
-        (node.name, rel, node.lineno, node.end_lineno)
-        for node in tree.body
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-        and not node.name.startswith("_")
-    ]
+    """(name, file, first line, last line) of each top-level definition
+    the guard checks: public functions and classes of the package, and
+    UPPER_CASE constants (a leading underscore included) of the package
+    and ``examples/``."""
+    out = []
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if rel.startswith(f"{PACKAGE}/") and not node.name.startswith("_"):
+                out.append((node.name, rel, node.lineno, node.end_lineno))
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            out += [
+                (t.id, rel, node.lineno, node.end_lineno)
+                for target in targets
+                for t in ast.walk(target)
+                if isinstance(t, ast.Name) and t.id.isupper()
+            ]
+    return out
 
 
 def _references(rel: str, tree: ast.Module) -> list[tuple[str, str, int]]:
-    is_init = rel.endswith("__init__.py")
     refs = []
     for node in ast.walk(tree):
         if isinstance(node, ast.Name):
             refs.append((node.id, rel, node.lineno))
         elif isinstance(node, ast.Attribute):
             refs.append((node.attr, rel, node.lineno))
-        elif isinstance(node, ast.ImportFrom) and not is_init:
+        elif isinstance(node, ast.ImportFrom):
             refs.extend((a.name, rel, node.lineno) for a in node.names)
     return refs
 
@@ -82,7 +98,7 @@ def test_every_public_package_name_has_a_caller_outside_tests():
         if rel.startswith("tests/"):
             continue
         tree = ast.parse(path.read_text(), filename=rel)
-        if rel.startswith(f"{PACKAGE}/"):
+        if rel.startswith((f"{PACKAGE}/", "examples/")):
             defs.extend(_definitions(rel, tree))
         refs.extend(_references(rel, tree))
     assert defs, "no package definitions found"
@@ -101,9 +117,27 @@ def test_every_public_package_name_has_a_caller_outside_tests():
         for name, rel, first, _last in defs
         if name not in used and name not in EXEMPT
     )
-    assert not orphans, "public names with no caller outside tests/:\n" + "\n".join(orphans)
+    assert not orphans, "names with no caller outside tests/:\n" + "\n".join(orphans)
     stale = sorted(set(EXEMPT) - set(spans))
     assert not stale, f"exemptions for names that no longer exist: {stale}"
+
+
+def test_package_init_files_import_nothing():
+    """A package ``__init__.py`` that imports re-exports names no caller
+    reads (every caller imports the submodule), loads its siblings on any
+    import of the package, and hides edges from the rotation check's
+    import closure (tests/test_entry_contract.py resolves imports as if
+    no ``__init__.py`` had any). So each one is empty, or a docstring and
+    plain assignments."""
+    inits = sorted((REPO / PACKAGE).rglob("__init__.py"))
+    assert inits, "no package __init__.py found"
+    importing = sorted(
+        f"{path.relative_to(REPO).as_posix()}:{node.lineno}"
+        for path in inits
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+    )
+    assert not importing, "package __init__.py files that import:\n" + "\n".join(importing)
 
 
 def _options(tree: ast.Module) -> list[tuple[str, str, int | None, int]]:

@@ -192,7 +192,7 @@ def test_minhash_matches_python_model(spark, texts):
 
     from flink_streaming_twitter_spark.functions.hashing import (
         MERSENNE_31,
-        minhash_params_sql,
+        minhash_params,
     )
     from flink_streaming_twitter_spark.operators.dedup import (
         doc_shingle_sets,
@@ -207,7 +207,7 @@ def test_minhash_matches_python_model(spark, texts):
     sets_df = doc_shingle_sets(docs, k=3)
     got = {r.doc_id: list(r.mhs) for r in minhash_signatures(sets_df, 8).collect()}
 
-    params = minhash_params_sql(8)
+    params = minhash_params(8)
     expected = {}
     for i, t in enumerate(texts):
         # re.ASCII: Spark's \w is Java regex (ASCII word chars); Python's

@@ -3,7 +3,6 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 from flink_streaming_twitter_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
     decode_media,
     frame_sample,
     payload_metadata,
@@ -21,6 +20,14 @@ VECS = [
     (3, [0.0, 1.0, 0.0, 0.0]),  # orthogonal to 0
     (4, [-1.0, 0.0, 0.0, 0.0]),  # opposite of 0
 ]
+
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType()),
+        T.StructField("payload", T.BinaryType()),
+        T.StructField("mime", T.StringType()),
+    ]
+)
 
 
 def _emb(spark):

@@ -25,9 +25,9 @@ from flink_streaming_twitter_spark.operators.windows import (
     trending_two_stage,
     tumbling_counts,
 )
+from flink_streaming_twitter_spark.sources.files import ensure_event_time
 from flink_streaming_twitter_spark.streaming.runner import (
     WATERMARK,
-    ensure_event_time,
     start_query,
     stream_interval_join,
 )
@@ -728,8 +728,12 @@ def test_gate_dedup_drain_crosses_batches_without_reemission(spark, sf_dir):
 def test_ensure_event_time_refuses_non_utc_session(spark):
     """The NTZ→LTZ cast is value-preserving only under UTC; a caller-built
     non-UTC session must fail loudly, not silently shift event times
-    (ADVICE r2)."""
-    from flink_streaming_twitter_spark.streaming.runner import ensure_event_time
+    (ADVICE r2). int64 nanos (parquet TIMESTAMP(NANOS) under nanosAsLong)
+    truncate to the same instant in micros."""
+    nanos = spark.createDataFrame([(1_704_067_200_123_456_789,)], "ts BIGINT")
+    got = ensure_event_time(nanos, "ts")
+    assert dict(got.dtypes)["ts"] == "timestamp"
+    assert got.select(F.unix_micros("ts")).first()[0] == 1_704_067_200_123_456
 
     ntz = spark.createDataFrame([("2024-01-01 00:00:00",)], ["s"]).select(
         F.col("s").cast("timestamp_ntz").alias("ts")

@@ -11,7 +11,7 @@ from flink_streaming_twitter_spark.functions.hashing import (
     MERSENNE_31,
     md5_int31,
     md5_int60,
-    minhash_params_sql,
+    minhash_params,
 )
 from flink_streaming_twitter_spark.operators.topk import per_window_top1, top_k
 
@@ -42,7 +42,7 @@ def test_md5_int_matches_python_derivation(spark):
 
 
 def test_minhash_params_are_stable_and_bounded():
-    p16 = minhash_params_sql(16)
-    assert len(p16) == 16 and p16 == minhash_params_sql(16)
+    p16 = minhash_params(16)
+    assert len(p16) == 16 and p16 == minhash_params(16)
     for a, b in p16:
         assert 1 <= a < MERSENNE_31 and 0 <= b < MERSENNE_31

@@ -54,7 +54,24 @@ Spark parallelize and encode the scale knobs here so every entry point
   manager restarts under this one with its state and offsets: the
   manager changes how files are renamed, not what they hold.
   ``get_or_create`` sets it on a provided session too; it is a runtime
-  conf, read each time a query opens its checkpoint.
+  conf, read each time a query opens its checkpoint;
+- Spark's generated-code cache sized to the corpus job's working set
+  (``spark.sql.codegen.cache.maxEntries`` = ``CODEGEN_CACHE_ENTRIES``).
+  The cache maps generated Java source to its Janino-compiled class, and
+  Spark's default of 100 entries, split into four LRU segments of 25, is
+  smaller than the ~135 classes one ``corpus_prep_app.run`` executes
+  (about 170 with ``--char-tier``), so every warm run recompiled almost
+  all of them and each started cold in the JIT. 1000 holds five times
+  the largest working set measured. What it costs is memory: each
+  entry keeps its compiled class (bytecode in metaspace) alive until it
+  is evicted. It must stay bounded because the live queries generate a
+  few single-use classes on every trigger (watermark literals, Q-C's
+  ``current_timestamp()``), which an unbounded cache would hold for the
+  life of the JVM. It is a static SQL conf that ``CodeGenerator`` reads
+  once per JVM, at the first code generation, so it takes effect only
+  in a JVM that has generated no code yet; there is one cache per JVM,
+  so on a cluster each executor holds its own. ``get_or_create`` writes
+  it into a provided session's SQLConf, as it does the debugging conf.
 """
 
 from __future__ import annotations
@@ -67,6 +84,7 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 CHECKPOINT_FILE_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 )
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def build_session(
@@ -98,12 +116,15 @@ def build_session(
         # 24g mirrors a real cluster's per-executor sizing (~0.75g/core).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # testdata parquet stores TIMESTAMP(NANOS); Spark has no nanos
-        # timestamp — read as int64 nanos, converted in sources/files.py
+        # parquet written with TIMESTAMP(NANOS) loads as int64 nanos, which
+        # sources/files.py converts; without this Spark 4 refuses such
+        # files. No shipped table uses it: the testdata stores
+        # TIMESTAMP(MICROS, not UTC-adjusted), which loads as TIMESTAMP_NTZ
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -114,8 +135,10 @@ def get_or_create(spark: SparkSession | None = None) -> SparkSession:
     """Reuse an externally provided session (the driver passes one) but make
     sure the confs the engine's correctness depends on are applied,
     per-call DataFrame debugging is off (module docstring: effective only
-    if no wrapped call ran in this process before) and checkpoints use
-    the FileSystem-based file manager."""
+    if no wrapped call ran in this process before), checkpoints use
+    the FileSystem-based file manager and the codegen cache holds
+    ``CODEGEN_CACHE_ENTRIES`` classes (effective only if this JVM has
+    generated no code yet)."""
     if spark is None:
         return build_session()
     # Session timezone must be UTC for window-epoch arithmetic to match the
@@ -123,8 +146,8 @@ def get_or_create(spark: SparkSession | None = None) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
-    # a static conf: spark.conf.set refuses it (module docstring)
-    spark._jsparkSession.sessionState().conf().setConfString(
-        "spark.python.sql.dataFrameDebugging.enabled", "false"
-    )
+    # static confs: spark.conf.set refuses them (module docstring)
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    sql_conf.setConfString("spark.python.sql.dataFrameDebugging.enabled", "false")
+    sql_conf.setConfString("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     return spark

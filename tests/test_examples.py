@@ -66,8 +66,15 @@ def test_corpus_prep_app_end_to_end(spark, sf_dir):
         # rerun determinism: every decision is content/id-derived, so a
         # second run reproduces the corpus row-for-row
         out2 = tempfile.mkdtemp(prefix="corpus_smoke2_")
+        compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
         try:
+            before = compiles.getCount()
             run(spark, sf_dir, out2, cap_k=cap_k, show=False)
+            # the second run reuses the first run's generated classes
+            # (session.CODEGEN_CACHE_ENTRIES); with Spark's default cache
+            # it recompiles 54-59. The bound leaves room for the few
+            # classes an AQE re-plan may generate differently
+            assert compiles.getCount() - before < 10
             again = spark.read.parquet(f"{out2}/corpus")
             assert corpus.exceptAll(again).count() == 0
             assert again.exceptAll(corpus).count() == 0

@@ -64,3 +64,24 @@ def test_checkpoints_use_the_filesystem_based_file_manager(spark, tmp_path):
         assert _checkpoint_file_manager(spark, tmp_path) == CHECKPOINT_FILE_MANAGER
     finally:
         spark.conf.set(key, CHECKPOINT_FILE_MANAGER)
+
+
+def test_codegen_cache_holds_the_corpus_jobs_working_set(spark):
+    """Spark's default cache of 100 generated classes is smaller than the
+    ~135 one corpus_prep_app.run executes, so every warm run recompiled
+    almost all of them; build_session and get_or_create both size it to
+    CODEGEN_CACHE_ENTRIES."""
+    from flink_streaming_twitter_spark.session import CODEGEN_CACHE_ENTRIES, get_or_create
+
+    key = "spark.sql.codegen.cache.maxEntries"
+    # build_session (the suite's session)
+    assert spark.conf.get(key) == str(CODEGEN_CACHE_ENTRIES)
+    # a provided session with the conf at Spark's default; a static conf,
+    # so spark.conf.set refuses it and the SQLConf is written directly
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    sql_conf.setConfString(key, "100")
+    try:
+        assert spark.conf.get(key) == "100"
+        assert get_or_create(spark).conf.get(key) == str(CODEGEN_CACHE_ENTRIES)
+    finally:
+        sql_conf.setConfString(key, str(CODEGEN_CACHE_ENTRIES))
